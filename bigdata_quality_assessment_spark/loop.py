@@ -15,7 +15,7 @@ Spark execution model: the loop is driver-side control flow; all the
 heavy lifting (scoring the full pool, KDE, selection) is lazy
 DataFrame work.
 
-  * ``cache()`` the per-iteration scored pool — it feeds metrics AND
+  * checkpoint the per-iteration scored pool — it feeds metrics AND
     three explorers, so without it each explorer would rescore from
     scratch (Catalyst does not CSE across actions).
   * The TRAINING SET lives on the driver. It is ≤ a few hundred rows
@@ -31,12 +31,14 @@ DataFrame work.
     Per-iteration pool copies would be O(n·iters) cluster work for
     frames nothing consumes.
 
-Per iteration exactly two Spark jobs touch the cluster: one fused
-score+metrics+KDE/log-pdf-error pass (the two 1-row metric frames are
-crossJoined so a single action materializes the cached scored pool and
-both reductions), and the one-collect explorer top-k. The pool never leaves the cluster; only argmax rows
-(n_explorers per iteration), scalar metrics, and model parameters
-cross the boundary.
+Per iteration four Spark jobs touch the cluster (measured on
+``local[4]`` with AQE on, pinned in tests/test_loop.py): the eager
+scored-pool checkpoint, the KDE binning collect (its map stage + the
+result, A1–A3/A12 sums riding along) and the one-collect explorer
+top-k. The KDE convolution, A13 and the metric divisions finish on
+the driver over ≤ 3·ngrid binned floats. The pool never leaves the
+cluster; only binned grids, argmax rows (n_explorers per iteration)
+and model parameters cross the boundary.
 """
 
 from __future__ import annotations
@@ -47,23 +49,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.density import (
-    histogram,
     interp_uniform_grid,
     kde_1d,
-    kde_1d_multi,
-    log_pdf_error,
+    kde_1d_multi_local,
+    log_pdf_error_local,
 )
 from .operators.models import predict_ensemble_stats
 from .operators.score import (
     acquisition_us,
     acquisition_us_lgw,
     acquisition_us_lw,
-    ensemble_stats,
     inverse_density_weights,
-    regression_metrics,
+    regression_terms,
 )
 from .operators.select import (
-    argmax,
     middle_match,
     pool_remove,
     train_append,
@@ -89,10 +88,16 @@ def initial_selection(
 ) -> DataFrame:
     """:50-72 — inverse-density initial subset: KDE of y → interp pdf
     at each y → weights ∝ 1/pdf → n_init draws with replacement →
-    middle-match back to full rows (one row per draw)."""
-    grid = kde_1d(points, y_col, bw=bw, ngrid=ngrid)
-    with_pdf = interp_uniform_grid(points, grid, q_col=y_col, out_col="__pdf")
-    weighted = inverse_density_weights(with_pdf, pdf_col="__pdf", weight_col="__w")
+    middle-match back to full rows (one row per draw).
+
+    The KDE is finished on the driver and interpolated as a literal
+    array; the weights stay unnormalized — the sampler's draw targets
+    are ``u·Σw``, so the normalizer's job would buy nothing."""
+    grids, _ = kde_1d_multi_local(points, [{"tag": "y", "col": y_col, "bw": bw}], ngrid=ngrid)
+    with_pdf = interp_uniform_grid(points, grids["y"], q_col=y_col, out_col="__pdf")
+    weighted = inverse_density_weights(
+        with_pdf, pdf_col="__pdf", weight_col="__w", normalize=False
+    )
     # rng="spark" pins the legacy draw stream: the m4_loop_metrics
     # goldens (queries._M4_GOLDEN_*) were generated against it across
     # five SF tiers (sf0.001..sf10), and the loop's draw frame is k
@@ -229,7 +234,11 @@ def active_sampling_loop(
     def _pad_bounds(mn, mx, pad: float = 0.01):
         """kde_1d_multi's internal bounds rule on driver floats — the
         same IEEE double ops the Catalyst expressions perform, so the
-        literal path is bit-identical to the aggregate path."""
+        literal path is bit-identical to the aggregate path. NULL
+        min/max means the series has no value (e.g. an empty pool):
+        it bins nothing, so any bounds give its empty grid."""
+        if mn is None:
+            return (0.0, 1.0)
         span = (mx - mn) if (mx - mn) > 0 else 1.0
         return (mn - pad * span, mx + pad * span)
 
@@ -289,52 +298,33 @@ def active_sampling_loop(
         # iteration (ref :201-205), and (for us_lw/us_lgw) the pool
         # density of the predicted means over the CURRENT candidates
         # (custom_KDE(mu(pts_temp)), core/likelihood.py:53-58). One
-        # fused tagged pass computes all three: one scan, one (tag,
-        # node) shuffle, one plan barrier (kde_1d_multi docstring) —
-        # and with the observed literal bounds, ZERO bounds aggregate.
-        if ob["jmn"] is None:
-            # degenerate empty scored pool: min/max observe NULL —
-            # fall back to the in-plan joint-range aggregate
-            # (NULL-propagating), exactly the pre-round-15 plan shape
-            # (round-16, ADVICE r15: _pad_bounds on None raised
-            # TypeError where the old aggregate degraded gracefully)
-            shared = {"range_cols": ["y_mean", y_col]}
-            specs = [
-                {"tag": "pred", "col": "y_mean", "bw": bw, **shared},
-                {"tag": "truth", "col": y_col, "bw": bw, **shared},
-            ]
-        else:
-            joint = _pad_bounds(ob["jmn"], ob["jmx"])
-            specs = [
-                {"tag": "pred", "col": "y_mean", "bw": bw, "bounds": joint},
-                {"tag": "truth", "col": y_col, "bw": bw, "bounds": joint},
-            ]
+        # fused tagged binning pass over the stored pool computes all
+        # three AND the A1-A3/A12 sums (``sums`` series of the same
+        # deterministic groupBy — an Observation would merge partial
+        # sums in task-completion order); the ≤ 3·ngrid binned rows are
+        # collected and convolved on the driver, so the grids below are
+        # plain floats: A13 is a numpy trapezoid and the us_lw/us_lgw
+        # interpolation reads the pool grid as a literal array.
+        joint = _pad_bounds(ob["jmn"], ob["jmx"])
+        specs = [
+            {"tag": "pred", "col": "y_mean", "bw": bw, "bounds": joint},
+            {"tag": "truth", "col": y_col, "bw": bw, "bounds": joint},
+        ]
         if need_pool:
-            if ob.get("pmn") is None:
-                # degenerate empty candidate pool: fall back to the
-                # in-plan bounds aggregate (NULL-propagating), exactly
-                # the pre-round-15 plan shape
-                specs.append(
-                    {"tag": "pool", "col": "y_mean", "bw": bw, "where": not_picked}
-                )
-            else:
-                specs.append(
-                    {
-                        "tag": "pool", "col": "y_mean", "bw": bw,
-                        "where": not_picked,
-                        "bounds": _pad_bounds(ob["pmn"], ob["pmx"]),
-                    }
-                )
-        grids = kde_1d_multi(scored, specs, ngrid=ngrid)
-        pred_grid, truth_grid = grids["pred"], grids["truth"]
-        pool_grid = grids.get("pool")
-
-        # A1-A3/A12 and A13 are 1-row reductions over ``scored``; the
-        # one-row metric frame crossJoins onto the explorer top-k union
-        # below so ONE collect per iteration delivers metrics AND picks.
-        metric_frame = regression_metrics(scored, "y_mean", y_col, "y_var").crossJoin(
-            log_pdf_error(pred_grid, truth_grid)
+            specs.append({
+                "tag": "pool", "col": "y_mean", "bw": bw, "where": not_picked,
+                "bounds": _pad_bounds(ob["pmn"], ob["pmx"]),
+            })
+        grids, totals = kde_1d_multi_local(
+            scored, specs, ngrid=ngrid,
+            sums=regression_terms("y_mean", y_col, "y_var"),
         )
+        # regression_metrics' avg() (Σ non-NULL / their count, NULL
+        # over none) and count()
+        m = {k: tot / n if n else None for k, (tot, n) in totals.items()}
+        m["n_rows"] = totals["n_rows"][1]
+        m["log_pdf_error"] = log_pdf_error_local(grids["pred"], grids["truth"])
+        pool_grid = grids.get("pool")
 
         candidates = (
             scored.filter(not_picked) if explorer_ids else scored
@@ -397,15 +387,7 @@ def active_sampling_loop(
         union = topk_frames[0]
         for f in topk_frames[1:]:
             union = union.unionByName(f)
-        # ONE job per iteration: the 1-row metric frame rides every
-        # explorer row (broadcast nested-loop), so this collect is the
-        # iteration's only action after the checkpoint.
-        rows = union.crossJoin(F.broadcast(metric_frame)).collect()
-        m = (
-            {c: rows[0][c] for c in metric_frame.columns}
-            if rows
-            else metric_frame.first().asDict()  # degenerate: empty candidate pool
-        )
+        rows = union.collect()
         m["iter"] = it
         m["train_rows"] = len(train_rows)
         metrics.append(m)

@@ -13,8 +13,10 @@ Scale notes:
     decomposition (linear binning + grid convolution,
     /root/reference/core/utils.py:105-120) re-expressed relationally —
     the O(data) term dominates at 100 TB and parallelizes linearly.
+    ``kde_1d_multi_local`` collects the binned grid instead and runs
+    the convolution on the driver (numpy) for driver-side consumers.
   * interpolation against a UNIFORM grid is an index computation +
-    broadcast hash equi-join — no range join, no sort, O(data).
+    array lookup — no range join, no sort, O(data).
   * trapz over a grid is a lag-window over ≤ngrid rows (tiny); the
     grouped variant partitions by series key for many-series use.
 """
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -377,16 +380,14 @@ def kde_1d_multi(
     """A11 (fused, N-way): any number of KDEs over the SAME frame in
     ONE data scan, ONE (tag, node) shuffle, and ONE plan barrier — the
     generalization of ``kde_1d_pair`` that also admits per-series row
-    predicates and per-series evaluation ranges. Built for the §3.1
-    loop, where one iteration needs THREE densities of the scored
-    pool: pred + truth on a shared joint-range grid (A13,
+    predicates and per-series evaluation ranges — e.g. the three
+    densities one §3.1 iteration needs: pred + truth on a shared
+    joint-range grid (A13,
     BigDataQualityAssessment_ActiveSampling.py:199-207) and the
     us_lw/us_lgw pool density of the predicted means over the current
     candidates (core/likelihood.py:53-58). Unfused that is 3 pool
-    passes and 3 barrier plan-compilations per iteration; fused it is
-    one of each — at 100 TB the scan fusion is the win, at bench SF
-    the ~1 s/plan physical-planning cost of each lazy-checkpoint
-    barrier is.
+    passes and 3 barrier plan-compilations; fused it is one of each.
+    ``kde_1d_multi_local`` is the driver-finished twin (same specs).
 
     ``specs``: ordered list of dicts with keys
       * ``tag`` (str, unique) — names the output grid;
@@ -420,19 +421,63 @@ def kde_1d_multi(
         in as literals (round-15): no bounds aggregate, and when every
         spec is literal-bounded with a float ``bw`` the broadcast
         cross-join disappears from the plan entirely — the barrier's
-        call-time work shrinks to the binning map stage alone. The
-        §3.1 loop feeds this from an ``Observation`` on the scored
-        pool's materialization job (min/max are order-independent, so
-        the observed bounds are bit-identical to the aggregate's).
+        call-time work shrinks to the binning map stage alone.
 
     All internal ranges fold into a single one-row aggregate over
     ``df``, so bounds derivation adds no extra pass. Returns
     ``{tag: density(node INT, grid_x DOUBLE, pdf DOUBLE)}``.
     """
     spark = df.sparkSession
+    # The ONE lazy barrier (see kde_1d_pair's): keeps the per-tag
+    # filters from pushing below the aggregate into N source scans,
+    # and is the only physical-plan compilation the whole N-density
+    # family pays.
+    binned = _kde_binned(df, specs, ngrid, pad).localCheckpoint(eager=False)
+
+    grid = spark.range(ngrid).select(F.col("id").cast("int").alias("eval_node"))
+    norm_const = 1.0 / (F.col("__bw") * math.sqrt(2.0 * math.pi))
+    kernel = F.exp(
+        -0.5
+        * F.pow((F.col("eval_node") - F.col("node")) * F.col("__dx") / F.col("__bw"), 2)
+    ) * norm_const
+
+    def _convolve(tag: str) -> DataFrame:
+        one = binned.filter(F.col("tag") == tag).drop("tag")
+        return (
+            grid.join(F.broadcast(one), F.lit(True))
+            .groupBy("eval_node")
+            .agg(
+                F.sum(kernel * F.col("w")).alias("kw_sum"),
+                F.sum("w").alias("w_tot"),
+                F.first("__lo").alias("__lo"),
+                F.first("__dx").alias("__dx"),
+            )
+            .select(
+                F.col("eval_node").alias("node"),
+                (F.col("__lo") + F.col("eval_node") * F.col("__dx")).alias("grid_x"),
+                (F.col("kw_sum") / F.col("w_tot")).alias("pdf"),
+            )
+        )
+
+    return {s["tag"]: _convolve(s["tag"]) for s in specs}
+
+
+def _kde_binned(
+    df: DataFrame,
+    specs: list[dict],
+    ngrid: int,
+    pad: float,
+    sums: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The linear-binning aggregate of ``kde_1d_multi`` (specs, bounds
+    and bandwidth rules as documented there): ``(tag, node, w, __lo,
+    __dx, __bw)``, ≤ ngrid rows per tag. Each ``sums`` entry adds a
+    two-node series — node 0 sums the column's non-NULL values, node 1
+    counts them."""
+    sums = sums or {}
     tags = [s["tag"] for s in specs]
-    if len(set(tags)) != len(tags):
-        raise ValueError(f"duplicate tags in specs: {tags}")
+    if len(set(tags) | set(sums)) != len(tags) + len(sums):
+        raise ValueError(f"duplicate tags in specs: {tags + list(sums)}")
 
     def _masked(s: dict, c: str) -> Column:
         w = s.get("where")
@@ -552,6 +597,13 @@ def kde_1d_multi(
             )
 
         arrays.append(F.array(_mk(node0, w0), _mk(node0 + 1, w1)))
+    none = F.lit(None).cast("double")
+    for t, v in sums.items():
+        arrays.append(F.array(*(
+            F.struct(F.lit(t).alias("tag"), F.lit(i).alias("node"), w.alias("w"),
+                     none.alias("lo"), none.alias("dx"), none.alias("kbw"))
+            for i, w in enumerate((v.cast("double"), F.when(v.isNotNull(), 1.0)))
+        )))
 
     contrib = (
         (df if b is None else df.crossJoin(F.broadcast(b)))
@@ -568,48 +620,66 @@ def kde_1d_multi(
             F.col("c.kbw").alias("__bw"),
         )
     )
-    # The ONE lazy barrier (see kde_1d_pair's): keeps the per-tag
-    # filters from pushing below the aggregate into N source scans,
-    # and is the only physical-plan compilation the whole N-density
-    # family pays.
-    binned = contrib.groupBy("tag", "node").agg(
+    return contrib.groupBy("tag", "node").agg(
         F.sum("w").alias("w"),
         F.first("__lo").alias("__lo"),
         F.first("__dx").alias("__dx"),
         F.first("__bw").alias("__bw"),
-    ).localCheckpoint(eager=False)
+    )
 
-    grid = spark.range(ngrid).select(F.col("id").cast("int").alias("eval_node"))
-    norm_const = 1.0 / (F.col("__bw") * math.sqrt(2.0 * math.pi))
-    kernel = F.exp(
-        -0.5
-        * F.pow((F.col("eval_node") - F.col("node")) * F.col("__dx") / F.col("__bw"), 2)
-    ) * norm_const
 
-    def _convolve(tag: str) -> DataFrame:
-        one = binned.filter(F.col("tag") == tag).drop("tag")
-        return (
-            grid.join(F.broadcast(one), F.lit(True))
-            .groupBy("eval_node")
-            .agg(
-                F.sum(kernel * F.col("w")).alias("kw_sum"),
-                F.sum("w").alias("w_tot"),
-                F.first("__lo").alias("__lo"),
-                F.first("__dx").alias("__dx"),
-            )
-            .select(
-                F.col("eval_node").alias("node"),
-                (F.col("__lo") + F.col("eval_node") * F.col("__dx")).alias("grid_x"),
-                (F.col("kw_sum") / F.col("w_tot")).alias("pdf"),
-            )
+def kde_1d_multi_local(
+    df: DataFrame,
+    specs: list[dict],
+    ngrid: int,
+    sums: dict[str, Column] | None = None,
+) -> tuple[dict[str, tuple[np.ndarray, np.ndarray]], dict[str, tuple[float | None, int]]]:
+    """``kde_1d_multi`` finished on the driver: the same binning
+    aggregate (same ``specs`` contract, bounds and bandwidth rules, at
+    ``kde_1d_multi``'s default ``pad``) is collected in ONE job — ≤
+    ``len(specs)·ngrid`` rows — and the Gaussian convolution runs in
+    numpy against the 2·ngrid−1 kernel offsets. For driver-side
+    consumers (the §3.1 loop): no grid barrier and no per-tag
+    convolution broadcast, and the grids go on as literals
+    (``interp_uniform_grid``, ``log_pdf_error_local``).
+
+    ``sums``: name → Column, each riding the same aggregate as an extra
+    series and returned as ``(Σ non-NULL values, their count)`` — the
+    parts of ``avg``, summed in the aggregate's deterministic order.
+
+    Returns ``({tag: (grid_x, pdf)}, {name: (total, count)})``. A
+    series that binned nothing gets two empty arrays (the SQL grid is
+    an empty frame), a sum over no values ``(None, 0)``.
+    """
+    by_tag: dict[str, dict] = {}
+    for r in _kde_binned(df, specs, ngrid, 0.01, sums).collect():
+        by_tag.setdefault(r["tag"], {})[r["node"]] = r
+    grids = {}
+    for s in specs:
+        rows = by_tag.get(s["tag"])
+        if not rows:
+            grids[s["tag"]] = (np.empty(0), np.empty(0))
+            continue
+        r0 = next(iter(rows.values()))
+        lo, dx, bw = r0["__lo"], r0["__dx"], r0["__bw"]
+        w = np.zeros(ngrid)
+        w[list(rows)] = [r["w"] for r in rows.values()]
+        # the SQL kernel's double ops, once per node offset
+        kern = np.exp(-0.5 * (np.arange(1 - ngrid, ngrid) * dx / bw) ** 2) * (
+            1.0 / (bw * math.sqrt(2.0 * math.pi))
         )
-
-    return {t: _convolve(t) for t in tags}
+        pdf = np.convolve(w, kern)[ngrid - 1 : 2 * ngrid - 1] / w.sum()
+        grids[s["tag"]] = (lo + np.arange(ngrid) * dx, pdf)
+    totals = {}
+    for t in sums or {}:
+        rows = by_tag.get(t)  # nodes 0 and 1 bin the same non-NULL rows
+        totals[t] = (rows[0]["w"], int(rows[1]["w"])) if rows else (None, 0)
+    return grids, totals
 
 
 def interp_uniform_grid(
     queries: DataFrame,
-    grid: DataFrame,
+    grid: DataFrame | tuple[np.ndarray, np.ndarray],
     q_col: str,
     grid_x_col: str = "grid_x",
     grid_f_col: str = "pdf",
@@ -618,14 +688,17 @@ def interp_uniform_grid(
     deriv_col: str | None = None,
 ) -> DataFrame:
     """J3 (fast path): ``np.interp`` against a UNIFORM grid — bracket
-    index is computed arithmetically, then two broadcast hash
-    equi-joins fetch the bracketing values. No range join, no sort;
-    O(data) and shuffle-free at any query count.
+    index is computed arithmetically, then the two bracketing values
+    are fetched from the grid's node-ordered value array. No join, no
+    range join, no sort; O(data) and shuffle-free at any query count.
 
     Out-of-range queries clamp to the boundary values, matching
     np.interp. The grid frame must carry an integer ``node`` column
     (0..g-1) and uniform ``grid_x`` spacing — exactly what ``kde_1d``
-    emits.
+    emits. ``grid`` may instead be a driver-side ``(grid_x, f)`` pair of
+    node-ordered arrays (``kde_1d_multi_local``'s output): the bounds
+    and value array then fold into the plan as literals — no aggregate,
+    no broadcast.
 
     ``deriv_col``: additionally emit the first derivative of the
     piecewise-linear interpolant — the segment slope ``(f1−f0)/dx`` —
@@ -649,28 +722,38 @@ def interp_uniform_grid(
     ``greatest(NULL, 0)`` selects 0 for the bracket index and 0.0 for
     the fraction); empty grids yield NULL out/deriv columns.
     """
-    g = grid.select(
-        F.col(node_col).alias("__n"),
-        F.col(grid_x_col).alias("__gx"),
-        F.col(grid_f_col).alias("__gf"),
-    )
-    packed = g.agg(
-        F.min("__gx").alias("__lo"),
-        F.max("__gx").alias("__hi"),
-        F.max("__n").alias("__nmax"),
-        # collect_list is order-nondeterministic; the struct sort
-        # re-establishes node order (nodes are distinct by contract)
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("__n", "__gf"))),
-            lambda s: s["__gf"],
-        ).alias("__farr"),
-    )
-    q = queries.crossJoin(F.broadcast(packed))
-    dx = (F.col("__hi") - F.col("__lo")) / F.col("__nmax")
-    pos = (F.col(q_col) - F.col("__lo")) / dx
-    idx = F.least(F.greatest(F.floor(pos), F.lit(0)), F.col("__nmax") - 1).cast("int")
-    f0 = F.get("__farr", idx)
-    f1 = F.get("__farr", idx + 1)
+    if isinstance(grid, DataFrame):
+        g = grid.select(
+            F.col(node_col).alias("__n"),
+            F.col(grid_x_col).alias("__gx"),
+            F.col(grid_f_col).alias("__gf"),
+        )
+        packed = g.agg(
+            F.min("__gx").alias("__lo"),
+            F.max("__gx").alias("__hi"),
+            F.max("__n").alias("__nmax"),
+            # collect_list is order-nondeterministic; the struct sort
+            # re-establishes node order (nodes are distinct by contract)
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("__n", "__gf"))),
+                lambda s: s["__gf"],
+            ).alias("__farr"),
+        )
+        q = queries.crossJoin(F.broadcast(packed))
+        lo, hi, nmax, farr = (F.col(c) for c in ("__lo", "__hi", "__nmax", "__farr"))
+    else:
+        gx, gf = grid
+        q, n = queries, len(gx)
+        # an empty grid leaves all three NULL, as the empty aggregate does
+        lo = F.lit(float(gx[0]) if n else None).cast("double")
+        hi = F.lit(float(gx[-1]) if n else None).cast("double")
+        nmax = F.lit(n - 1 if n else None).cast("int")
+        farr = F.lit(np.asarray(gf, dtype="float64"))
+    dx = (hi - lo) / nmax
+    pos = (F.col(q_col) - lo) / dx
+    idx = F.least(F.greatest(F.floor(pos), F.lit(0)), nmax - 1).cast("int")
+    f0 = F.get(farr, idx)
+    f1 = F.get(farr, idx + 1)
     frac_clamped = F.least(F.greatest(pos - idx, F.lit(0.0)), F.lit(1.0))
     val = f0 + (f1 - f0) * frac_clamped
     out = q.withColumn(out_col, val)
@@ -754,3 +837,27 @@ def log_pdf_error(
         .filter(~F.isnan("d") & F.col("d").isNotNull())
     )
     return trapz(diff, "x", "d").withColumnRenamed("integral", "log_pdf_error")
+
+
+def log_pdf_error_local(
+    grid_a: tuple[np.ndarray, np.ndarray],
+    grid_b: tuple[np.ndarray, np.ndarray],
+    floor: float = -6.0,
+) -> float | None:
+    """A13 on two driver grids over ONE shared axis (``kde_1d_multi_local``
+    output): ``log_pdf_error``'s clipped-log difference, NaN filter and
+    trapezoid in numpy. ``None`` where the SQL metric is NULL — fewer
+    than two grid points, or one series empty (its join is empty)."""
+    x, fa = grid_a
+    fb = grid_b[1]
+    if len(fa) != len(fb):
+        return None
+    d = np.abs(
+        np.maximum(np.log(np.maximum(fa, 1e-300)), floor)
+        - np.maximum(np.log(np.maximum(fb, 1e-300)), floor)
+    )
+    keep = ~np.isnan(d)
+    x, d = x[keep], d[keep]
+    if len(x) < 2:
+        return None
+    return float(np.sum(np.diff(x) * (d[1:] + d[:-1]) / 2.0))

@@ -67,15 +67,24 @@ def regression_metrics(
     """A1+A2+A3+A12 in one pass: MSE, MAE, mean ensemble variance,
     row count. One job, map-side combined, no shuffle beyond the final
     single-row reduce."""
+    terms = regression_terms(pred_col, truth_col, var_col)
+    return scored.agg(
+        *((F.count if k == "n_rows" else F.avg)(c).alias(k) for k, c in terms.items())
+    )
+
+
+def regression_terms(
+    pred_col: str = "y_mean",
+    truth_col: str = "y",
+    var_col: str | None = "y_var",
+) -> dict[str, Column]:
+    """The per-row terms of ``regression_metrics``: each metric is the
+    ``avg`` of its term, except ``n_rows``, the ``count`` of its."""
     err = F.col(pred_col) - F.col(truth_col)
-    aggs = [
-        F.avg(err * err).alias("mse"),
-        F.avg(F.abs(err)).alias("mae"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ]
+    terms = {"mse": err * err, "mae": F.abs(err), "n_rows": F.lit(1)}
     if var_col is not None:
-        aggs.append(F.avg(var_col).alias("mean_var"))
-    return scored.agg(*aggs)
+        terms["mean_var"] = F.col(var_col)
+    return terms
 
 
 def inverse_density_weights(

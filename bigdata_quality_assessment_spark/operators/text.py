@@ -1016,8 +1016,10 @@ def simhash_near_dedup(
 
     ``signatures``: optional precomputed ``simhash(docs, ...)`` frame —
     pass it when the caller ALSO consumes the signatures so the
-    shingling + 64-vote pass runs once, not once per consumer (put a
-    lazy ``localCheckpoint`` on it; this function adds one otherwise)."""
+    shingling + 64-vote pass runs once, not once per consumer (put an
+    EAGER ``localCheckpoint`` on it — the band self-join's two sides
+    race a lazy one into duplicate recompute, see below; this function
+    adds one otherwise)."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("4x16-bit banding is complete only for max_hamming <= 3")
     # EAGER barrier on the (id, simhash) frame — 16 bytes/doc. The a/b

@@ -434,6 +434,41 @@ def test_kde_multi_scott_counts_nulls_like_scott_bandwidth(spark):
     assert np.allclose([r["pdf"] for r in got], [r["pdf"] for r in ref], atol=1e-12)
 
 
+@pytest.mark.parametrize("ngrid", [16, 256])
+def test_kde_multi_local_matches_sql_finish(spark, vdf, values, ngrid):
+    """The driver finish (collected binning + numpy convolution) must
+    equal kde_1d_multi's SQL grids, and the numpy A13 the SQL one;
+    literal-grid interpolation must equal the DataFrame-grid path, and
+    a ``sums`` series must carry (Σ, count)."""
+    from bigdata_quality_assessment_spark.operators.density import (
+        kde_1d_multi,
+        kde_1d_multi_local,
+        log_pdf_error_local,
+    )
+
+    two = vdf.withColumn("z", F.col("y") * 0.5 + 1.0)
+    specs = [
+        {"tag": "pred", "col": "y", "bw": 0.4, "bounds": (-3.0, 6.0)},
+        {"tag": "truth", "col": "z", "bw": 0.4, "bounds": (-3.0, 6.0)},
+        {"tag": "pool", "col": "y", "bw": 0.3, "where": F.col("y") > 0.5,
+         "bounds": (0.5, 5.0)},
+    ]
+    sql = kde_1d_multi(two, specs, ngrid=ngrid)
+    local, totals = kde_1d_multi_local(two, specs, ngrid=ngrid, sums={"y": F.col("y")})
+    for tag, g in sql.items():
+        rows = g.orderBy("node").collect()
+        x, pdf = local[tag]
+        assert np.allclose(x, [r["grid_x"] for r in rows], rtol=1e-12, atol=0), tag
+        assert np.allclose(pdf, [r["pdf"] for r in rows], rtol=1e-12, atol=0), tag
+    want = log_pdf_error(sql["pred"], sql["truth"]).first()["log_pdf_error"]
+    assert log_pdf_error_local(local["pred"], local["truth"]) == pytest.approx(want, rel=1e-9)
+    a = interp_uniform_grid(vdf, sql["pool"], q_col="y", out_col="p").orderBy("y").collect()
+    b = interp_uniform_grid(vdf, local["pool"], q_col="y", out_col="p").orderBy("y").collect()
+    assert np.allclose([r["p"] for r in b], [r["p"] for r in a], rtol=1e-12, atol=1e-300)
+    assert totals["y"][1] == len(values)
+    assert totals["y"][0] == pytest.approx(values.sum(), rel=1e-12)
+
+
 def test_histogram_degenerate_and_empty_inputs(spark):
     """ANSI regression: all-equal values (width 0) expand the range by
     +-0.5 like np.histogram; an empty frame yields dense zero bins —

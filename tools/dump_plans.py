@@ -176,12 +176,17 @@ def main() -> None:
 
     def p_loop_iter0():
         """Iteration-0 shape of the active loop: the scored-pool pass
-        (pre-checkpoint) and the fused explorer union + metric frame."""
-        from bigdata_quality_assessment_spark.operators.density import kde_1d_multi
+        (pre-checkpoint), the KDE binning aggregate whose rows the
+        driver collects and convolves (A1-A3/A12 sums riding it), and
+        the explorer union, which reads the pool grid as a literal."""
+        from bigdata_quality_assessment_spark.operators.density import (
+            _kde_binned,
+            kde_1d_multi_local,
+        )
         from bigdata_quality_assessment_spark.operators.score import (
             acquisition_us,
+            regression_terms,
         )
-        from bigdata_quality_assessment_spark.operators.density import log_pdf_error
         from bigdata_quality_assessment_spark.operators.models import fit_poly_member
         from bigdata_quality_assessment_spark.sources.generators import grid_points_2d
 
@@ -196,8 +201,8 @@ def main() -> None:
             pts, thetas, ["x1", "x2"], carry_cols=["x1", "x2", "y"]
         ).withColumn("se", (F.col("y_mean") - F.col("y")) * (F.col("y_mean") - F.col("y")))
         parts = {"loop_scored_pass": scored}
-        # mirror loop.py round-15: bounds observed on the scored job,
-        # entering the KDE as literals
+        # mirror loop.py: bounds observed on the scored job, entering
+        # the KDE as literals
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -220,10 +225,10 @@ def main() -> None:
             {"tag": "pool", "col": "y_mean", "bw": 0.1,
              "bounds": _pad(ob["pmn"], ob["pmx"])},
         ]
-        grids = kde_1d_multi(sc, specs, ngrid=256)
-        metric_frame = regression_metrics(sc, "y_mean", "y", "y_var").crossJoin(
-            log_pdf_error(grids["pred"], grids["truth"])
-        )
+        sums = regression_terms("y_mean", "y", "y_var")
+        # the aggregate kde_1d_multi_local collects
+        parts["loop_kde_binned"] = _kde_binned(sc, specs, 256, 0.01, sums)
+        grids, _ = kde_1d_multi_local(sc, specs, ngrid=256, sums=sums)
         keep = ["point_id", "x1", "x2", "y"]
         n_exp = 3
         f1 = (
@@ -241,8 +246,7 @@ def main() -> None:
             with_lw.orderBy(F.col("acq").desc(), F.col("point_id").asc()).limit(n_exp)
             .select(*keep, F.col("acq").alias("__score"), F.lit("us_lw").alias("__explorer"))
         )
-        union = f1.unionByName(f2).unionByName(f3)
-        parts["loop_explorer_union"] = union.crossJoin(F.broadcast(metric_frame))
+        parts["loop_explorer_union"] = f1.unionByName(f2).unionByName(f3)
         return parts
 
     def p_kde_nobarrier():
@@ -335,7 +339,11 @@ def main() -> None:
           derivation): a one-row bounds AGGREGATE over the pool +
           broadcast crossJoin under the binning Generate;
         * after — the observed-literal shape: no bounds aggregate, no
-          crossJoin; literal __lo/__dx/__bw inside the Generate."""
+          crossJoin; literal __lo/__dx/__bw inside the Generate.
+
+        The loop now collects this binning subtree through
+        kde_1d_multi_local instead (``loop_kde_binned`` of
+        active_loop_3iter); kde_1d_multi shares it."""
         import numpy as np
 
         from bigdata_quality_assessment_spark.operators.density import (
@@ -378,9 +386,8 @@ def main() -> None:
             {"tag": "pool", "col": "y_mean", "bw": 0.1,
              "bounds": _pad(ob["pmn"], ob["pmx"])},
         ]
-        # pre-round-15 shape: bounds derived IN PLAN (range_cols),
-        # exactly what loop.py still runs on the degenerate-pool
-        # fallback path
+        # pre-round-15 shape: bounds derived IN PLAN (range_cols), what
+        # kde_1d_multi runs for specs without literal bounds
         shared = {"range_cols": ["y_mean", "y"]}
         specs_before = [
             {"tag": "pred", "col": "y_mean", "bw": 0.1, **shared},
