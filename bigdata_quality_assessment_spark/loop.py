@@ -68,6 +68,7 @@ from .operators.select import (
     train_append,
     weighted_sample_with_replacement,
 )
+from .session import local_frame
 
 
 @dataclass
@@ -409,11 +410,11 @@ def active_sampling_loop(
 
         thetas = fit_members()
 
-    train = spark.createDataFrame(train_rows, points.select(*keep_cols).schema)
+    train = local_frame(spark, train_rows, points.select(*keep_cols).schema)
     pool = pool_remove(
         points,
-        spark.createDataFrame(
-            [(i,) for i in explorer_ids] or [(-1,)], f"{id_col} bigint"
+        local_frame(
+            spark, [(i,) for i in explorer_ids] or [(-1,)], f"{id_col} bigint"
         ),
         id_col=id_col,
     )

@@ -40,6 +40,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 @dataclass(frozen=True)
 class Expectation:
@@ -142,7 +144,7 @@ def _empty_report(spark, lead: str = "") -> DataFrame:
     schema = ("" if not lead else f"{lead}, ") + (
         "rule string, kind string, n_rows long, n_violations long, pass_rate double"
     )
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def check_expectations(df: DataFrame, rules: list[Expectation]) -> DataFrame:

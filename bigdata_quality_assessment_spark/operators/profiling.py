@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -190,8 +192,8 @@ def profile_correlations(
     ]
     pairs_ab = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1 :]]
     if not pairs_ab:
-        return df.sparkSession.createDataFrame(
-            [], "col_a string, col_b string, value double"
+        return local_frame(
+            df.sparkSession, [], "col_a string, col_b string, value double"
         )
     def _corr(a: str, b: str):
         # PAIRWISE-complete semantics (what corr means): every moment

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
+from ..session import local_frame
 from .partitioning import ensure_min_parallelism
 
 
@@ -3059,8 +3060,8 @@ def ivfpq_search(
             probe_pairs.append((r[0], int(cell)))
     spark = index.sparkSession
     q_id_type = dict(queries.dtypes)[query_id_col]
-    qe = spark.createDataFrame(
-        probe_pairs, f"{query_id_col} {q_id_type}, __cell int"
+    qe = local_frame(
+        spark, probe_pairs, f"{query_id_col} {q_id_type}, __cell int"
     )
     cells = sorted({c for _, c in probe_pairs})
     cands = (

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .partitioning import ensure_min_parallelism, id_ddl_type
 
 # A deliberately tiny multilingual stopword lexicon — enough for a
@@ -1825,7 +1826,7 @@ def bm25_search(
         id_type = dict(index.dtypes)[id_col]
         q_type = dict(q_src.dtypes)[query_id_col]
         empty = f"{query_id_col} {q_type}, {id_col} {id_type}, score double"
-        out = spark.createDataFrame([], empty)
+        out = local_frame(spark, [], empty)
         return out if top_k is None else out.withColumn(
             "rank", F.lit(1).cast("int")
         ).limit(0)

@@ -42,6 +42,7 @@ from bigdata_quality_assessment_spark.operators.text import (
     normalize_text,
     quality_score,
 )
+from bigdata_quality_assessment_spark.session import local_frame
 
 
 @dataclass
@@ -333,7 +334,7 @@ def curate(
         return cur, None
     spark = docs.sparkSession
     report_rows = [(name, df_.count()) for name, df_ in stages]
-    report = spark.createDataFrame(report_rows, "stage string, rows long")
+    report = local_frame(spark, report_rows, "stage string, rows long")
     return cur, report
 
 
@@ -627,10 +628,13 @@ def curate_audio(
     ``media`` via a column-pruned semi-join re-scan — the text
     pipeline's "stages communicate by id frames" doctrine. The report
     counts run on the id frames (same numbers). Two contract notes:
-    ids must be non-NULL (the lake key — the exact-dedup tier's
-    semi-join already pinned that), and ``media`` is re-scanned once
-    per downstream stage, so a caller whose ``media`` is an expensive
-    COMPUTED frame (not a lake scan) should checkpoint it first."""
+    ids must be non-NULL (the lake key: a semi-join never matches a
+    NULL id), so NULL-id rows are dropped once, up front, and the
+    report then carries a ``non_null_id`` row right after ``input``
+    (the row is absent when every id is set); and ``media`` is
+    re-scanned once per downstream stage, so a caller whose ``media``
+    is an expensive COMPUTED frame (not a lake scan) should checkpoint
+    it first."""
     cfg = config or AudioCurationConfig()
     stages: list[tuple[str, DataFrame]] = []
 
@@ -639,8 +643,7 @@ def curate_audio(
         stages.append((name, ids_))
         return media.join(ids_, cfg.id_col, "left_semi")
 
-    stages.append(("input", media.select(cfg.id_col)))
-    cur = media
+    cur = media.filter(F.col(cfg.id_col).isNotNull())
 
     if cfg.drop_undecodable or cfg.min_frames is not None or (
         cfg.max_silence_fraction is not None
@@ -725,7 +728,10 @@ def curate_audio(
 
     if not with_report:
         return cur, None
-    spark = media.sparkSession
-    report_rows = [(name, df_.count()) for name, df_ in stages]
-    report = spark.createDataFrame(report_rows, "stage string, rows long")
+    n_in, n_ids = media.agg(F.count(F.lit(1)), F.count(cfg.id_col)).first()
+    report_rows = [("input", n_in)]
+    if n_ids < n_in:
+        report_rows.append(("non_null_id", n_ids))
+    report_rows += [(name, df_.count()) for name, df_ in stages]
+    report = local_frame(media.sparkSession, report_rows, "stage string, rows long")
     return cur, report

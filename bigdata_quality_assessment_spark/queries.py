@@ -115,6 +115,7 @@ from bigdata_quality_assessment_spark.sources.generators import (
     stub_predictions,
     uniform_samples,
 )
+from bigdata_quality_assessment_spark.session import local_frame
 
 # --------------------------------------------------------------------
 # shared constants / helpers
@@ -1585,8 +1586,8 @@ def q_m4loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(("sde", int(m["iter"]), "mae", float(m["mae"])))
         rows.append(("sde", int(m["iter"]), "train_rows", float(m["train_rows"])))
 
-    out = spark.createDataFrame(
-        rows, "pipeline string, iter int, metric string, value double"
+    out = local_frame(
+        spark, rows, "pipeline string, iter int, metric string, value double"
     )
     return out.select(
         "pipeline",
@@ -5380,8 +5381,8 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_chunks=F.col("n_chunks").cast("long").alias("n_chunks"),
     )
 
-    imgs = spark.createDataFrame(
-        _phash_fixture_blobs(), "media_id long, content binary"
+    imgs = local_frame(
+        spark, _phash_fixture_blobs(), "media_id long, content binary"
     )
     ph = image_phash(imgs).localCheckpoint(eager=False)
     surv = near_dedup_images(imgs, max_hamming=3, hashes=ph).select(
@@ -5394,8 +5395,8 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
         survived=F.coalesce(F.col("__s"), F.lit(0)).cast("long").alias("survived"),
     )
 
-    auds = spark.createDataFrame(
-        _audio_fixture_blobs(), "media_id long, content binary"
+    auds = local_frame(
+        spark, _audio_fixture_blobs(), "media_id long, content binary"
     )
     aq = audio_quality(auds).localCheckpoint(eager=False)
     stack_expr = "stack({}, {}) as (metric, value)".format(
@@ -5420,8 +5421,8 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dedup_audio,
     )
 
-    clips = spark.createDataFrame(
-        _afp_fixture_blobs(), "media_id long, content binary"
+    clips = local_frame(
+        spark, _afp_fixture_blobs(), "media_id long, content binary"
     )
     fp = audio_fingerprint(clips).localCheckpoint(eager=False)
     asurv = near_dedup_audio(clips, max_hamming=3, fingerprints=fp).select(
@@ -5445,8 +5446,8 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dedup_videos,
     )
 
-    vids = spark.createDataFrame(
-        _vhash_fixture_blobs(), "media_id long, content binary"
+    vids = local_frame(
+        spark, _vhash_fixture_blobs(), "media_id long, content binary"
     )
     vfh = frame_phash(vids, n_frames=4).localCheckpoint(eager=False)
     vsurv = near_dedup_videos(
@@ -5475,8 +5476,8 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min_frame_frac=0.75 — see _vtrim_fixture_blobs for why 0.75)
     # collapses it; the oracle recomputes the best-offset decision
     # from the pinned frame hashes
-    vids2 = spark.createDataFrame(
-        _vtrim_fixture_blobs(), "media_id long, content binary"
+    vids2 = local_frame(
+        spark, _vtrim_fixture_blobs(), "media_id long, content binary"
     )
     vfh2 = frame_phash(vids2, n_frames=4).localCheckpoint(eager=False)
     vsurv2 = near_dedup_videos(
@@ -5511,8 +5512,8 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dedup_audio,
     )
 
-    aclips = spark.createDataFrame(
-        [(cid, bytearray(bl)) for cid, bl in _atrim_fixture_blobs()],
+    aclips = local_frame(
+        spark, [(cid, bytearray(bl)) for cid, bl in _atrim_fixture_blobs()],
         "media_id long, content binary",
     )
     asfp = audio_segment_fingerprints(aclips, seg_frames=2080).localCheckpoint(
@@ -6003,8 +6004,8 @@ def q_xdecode(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_media,
     )
 
-    media = spark.createDataFrame(
-        _decode_fixture_blobs(), "media_id long, content binary"
+    media = local_frame(
+        spark, _decode_fixture_blobs(), "media_id long, content binary"
     )
 
     def proj(df):
@@ -6033,8 +6034,8 @@ def q_xdecode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and every composed canvas re-decodes through the graded PNG
     # path — grading the whole decode→compose→PNG-re-encode loop
     # against hand-derived grayscale means (media_id 200+frame_id)
-    gif = spark.createDataFrame(
-        [(0, _animated_gif_blob())], "media_id long, content binary"
+    gif = local_frame(
+        spark, [(0, _animated_gif_blob())], "media_id long, content binary"
     )
     fr_dec = decode_media(
         frame_decode(gif, n_frames=3).select(
@@ -6044,8 +6045,8 @@ def q_xdecode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # round-11 APNG frames tier: same decode→compose→PNG-re-encode
     # loop for the second real animated format (media_id 300+frame_id)
-    apng = spark.createDataFrame(
-        [(0, _apng_blob())], "media_id long, content binary"
+    apng = local_frame(
+        spark, [(0, _apng_blob())], "media_id long, content binary"
     )
     ap_dec = decode_media(
         frame_decode(apng, n_frames=3).select(
@@ -6056,8 +6057,8 @@ def q_xdecode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-11 MJPEG frames tier: the AVI fixture walks the RIFF movi
     # chunks through the full baseline-JPEG decode and each frame
     # re-encodes/re-decodes through the graded PNG path (400+frame_id)
-    mj = spark.createDataFrame(
-        [(0, _mjpeg_avi_blob())], "media_id long, content binary"
+    mj = local_frame(
+        spark, [(0, _mjpeg_avi_blob())], "media_id long, content binary"
     )
     mj_dec = decode_media(
         frame_decode(mj, n_frames=3).select(
@@ -6067,8 +6068,8 @@ def q_xdecode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # round-11 raw-DIB AVI frames tier: strf-driven uncompressed DIB
     # rows through the same re-encode/re-decode loop (500+frame_id)
-    rw = spark.createDataFrame(
-        [(0, _rawavi_blob())], "media_id long, content binary"
+    rw = local_frame(
+        spark, [(0, _rawavi_blob())], "media_id long, content binary"
     )
     rw_dec = decode_media(
         frame_decode(rw, n_frames=3).select(

@@ -9,8 +9,13 @@ bit-stable against the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
+from typing import Any
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def resolved_extra_conf(extra_conf: dict[str, str] | None) -> dict[str, str]:
@@ -73,7 +78,14 @@ def build_session(
         # pinned explicitly (it is the default, but a regression here
         # re-pays the ~2-2.5 s/worker pandas-import cold start on EVERY
         # Arrow stage instead of once per executor — PLANS.md round-8
-        # measured 117.8 s executor-time cold vs 18.9 s warm)
+        # measured 117.8 s executor-time cold vs 18.9 s warm). Reuse is
+        # per worker POOL, and Spark keys pools on the runner's worker
+        # environment: the Arrow runners set SPARK_SIMPLIFIED_TRACEBACK,
+        # the plain PythonRunner behind a pickled-rows frame
+        # (createDataFrame(<python list>)) does not, so the first read of
+        # such a frame forks a second daemon plus one worker per core
+        # beside the Arrow pool. Build driver-side rows with
+        # ``local_frame`` instead: it touches no worker at all.
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
@@ -83,3 +95,36 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence[Any]],
+    schema: str | StructType,
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``
+    order) that Spark plans as a ``LocalTableScan``.
+
+    ``schema`` is a DDL string (``"id long, text string"``) or a
+    ``StructType``. The rows become one pyarrow Table that is shipped
+    to the JVM once, so reading the frame runs no Python worker.
+    ``spark.createDataFrame(<python list>, schema)`` instead goes
+    through ``sc.parallelize``: every read of it runs a pickling
+    ``PythonRunner`` job with one task per default-parallelism slot,
+    and its first read forks a second worker pool (see
+    ``spark.python.worker.reuse`` in ``build_session``). Measured on
+    PySpark 4.1.2, ``local[4]`` on a 4-core VM, a 64-row frame with
+    warm workers: 0.42 s wall and 1.6 CPU-s (JVM + Python processes)
+    per read that way, 0.02 s and 0.07 CPU-s from ``local_frame``. A pandas frame is not used because the pandas
+    Arrow path silently falls back to the pickled path when
+    ``spark.sql.execution.arrow.pyspark.fallback.enabled`` is on.
+
+    This is the library's only ``createDataFrame`` call site (pinned by
+    ``tests/test_session.py``)."""
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

@@ -27,6 +27,7 @@ from bigdata_quality_assessment_spark.functions.counter_rng import (
     counter_uniform,
     py_counter_gaussian,
 )
+from bigdata_quality_assessment_spark.session import local_frame
 
 
 def grid_points_2d(
@@ -89,8 +90,8 @@ def stub_predictions(
     if n_models > len(STUB_MODEL_PARAMS):
         raise ValueError(f"at most {len(STUB_MODEL_PARAMS)} stub models available")
     spark = points.sparkSession
-    models = spark.createDataFrame(
-        [(k, *STUB_MODEL_PARAMS[k]) for k in range(n_models)],
+    models = local_frame(
+        spark, [(k, *STUB_MODEL_PARAMS[k]) for k in range(n_models)],
         "model_id INT, a DOUBLE, b DOUBLE, c DOUBLE",
     )
     return (

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.text import LANG_LEXICONS
+from ..session import local_frame
 
 _LANGS = tuple(sorted(LANG_LEXICONS))  # de, en, es, fr
 _LANG_P = {"en": 0.50, "de": 0.20, "fr": 0.15, "es": 0.15}
@@ -107,7 +108,7 @@ def eval_spans(
         (i, " ".join(_eval_span_tokens(i, seed, vocab, cdf)))
         for i in range(n_spans)
     ]
-    return spark.createDataFrame(rows, "eval_id long, text string")
+    return local_frame(spark, rows, "eval_id long, text string")
 
 
 def realistic_documents(

@@ -65,6 +65,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_quality_assessment_spark.session import local_frame
+
 _META = "embedding_store_meta.json"
 
 
@@ -96,11 +98,11 @@ def init_embedding_store(
             },
             fh,
         )
-    spark.createDataFrame(
-        [], "vec_id long, embedding array<float>"
+    local_frame(
+        spark, [], "vec_id long, embedding array<float>"
     ).write.mode("overwrite").parquet(os.path.join(root, "corpus"))
-    spark.createDataFrame(
-        [], "__t int, __b long, vec_id long"
+    local_frame(
+        spark, [], "__t int, __b long, vec_id long"
     ).write.mode("overwrite").parquet(os.path.join(root, "buckets"))
 
 
@@ -379,7 +381,7 @@ def forget_embeddings(spark: SparkSession, root: str, vec_ids) -> int:
     for pth in (corpus_path, buckets_path):
         recover_and_clean(pth)
     ids = [(int(i),) for i in vec_ids]
-    id_df = spark.createDataFrame(ids, "vec_id long")
+    id_df = local_frame(spark, ids, "vec_id long")
     corpus = spark.read.parquet(corpus_path)
     n_before = corpus.count()
     swap(corpus.join(F.broadcast(id_df), "vec_id", "left_anti"), corpus_path)

@@ -56,6 +56,7 @@ from bigdata_quality_assessment_spark.operators.text import (
     minhash_signatures,
     normalize_text,
 )
+from bigdata_quality_assessment_spark.session import local_frame
 
 
 def init_ingest_store(
@@ -71,17 +72,17 @@ def init_ingest_store(
     orderable id, but a persistent store needs one concrete schema) —
     map string ids to longs before streaming ingest."""
     os.makedirs(root, exist_ok=True)
-    spark.createDataFrame([], "digest string").write.mode("overwrite").parquet(
+    local_frame(spark, [], "digest string").write.mode("overwrite").parquet(
         os.path.join(root, "digests")
     )
-    spark.createDataFrame(
-        [], "band int, bucket long, doc_id long"
+    local_frame(
+        spark, [], "band int, bucket long, doc_id long"
     ).write.mode("overwrite").parquet(os.path.join(root, "buckets"))
-    spark.createDataFrame([], "__key long, doc_id long").write.mode(
+    local_frame(spark, [], "__key long, doc_id long").write.mode(
         "overwrite"
     ).parquet(os.path.join(root, "spans"))
     if corpus_schema is not None:
-        spark.createDataFrame([], corpus_schema).write.mode("overwrite").parquet(
+        local_frame(spark, [], corpus_schema).write.mode("overwrite").parquet(
             os.path.join(root, "corpus")
         )
 
@@ -440,7 +441,7 @@ def forget(
         shutil.rmtree(old, ignore_errors=True)
 
     ids = list(doc_ids)
-    id_df = spark.createDataFrame([(i,) for i in ids], f"{id_col} long")
+    id_df = local_frame(spark, [(i,) for i in ids], f"{id_col} long")
     corpus_path = os.path.join(root, "corpus")
     digests_path = os.path.join(root, "digests")
     buckets_path = os.path.join(root, "buckets")

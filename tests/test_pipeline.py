@@ -371,3 +371,57 @@ def test_dataset_card_sections_and_values(spark):
     renamed = docs.withColumnRenamed("doc_id", "id")
     card2 = {(r.section, r.metric) for r in dataset_card(renamed, id_col="id").collect()}
     assert ("volume_and_shape", "n_docs") in card2
+
+
+def test_curate_audio_counts_null_id_rows(spark):
+    """NULL-id clips cannot ride the id-set stage barriers (a semi-join
+    never matches NULL): curate_audio drops them once, up front, and
+    the report counts them as its ``non_null_id`` row -- for every
+    stage mix, including the near-dedup-only config where they used to
+    vanish without trace."""
+    from bigdata_quality_assessment_spark.pipeline import (
+        AudioCurationConfig,
+        curate_audio,
+    )
+    from bigdata_quality_assessment_spark.session import local_frame
+    from bigdata_quality_assessment_spark.sources.audiogen import square_wav
+
+    amps = [(i * 997) % 20000 + 100 for i in range(65)]
+    # b inverts every window-to-window energy step of a: far apart in
+    # fingerprint space, so near-dedup keeps both
+    a, b = square_wav(amps), square_wav([20200 - x for x in amps])
+    c = square_wav([(i * 613) % 20000 + 100 for i in range(65)])
+    media = local_frame(
+        spark,
+        [(1, a), (2, a), (3, b), (None, a), (None, c)],
+        "media_id long, content binary",
+    )
+    cases = [
+        (AudioCurationConfig(near_dedup=False), {1, 3}, [("exact_dedup", 2)]),
+        (
+            AudioCurationConfig(exact_dedup=False, trim_robust=False),
+            {1, 3},
+            [("near_dedup", 2)],
+        ),
+        (AudioCurationConfig(exact_dedup=False, near_dedup=False), {1, 2, 3}, []),
+    ]
+    for cfg, kept, tail in cases:
+        clean, report = curate_audio(media, cfg)
+        assert {r.media_id for r in clean.collect()} == kept
+        assert [tuple(r) for r in report.collect()] == [
+            ("input", 5),
+            ("non_null_id", 3),
+            *tail,
+        ]
+        unreported, none = curate_audio(media, cfg, with_report=False)
+        assert none is None
+        assert {r.media_id for r in unreported.collect()} == kept
+
+    # all ids set: no non_null_id row
+    _, report = curate_audio(
+        media.filter("media_id is not null"), AudioCurationConfig(near_dedup=False)
+    )
+    assert [tuple(r) for r in report.collect()] == [
+        ("input", 3),
+        ("exact_dedup", 2),
+    ]
