@@ -325,7 +325,14 @@ def near_dedup_audio(
     pairs on a plateau-shaped corpus). The split is pair-preserving —
     survivors are identical — it only spreads a hot key's candidate
     generation over ``ceil(n/max_bucket)`` reduce keys. ``None``
-    disables it (the exact round-15 plan)."""
+    disables it (the exact round-15 plan).
+
+    Call-time cost: the fingerprint frame (segment tier: the
+    frame-hash probe of :func:`..phash.near_dedup_videos`) is an eager
+    barrier, so a call runs a corpus-scale decode-and-fingerprint job
+    before any action on the result, and its checkpoint blocks stay in
+    the block store until driver GC lets Spark's ContextCleaner
+    release them."""
     from .text import simhash_near_dedup
 
     if seg_frames is not None:

@@ -235,7 +235,11 @@ def near_dedup_images(
     single-level ceiling: simhash_near_dedup docstring /
     BASELINE.md); ``"auto"`` (the round-14 default) counts the
     decodable-hash frame and engages it at ≥10⁶ images, so a direct
-    20M-image call gets the scale regime without caller knowledge."""
+    20M-image call gets the scale regime without caller knowledge.
+    Call-time cost: the decodable-hash frame is an eager barrier, so a
+    call runs a corpus-scale decode-and-hash job before any action on
+    the result, and its checkpoint blocks stay in the block store
+    until driver GC lets Spark's ContextCleaner release them."""
     from .text import simhash_near_dedup
 
     ph = hashes if hashes is not None else image_phash(
@@ -381,7 +385,13 @@ def near_dedup_videos(
     trips the engagement is warned loudly with the measured
     population. None (the default) skips probe and guard. The audio
     segment tier — where the hazard was measured — passes a default
-    through :func:`..audio.near_dedup_audio`."""
+    through :func:`..audio.near_dedup_audio`.
+
+    Call-time cost: the decodable frame-hash probe is an eager
+    barrier, so a call runs a corpus-scale decode-and-hash job before
+    any action on the result, and its checkpoint blocks stay in the
+    block store until driver GC lets Spark's ContextCleaner release
+    them."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("4x16-bit banding is complete only for max_hamming <= 3")
     if max_bucket is not None and max_bucket < 1:

@@ -814,7 +814,11 @@ def near_dedup_minhash(
     degenerate to one permutation). Its length overrides ``n_hashes``.
     Everything downstream (banding, candidate join, Jaccard verify,
     closure) is byte-identical code.
-    """
+
+    Call-time cost: the shingle-hash table is an eager barrier, so a
+    call runs a corpus-scale Spark job before any action on the
+    result, and its checkpoint blocks stay in the block store until
+    driver GC lets Spark's ContextCleaner release them."""
     from bigdata_quality_assessment_spark.operators.graph import duplicate_drop_ids
     # ONE shingling pass feeds everything. Signatures, set sizes, and
     # BOTH verify sides all need the per-doc distinct shingle hashes;
@@ -1020,7 +1024,12 @@ def simhash_near_dedup(
     shingling + 64-vote pass runs once, not once per consumer (put an
     EAGER ``localCheckpoint`` on it — the band self-join's two sides
     race a lazy one into duplicate recompute, see below; this function
-    adds one otherwise)."""
+    adds one otherwise).
+
+    Call-time cost: without ``signatures`` the signature frame is an
+    eager barrier, so a call runs a corpus-scale Spark job before any
+    action on the result, and its checkpoint blocks stay in the block
+    store until driver GC lets Spark's ContextCleaner release them."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("4x16-bit banding is complete only for max_hamming <= 3")
     # EAGER barrier on the (id, simhash) frame — 16 bytes/doc. The a/b
@@ -2243,44 +2252,36 @@ def compact_bm25_index_df(spark, path: str) -> int:
     count."""
     import json
     import os
-    import shutil
 
     from pyspark.sql import Observation
 
+    from ..sources.io import swap_dir
+
     df_path = os.path.join(path, "df")
-    tmp = df_path.rstrip("/") + ".__compact__"
-    old = df_path.rstrip("/") + ".__old__"
-    if not os.path.exists(df_path) and os.path.exists(old):
-        os.rename(old, df_path)  # recover a crashed prior swap
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    with open(os.path.join(path, "stats.json")) as fh:
-        committed = int(json.load(fh).get("n_batches", 0))
-    cur = spark.read.parquet(df_path).filter(F.col("__batch") < committed)
-    obs = Observation()
-    folded = (
-        cur.observe(obs, F.sum("df").alias("mass"))
-        .groupBy("term", "__bucket")
-        .agg(F.sum("df").alias("df"))
-        .filter(F.col("df") != 0)
-    )
-    folded.select(
-        "term", "df", "__bucket", F.lit(0).alias("__batch")
-    ).write.mode("overwrite").partitionBy("__batch", "__bucket").parquet(tmp)
-    mass = obs.get["mass"]
-    back = spark.read.parquet(tmp)
-    back_mass = back.agg(F.sum("df")).first()[0]
-    n = back.count()
-    # dropped zero-sum terms carry no mass, so the checksum is exact
-    if (back_mass or 0) != (mass or 0):
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"df compaction mass mismatch: {mass} -> {back_mass}; "
-            "original kept"
+    with swap_dir(df_path, ".__compact__") as tmp:
+        with open(os.path.join(path, "stats.json")) as fh:
+            committed = int(json.load(fh).get("n_batches", 0))
+        cur = spark.read.parquet(df_path).filter(F.col("__batch") < committed)
+        obs = Observation()
+        folded = (
+            cur.observe(obs, F.sum("df").alias("mass"))
+            .groupBy("term", "__bucket")
+            .agg(F.sum("df").alias("df"))
+            .filter(F.col("df") != 0)
         )
-    os.rename(df_path, old)
-    os.rename(tmp, df_path)
-    shutil.rmtree(old, ignore_errors=True)
+        folded.select(
+            "term", "df", "__bucket", F.lit(0).alias("__batch")
+        ).write.mode("overwrite").partitionBy("__batch", "__bucket").parquet(tmp)
+        mass = obs.get["mass"]
+        back = spark.read.parquet(tmp)
+        back_mass = back.agg(F.sum("df")).first()[0]
+        n = back.count()
+        # dropped zero-sum terms carry no mass, so the checksum is exact
+        if (back_mass or 0) != (mass or 0):
+            raise RuntimeError(
+                f"df compaction mass mismatch: {mass} -> {back_mass}; "
+                "original kept"
+            )
     return n
 
 
@@ -2305,6 +2306,8 @@ def compact_bm25_index(spark, path: str, id_col: str = "doc_id") -> dict:
 
     from pyspark.sql import Observation
 
+    from ..sources.io import swap_dir
+
     out = {"df_rows": compact_bm25_index_df(spark, path)}
     tomb_path = os.path.join(path, "tombstones")
     post_path = os.path.join(path, "postings")
@@ -2312,37 +2315,28 @@ def compact_bm25_index(spark, path: str, id_col: str = "doc_id") -> dict:
         out["postings_rows"] = spark.read.parquet(post_path).count()
         out["tombstones_dropped"] = 0
         return out
-    tmp = post_path.rstrip("/") + ".__compact__"
-    old = post_path.rstrip("/") + ".__old__"
-    if not os.path.exists(post_path) and os.path.exists(old):
-        os.rename(old, post_path)  # recover a crashed prior swap
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    stats_file = os.path.join(path, "stats.json")
-    with open(stats_file) as fh:
-        stats = json.load(fh)
-    committed = F.col("__batch") < int(stats.get("n_batches", 0))
-    postings = spark.read.parquet(post_path).filter(committed)
-    tombs = spark.read.parquet(tomb_path).filter(committed)
-    # corpus-shaped × corpus-shaped anti-join: unhinted, AQE decides
-    obs = Observation()
-    live = postings.join(tombs.select(id_col), id_col, "left_anti").observe(
-        obs, F.count(F.lit(1)).alias("rows")
-    )
-    live.drop("__batch").withColumn("__batch", F.lit(0)).write.mode(
-        "overwrite"
-    ).partitionBy("__batch", "__bucket").parquet(tmp)
-    want = obs.get["rows"]
-    got = spark.read.parquet(tmp).count()  # parquet-footer count
-    if got != want:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"postings compaction row mismatch: {want} -> {got}; "
-            "original kept"
+    with swap_dir(post_path, ".__compact__") as tmp:
+        stats_file = os.path.join(path, "stats.json")
+        with open(stats_file) as fh:
+            stats = json.load(fh)
+        committed = F.col("__batch") < int(stats.get("n_batches", 0))
+        postings = spark.read.parquet(post_path).filter(committed)
+        tombs = spark.read.parquet(tomb_path).filter(committed)
+        # corpus-shaped × corpus-shaped anti-join: unhinted, AQE decides
+        obs = Observation()
+        live = postings.join(tombs.select(id_col), id_col, "left_anti").observe(
+            obs, F.count(F.lit(1)).alias("rows")
         )
-    os.rename(post_path, old)
-    os.rename(tmp, post_path)
-    shutil.rmtree(old, ignore_errors=True)
+        live.drop("__batch").withColumn("__batch", F.lit(0)).write.mode(
+            "overwrite"
+        ).partitionBy("__batch", "__bucket").parquet(tmp)
+        want = obs.get["rows"]
+        got = spark.read.parquet(tmp).count()  # parquet-footer count
+        if got != want:
+            raise RuntimeError(
+                f"postings compaction row mismatch: {want} -> {got}; "
+                "original kept"
+            )
     n_tombs = tombs.count()
     shutil.rmtree(tomb_path)
     stats["n_tombstones"] = 0

@@ -206,25 +206,16 @@ def curate(
                 cur.join(fz, cfg.id_col, "left_anti"),
             )
 
-    if cfg.span_dedup:
+    def rewrite(name: str, df_: DataFrame, deduped: DataFrame) -> DataFrame:
         # text REWRITE, not a row filter: join the reassembled text
-        # back by id (exchange-free on a bucketed lake layout) and
-        # drop docs that were pure boilerplate. The span-key frame
-        # inside dedup_spans is barriered, so this adds one corpus
-        # tokenize + one slim-key shuffle regardless of references.
-        spd = dedup_spans(
-            cur,
-            cfg.span_tokens,
-            text_col=cfg.text_col,
-            id_col=cfg.id_col,
-        ).select(cfg.id_col, "text_deduped")
-        # token-less docs (text_deduped NULL) PASS THROUGH with their
+        # back by id (exchange-free on a bucketed lake layout).
+        # Token-less docs (text_deduped NULL) PASS THROUGH with their
         # original text — the quality/length rules own that case, same
         # convention as the perplexity filter; only docs whose every
         # span was boilerplate ('' after rewrite) are dropped
-        cur = stage(
-            "span_dedup",
-            cur.join(spd, cfg.id_col)
+        return stage(
+            name,
+            df_.join(deduped.select(cfg.id_col, "text_deduped"), cfg.id_col)
             .filter(
                 F.col("text_deduped").isNull() | (F.col("text_deduped") != "")
             )
@@ -233,6 +224,18 @@ def curate(
                 F.coalesce(F.col("text_deduped"), F.col(cfg.text_col)),
             )
             .drop("text_deduped"),
+        )
+
+    if cfg.span_dedup:
+        # the span-key frame inside dedup_spans is barriered, so this
+        # adds one corpus tokenize + one slim-key shuffle regardless
+        # of references
+        cur = rewrite(
+            "span_dedup",
+            cur,
+            dedup_spans(
+                cur, cfg.span_tokens, text_col=cfg.text_col, id_col=cfg.id_col
+            ),
         )
 
     if cfg.substr_dedup:
@@ -240,23 +243,12 @@ def curate(
             dedup_substrings,
         )
 
-        sub = dedup_substrings(
-            cur,
-            cfg.substr_min_tokens,
-            text_col=cfg.text_col,
-            id_col=cfg.id_col,
-        ).select(cfg.id_col, "text_deduped")
-        cur = stage(
+        cur = rewrite(
             "substr_dedup",
-            cur.join(sub, cfg.id_col)
-            .filter(
-                F.col("text_deduped").isNull() | (F.col("text_deduped") != "")
-            )
-            .withColumn(
-                cfg.text_col,
-                F.coalesce(F.col("text_deduped"), F.col(cfg.text_col)),
-            )
-            .drop("text_deduped"),
+            cur,
+            dedup_substrings(
+                cur, cfg.substr_min_tokens, text_col=cfg.text_col, id_col=cfg.id_col
+            ),
         )
 
     if cfg.max_ppl is not None:

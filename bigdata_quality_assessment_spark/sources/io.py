@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -196,6 +198,32 @@ def write_clustered(
     )
 
 
+@contextmanager
+def swap_dir(path: str, tmp_suffix: str) -> Iterator[str]:
+    """Crash-safe replacement of the directory ``path``: the body
+    writes the new contents into the yielded ``<path><tmp_suffix>``,
+    and a normal exit swaps it in by two renames through
+    ``<path>.__old__``. If the body raises, the temp directory is
+    removed and ``path`` is untouched. On entry, a prior swap that
+    crashed between its renames is recovered (the data left under
+    ``.__old__`` moves back) and stale temp / ``.__old__`` leftovers
+    are removed, so a rerun always starts from one intact ``path``."""
+    path = path.rstrip("/")
+    tmp, old = path + tmp_suffix, path + ".__old__"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    try:
+        yield tmp
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def compact_lake(
     spark: SparkSession,
     path: str,
@@ -225,26 +253,14 @@ def compact_lake(
 
     if format not in LAKE_FORMATS:
         raise ValueError(f"format must be one of {LAKE_FORMATS}, got {format!r}")
-    tmp_stale = path.rstrip("/") + ".__compact__"
-    old_stale = path.rstrip("/") + ".__old__"
-    if not os.path.exists(path) and os.path.exists(old_stale):
-        # prior run crashed mid-swap: the data lives under .__old__
-        os.rename(old_stale, path)
-    shutil.rmtree(tmp_stale, ignore_errors=True)
-    shutil.rmtree(old_stale, ignore_errors=True)
-    df = spark.read.format(format).load(path)
-    n = df.count()
-    n_files = max(1, math.ceil(n / target_records_per_file))
-    tmp = path.rstrip("/") + ".__compact__"
-    df.repartition(n_files).write.mode("overwrite").format(format).save(tmp)
-    back = spark.read.format(format).load(tmp).count()
-    if back != n:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(f"compaction row mismatch: {n} -> {back}; original kept")
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    with swap_dir(path, ".__compact__") as tmp:
+        df = spark.read.format(format).load(path)
+        n = df.count()
+        n_files = max(1, math.ceil(n / target_records_per_file))
+        df.repartition(n_files).write.mode("overwrite").format(format).save(tmp)
+        back = spark.read.format(format).load(tmp).count()
+        if back != n:
+            raise RuntimeError(f"compaction row mismatch: {n} -> {back}; original kept")
     return n_files
 
 

@@ -66,6 +66,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_quality_assessment_spark.session import local_frame
+from bigdata_quality_assessment_spark.sources.io import swap_dir
+from bigdata_quality_assessment_spark.streaming.sink import (
+    compact_stores,
+    earlier_arrival_pairs,
+    event_time_gate,
+    first_arrival_drops,
+    replay_safe_sink,
+)
 
 _META = "embedding_store_meta.json"
 
@@ -134,29 +142,6 @@ def _band_keys(df: DataFrame, meta: dict, id_col: str, vec_col: str) -> DataFram
     )
 
 
-def _read_watermark(root: str) -> float | None:
-    p = os.path.join(root, "watermark.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)["max_event_ts"]
-
-
-def _advance_watermark(root: str, new_max: float | None) -> None:
-    """Monotone max-event-time advance, atomic rename — idempotent
-    under batch replay (max is commutative), never moves backward."""
-    if new_max is None:
-        return
-    cur = _read_watermark(root)
-    if cur is not None and cur >= new_max:
-        return
-    p = os.path.join(root, "watermark.json")
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"max_event_ts": float(new_max)}, fh)
-    os.rename(tmp, p)
-
-
 def streaming_embedding_ingest(
     emb_stream: DataFrame,
     root: str,
@@ -192,27 +177,15 @@ def streaming_embedding_ingest(
     )
 
     meta = _load_meta(root)
-    marker_dir = (
-        os.path.join(checkpoint, "_ingest_commits") if checkpoint else None
-    )
+    key_cols = ["__t", "__b"]
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, str(batch_id)) if marker_dir else None
-        if marker and os.path.exists(marker):
-            return
         if not batch.take(1):
             return
         spark = batch.sparkSession
-        new_max = None
-        if event_time_col is not None:
-            ts_d = F.col(event_time_col).cast("double")
-            # watermark from PRIOR batches (Spark's trigger rule);
-            # every observed row advances it, late ones included
-            new_max = batch.agg(F.max(ts_d)).first()[0]
-            horizon = _read_watermark(root)
-            if horizon is not None:
-                batch = batch.filter(ts_d >= horizon - late_delay_s)
-            batch = batch.filter(ts_d.isNotNull())
+        batch, advance_watermark = event_time_gate(
+            batch, root, event_time_col, late_delay_s
+        )
         valid = batch.filter(
             F.col(id_col).isNotNull()
             & F.col(vec_col).isNotNull()
@@ -258,19 +231,7 @@ def streaming_embedding_ingest(
             eager=False
         )
         if verify_threshold is None:
-            hit_stored = (
-                bb.join(stored.select("__t", "__b").distinct(), ["__t", "__b"])
-                .select(id_col)
-                .distinct()
-            )
-            a = bb.select(F.col(id_col).alias("__ida"), "__t", "__b")
-            b = bb.select(F.col(id_col).alias("__idb"), "__t", "__b")
-            hit_earlier = (
-                a.join(b, ["__t", "__b"])
-                .filter(F.col("__ida") < F.col("__idb"))
-                .select(F.col("__idb").alias(id_col))
-                .distinct()
-            )
+            drops = first_arrival_drops(bb, stored, id_col, key_cols)
         else:
             corpus = spark.read.parquet(os.path.join(root, "corpus"))
             batch_vecs = cur.select(
@@ -280,10 +241,8 @@ def streaming_embedding_ingest(
             # just for those pairs, then exact cosine decides
             cand_s = (
                 bb.join(
-                    stored.select(
-                        "__t", "__b", F.col(id_col).alias("__ida")
-                    ),
-                    ["__t", "__b"],
+                    stored.select(*key_cols, F.col(id_col).alias("__ida")),
+                    key_cols,
                 )
                 .select(F.col(id_col).alias("__idb"), "__ida")
                 .distinct()
@@ -295,12 +254,8 @@ def streaming_embedding_ingest(
                     "__ida",
                 )
             )
-            a = bb.select(F.col(id_col).alias("__ida"), "__t", "__b")
-            b = bb.select(F.col(id_col).alias("__idb"), "__t", "__b")
             cand_e = (
-                a.join(b, ["__t", "__b"])
-                .filter(F.col("__ida") < F.col("__idb"))
-                .select("__idb", "__ida")
+                earlier_arrival_pairs(bb, id_col, key_cols)
                 .distinct()
                 .join(
                     cur.select(
@@ -321,8 +276,7 @@ def streaming_embedding_ingest(
                     .distinct()
                 )
 
-            hit_stored = _hits(cand_s)
-            hit_earlier = _hits(cand_e)
+            drops = _hits(cand_s).unionByName(_hits(cand_e)).distinct()
         # NOTE on verify-tier causality: within-batch drops check
         # earlier ARRIVALS (lower id), matching the text tier — an
         # earlier row dropped as a near-dup of the store can still
@@ -330,7 +284,6 @@ def streaming_embedding_ingest(
         # path compares against the earlier row's actual vector, the
         # same answer a one-row-per-batch replay would give whenever
         # near-duplication is transitive at the threshold.
-        drops = hit_stored.unionByName(hit_earlier).distinct()
         survivors = cur.join(
             F.broadcast(drops), id_col, "left_anti"
         ).localCheckpoint(eager=True)
@@ -340,16 +293,9 @@ def streaming_embedding_ingest(
         bb.join(survivors.select(id_col), id_col, "left_semi").select(
             "__t", "__b", id_col
         ).write.mode("append").parquet(os.path.join(root, "buckets"))
-        _advance_watermark(root, new_max)
-        if marker:
-            os.makedirs(marker_dir, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write("done")
+        advance_watermark()
 
-    w = emb_stream.writeStream.foreachBatch(fold).trigger(availableNow=True)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return replay_safe_sink(emb_stream, fold, checkpoint, "_ingest_commits")
 
 
 def forget_embeddings(spark: SparkSession, root: str, vec_ids) -> int:
@@ -359,40 +305,19 @@ def forget_embeddings(spark: SparkSession, root: str, vec_ids) -> int:
     from the corpus — never diffed), with the text tier's crash-safe
     swap discipline (corpus first; re-running completes a crashed
     cleanup). Returns corpus rows removed."""
-    import shutil
-
-    def recover_and_clean(path: str) -> None:
-        tmp, old = path + ".__forget__", path + ".__old__"
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-
-    def swap(df: DataFrame, path: str) -> None:
-        tmp, old = path + ".__forget__", path + ".__old__"
-        df.write.mode("overwrite").parquet(tmp)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-
     meta = _load_meta(root)
     corpus_path = os.path.join(root, "corpus")
-    buckets_path = os.path.join(root, "buckets")
-    for pth in (corpus_path, buckets_path):
-        recover_and_clean(pth)
-    ids = [(int(i),) for i in vec_ids]
-    id_df = local_frame(spark, ids, "vec_id long")
-    corpus = spark.read.parquet(corpus_path)
-    n_before = corpus.count()
-    swap(corpus.join(F.broadcast(id_df), "vec_id", "left_anti"), corpus_path)
+    id_df = local_frame(spark, [(int(i),) for i in vec_ids], "vec_id long")
+    with swap_dir(corpus_path, ".__forget__") as tmp:
+        corpus = spark.read.parquet(corpus_path)
+        n_before = corpus.count()
+        corpus.join(F.broadcast(id_df), "vec_id", "left_anti").write.parquet(tmp)
     survivors = spark.read.parquet(corpus_path)
     n_after = survivors.count()
-    swap(
+    with swap_dir(os.path.join(root, "buckets"), ".__forget__") as tmp:
         _band_keys(survivors, meta, "vec_id", "embedding").select(
             "__t", "__b", "vec_id"
-        ),
-        buckets_path,
-    )
+        ).write.parquet(tmp)
     return n_before - n_after
 
 
@@ -402,13 +327,4 @@ def compact_embedding_state(
     """Small-file maintenance (one appended file per store per batch
     decays every per-batch state read) — same contract as the text
     tier's :func:`.ingest.compact_ingest_state`."""
-    from bigdata_quality_assessment_spark.sources.io import compact_lake
-
-    out: dict[str, int] = {}
-    for name in ("corpus", "buckets"):
-        p = os.path.join(root, name)
-        if os.path.exists(p):
-            out[name] = compact_lake(
-                spark, p, target_records_per_file=target_records_per_file
-            )
-    return out
+    return compact_stores(spark, root, ("corpus", "buckets"), target_records_per_file)

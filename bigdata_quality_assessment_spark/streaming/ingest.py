@@ -57,6 +57,13 @@ from bigdata_quality_assessment_spark.operators.text import (
     normalize_text,
 )
 from bigdata_quality_assessment_spark.session import local_frame
+from bigdata_quality_assessment_spark.sources.io import swap_dir
+from bigdata_quality_assessment_spark.streaming.sink import (
+    compact_stores,
+    event_time_gate,
+    first_arrival_drops,
+    replay_safe_sink,
+)
 
 
 def init_ingest_store(
@@ -70,7 +77,9 @@ def init_ingest_store(
     Id-type contract: the STATE stores pin ``doc_id long`` (the batch
     dedup operators order by an (id, position) struct and accept any
     orderable id, but a persistent store needs one concrete schema) —
-    map string ids to longs before streaming ingest."""
+    map string ids to longs before streaming ingest. Rows with a NULL
+    id are dropped on arrival, like rows with NULL or empty text:
+    first-id-wins cannot place them."""
     os.makedirs(root, exist_ok=True)
     local_frame(spark, [], "digest string").write.mode("overwrite").parquet(
         os.path.join(root, "digests")
@@ -148,16 +157,13 @@ def streaming_ingest_curated(
     the accepted corpus equals pre-filtering the late rows and running
     the same fold without event time (pytest-pinned).
 
-    Replay idempotence: foreachBatch REDELIVERS the in-flight batch
-    after a restart; a per-batch commit marker makes the re-run a
-    no-op instead of appending duplicates. Batch ids are only
-    meaningful RELATIVE TO A CHECKPOINT (a fresh checkpoint restarts
-    at 0), so markers live UNDER the checkpoint directory and reset
-    with it — store-rooted markers would silently swallow the first
-    batches of any re-checkpointed run. Without a checkpoint there
-    are no replays and no markers. (A crash inside the append window
-    can still duplicate — full exactly-once needs a transactional
-    table format; the marker closes the common restart case.)
+    Replay idempotence: commit markers under
+    ``<checkpoint>/_ingest_commits`` make a redelivered batch a no-op
+    (:func:`.sink.replay_safe_sink`; store-rooted markers would
+    silently swallow the first batches of any re-checkpointed run).
+    A crash inside the append window can still duplicate — full
+    exactly-once needs a transactional table format; the marker closes
+    the common restart case.
 
     ``span_dedup`` adds the sub-document tier: each accepted batch's
     documents are rewritten with any 5-word span already present in
@@ -174,9 +180,6 @@ def streaming_ingest_curated(
     the rewritten text, matching what a ``forget()`` rebuild would
     derive from the stored corpus. The pre-rewrite minhash screen is
     the arrival filter only; it is not persisted."""
-    marker_dir = (
-        os.path.join(checkpoint, "_ingest_commits") if checkpoint else None
-    )
     if span_dedup:
         # self-describing span state: forget() must rebuild with the
         # SAME window width or every stored key silently stops matching
@@ -186,63 +189,45 @@ def streaming_ingest_curated(
             json.dump({"span_tokens": int(span_tokens)}, fh)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, str(batch_id)) if marker_dir else None
-        if marker and os.path.exists(marker):
-            return
         if not batch.take(1):
             return
         spark = batch.sparkSession
-        new_max = None
-        if event_time_col is not None:
-            from bigdata_quality_assessment_spark.streaming.embedding_ingest import (
-                _read_watermark,
-            )
-
-            ts_d = F.col(event_time_col).cast("double")
-            # watermark from PRIOR batches (Spark's trigger rule);
-            # every observed row advances it, late ones included
-            new_max = batch.agg(F.max(ts_d)).first()[0]
-            horizon = _read_watermark(root)
-            if horizon is not None:
-                batch = batch.filter(ts_d >= horizon - late_delay_s)
-            batch = batch.filter(ts_d.isNotNull())
+        batch, advance_watermark = event_time_gate(
+            batch, root, event_time_col, late_delay_s
+        )
         # null/empty text cannot be deduplicated (md5(NULL) is NULL and
         # a NULL key never matches the digest anti-join, so such rows
-        # would re-append every batch) — route them out up front
+        # would re-append every batch), and a NULL id never matches the
+        # first-id semi-join below, so its doc would vanish unseen —
+        # route both out up front
         cur = batch.filter(
-            F.col(text_col).isNotNull() & (F.length(text_col) > 0)
+            F.col(id_col).isNotNull()
+            & F.col(text_col).isNotNull()
+            & (F.length(text_col) > 0)
         )
         if normalize:
             cur = cur.withColumn(text_col, normalize_text(text_col))
-        # within-batch exact dedup, first (lowest-id) occurrence wins
-        w_digest = F.md5(F.col(text_col)).alias("digest")
-        slim = cur.select(F.col(id_col), w_digest).localCheckpoint(eager=False)
-        firsts = slim.groupBy("digest").agg(F.min(id_col).alias(id_col))
-        cur = cur.join(firsts, id_col, "left_semi")
-        # exact check vs accepted digests
         digests = spark.read.parquet(os.path.join(root, "digests"))
-        cur = (
-            cur.withColumn("digest", F.md5(F.col(text_col)))
-            .join(digests, "digest", "left_anti")
-        )
+        w_digest = F.md5(F.col(text_col)).alias("digest")
+
+        def exact_screen(df: DataFrame, slim: DataFrame) -> DataFrame:
+            # the first (lowest-id) occurrence of each digest in
+            # ``slim`` (df's (id, digest) rows) wins within the batch,
+            # then the digest store wins over the batch
+            firsts = slim.groupBy("digest").agg(F.min(id_col).alias(id_col))
+            return (
+                df.join(firsts, id_col, "left_semi")
+                .withColumn("digest", F.md5(F.col(text_col)))
+                .join(digests, "digest", "left_anti")
+            )
+
+        slim = cur.select(F.col(id_col), w_digest).localCheckpoint(eager=False)
+        cur = exact_screen(cur, slim)
         # near-dup check vs accepted band buckets + earlier-in-batch
         sigs = minhash_signatures(cur, text_col, k=k, id_col=id_col)
         bb = minhash_band_keys(sigs, bands, id_col).localCheckpoint(eager=False)
         stored = spark.read.parquet(os.path.join(root, "buckets"))
-        hit_stored = (
-            bb.join(stored.select("band", "bucket").distinct(), ["band", "bucket"])
-            .select(id_col)
-            .distinct()
-        )
-        a = bb.select(F.col(id_col).alias("__ida"), "band", "bucket")
-        b = bb.select(F.col(id_col).alias("__idb"), "band", "bucket")
-        hit_earlier = (
-            a.join(b, ["band", "bucket"])
-            .filter(F.col("__ida") < F.col("__idb"))
-            .select(F.col("__idb").alias(id_col))
-            .distinct()
-        )
-        drops = hit_stored.unionByName(hit_earlier).distinct()
+        drops = first_arrival_drops(bb, stored, id_col, ["band", "bucket"])
         survivors = cur.join(F.broadcast(drops), id_col, "left_anti").localCheckpoint(
             eager=True
         )
@@ -301,24 +286,16 @@ def streaming_ingest_curated(
                     text_col, F.coalesce(F.col("__newtext"), F.col(text_col))
                 )
                 .drop("__newtext")
-                # digests must describe the STORED (rewritten) text
-                .withColumn("digest", F.md5(F.col(text_col)))
                 .localCheckpoint(eager=True)
             )
             # post-rewrite exact re-screen: span excision can collapse
             # two batch docs onto the same text, or collapse a doc
             # onto text already stored — the pre-rewrite digest screen
-            # cannot see either. First (lowest-id) occurrence wins
-            # within the batch, then the digest store wins over the
-            # batch — same precedence as the pre-rewrite tier.
-            firsts2 = survivors.groupBy("digest").agg(
-                F.min(id_col).alias(id_col)
-            )
-            survivors = (
-                survivors.join(firsts2.select(id_col), id_col, "left_semi")
-                .join(digests, "digest", "left_anti")
-                .localCheckpoint(eager=True)
-            )
+            # cannot see either. Digests now describe the STORED
+            # (rewritten) text.
+            survivors = exact_screen(
+                survivors, survivors.select(F.col(id_col), w_digest)
+            ).localCheckpoint(eager=True)
             # state symmetry with forget()'s rebuild: the persisted
             # band buckets must describe the STORED (rewritten) text,
             # so recompute signatures post-rewrite — the pre-rewrite
@@ -366,21 +343,9 @@ def streaming_ingest_curated(
                 )
                 else None,
             )
-        if event_time_col is not None:
-            from bigdata_quality_assessment_spark.streaming.embedding_ingest import (
-                _advance_watermark,
-            )
+        advance_watermark()
 
-            _advance_watermark(root, new_max)
-        if marker:
-            os.makedirs(marker_dir, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write("done")
-
-    w = docs_stream.writeStream.foreachBatch(fold).trigger(availableNow=True)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return replay_safe_sink(docs_stream, fold, checkpoint, "_ingest_commits")
 
 
 def forget(
@@ -397,8 +362,8 @@ def forget(
     arrivals as phantom duplicates. Returns the number of corpus rows
     removed.
 
-    Each store is rewritten LAZILY into a temp dir, then swapped in
-    with start-of-call crash recovery (the compact_lake discipline):
+    Each store is rewritten LAZILY into a temp dir and swapped in by
+    :func:`...sources.io.swap_dir` (crash recovery on entry):
     the survivor frame is never materialized driver/executor-side —
     the tmp write streams from the old files, and the digest store is
     recomputed by reading the NEW corpus path after its swap, so no
@@ -424,65 +389,43 @@ def forget(
     suppress re-arrivals — RE-RUNNING forget() with any (even empty)
     id list completes the cleanup, because state is always rebuilt
     from the surviving corpus, not diffed. forget() is idempotent."""
-    import shutil
-
-    def recover_and_clean(path: str) -> None:
-        tmp, old = path + ".__forget__", path + ".__old__"
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)  # prior run crashed mid-swap
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-
-    def swap(df: DataFrame, path: str) -> None:
-        tmp, old = path + ".__forget__", path + ".__old__"
-        df.write.mode("overwrite").parquet(tmp)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-
     ids = list(doc_ids)
     id_df = local_frame(spark, [(i,) for i in ids], f"{id_col} long")
     corpus_path = os.path.join(root, "corpus")
-    digests_path = os.path.join(root, "digests")
-    buckets_path = os.path.join(root, "buckets")
-    for pth in (corpus_path, digests_path, buckets_path):
-        recover_and_clean(pth)
+    with swap_dir(corpus_path, ".__forget__") as tmp:
+        corpus = spark.read.parquet(corpus_path)
+        n_before = corpus.count()
+        if bm25_index_path is not None:
+            # BM25 leg FIRST, while the forgotten rows' stored text is
+            # still readable. Crash-ordering: delete_bm25_docs skips
+            # already-tombstoned ids, so a re-run after a crash in
+            # either window is exact — before this call nothing
+            # happened anywhere; after it the re-derived batch is fully
+            # tombstoned (no-op) and the corpus swap proceeds. Deriving
+            # the batch from the corpus AFTER the swap instead would
+            # silently lose the index deletion whenever the crash
+            # landed between the two.
+            bm25_delete = corpus.join(
+                F.broadcast(id_df), id_col, "left_semi"
+            ).select(id_col, text_col)
+            if bm25_delete.take(1):
+                from bigdata_quality_assessment_spark.operators.text import (
+                    delete_bm25_docs,
+                )
 
-    corpus = spark.read.parquet(corpus_path)
-    n_before = corpus.count()
-    if bm25_index_path is not None:
-        # BM25 leg FIRST, while the forgotten rows' stored text is
-        # still readable. Crash-ordering: delete_bm25_docs skips
-        # already-tombstoned ids, so a re-run after a crash in either
-        # window is exact — before this call nothing happened anywhere;
-        # after it the re-derived batch is fully tombstoned (no-op) and
-        # the corpus swap proceeds. Deriving the batch from the corpus
-        # AFTER the swap instead would silently lose the index deletion
-        # whenever the crash landed between the two.
-        bm25_delete = corpus.join(F.broadcast(id_df), id_col, "left_semi").select(
-            id_col, text_col
-        )
-        if bm25_delete.take(1):
-            from bigdata_quality_assessment_spark.operators.text import (
-                delete_bm25_docs,
-            )
-
-            delete_bm25_docs(
-                bm25_delete, bm25_index_path, text_col=text_col, id_col=id_col
-            )
-    swap(corpus.join(F.broadcast(id_df), id_col, "left_anti"), corpus_path)
+                delete_bm25_docs(
+                    bm25_delete, bm25_index_path, text_col=text_col, id_col=id_col
+                )
+        corpus.join(F.broadcast(id_df), id_col, "left_anti").write.parquet(tmp)
     survivors = spark.read.parquet(corpus_path)  # the NEW files
     n_after = survivors.count()
-    swap(
-        survivors.select(F.md5(F.col(text_col)).alias("digest")), digests_path
-    )
-    buckets = spark.read.parquet(buckets_path)
-    swap(
-        buckets.join(
+    with swap_dir(os.path.join(root, "digests"), ".__forget__") as tmp:
+        survivors.select(F.md5(F.col(text_col)).alias("digest")).write.parquet(tmp)
+    buckets_path = os.path.join(root, "buckets")
+    with swap_dir(buckets_path, ".__forget__") as tmp:
+        spark.read.parquet(buckets_path).join(
             F.broadcast(survivors.select(id_col)), id_col, "left_semi"
-        ),
-        buckets_path,
-    )
+        ).write.parquet(tmp)
     spans_path = os.path.join(root, "spans")
     meta_path = os.path.join(root, "spans_meta.json")
     # rebuild ONLY when the span tier was ever enabled (meta file) —
@@ -493,7 +436,6 @@ def forget(
 
         with open(meta_path) as fh:
             span_tokens = int(json.load(fh)["span_tokens"])
-        recover_and_clean(spans_path)
         # like digests: rebuild from the surviving corpus (whose text
         # is already the kept-spans rewrite), never diff the old store
         from bigdata_quality_assessment_spark.operators.text import (
@@ -511,7 +453,8 @@ def forget(
             .select("__key", id_col)
             .distinct()
         )
-        swap(rebuilt, spans_path)
+        with swap_dir(spans_path, ".__forget__") as tmp:
+            rebuilt.write.parquet(tmp)
     return n_before - n_after
 
 
@@ -534,33 +477,18 @@ def streaming_expectations_ledger(
         check_expectations,
     )
 
-    marker_dir = (
-        os.path.join(checkpoint, "_ledger_commits") if checkpoint else None
-    )
-
     def audit(batch: DataFrame, batch_id: int) -> None:
-        # same replay-idempotence discipline as streaming_ingest_curated:
-        # checkpoint-scoped markers stop a redelivered batch from
-        # appending duplicate ledger rows. No take(1) pre-scan — an
-        # empty batch legitimately ledgers n_rows=0 rows, as promised.
-        marker = os.path.join(marker_dir, str(batch_id)) if marker_dir else None
-        if marker and os.path.exists(marker):
-            return
+        # replay markers stop a redelivered batch from appending
+        # duplicate ledger rows. No take(1) pre-scan — an empty batch
+        # legitimately ledgers n_rows=0 rows, as promised.
         report = check_expectations(batch, rules).withColumn(
             "batch_id", F.lit(batch_id).cast("long")
         )
         report.select(
             "batch_id", "rule", "kind", "n_rows", "n_violations", "pass_rate"
         ).write.mode("append").parquet(ledger_path)
-        if marker:
-            os.makedirs(marker_dir, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write("done")
 
-    w = stream.writeStream.foreachBatch(audit).trigger(availableNow=True)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return replay_safe_sink(stream, audit, checkpoint, "_ledger_commits")
 
 
 def compact_ingest_state(
@@ -579,13 +507,6 @@ def compact_ingest_state(
     crash-safety contract: failed compactions leave the original
     layout untouched). Run between drains — ingest must be quiesced.
     Returns {store: new_file_count} for the stores present."""
-    from bigdata_quality_assessment_spark.sources.io import compact_lake
-
-    out: dict[str, int] = {}
-    for name in ("corpus", "digests", "buckets", "spans"):
-        p = os.path.join(root, name)
-        if os.path.exists(p):
-            out[name] = compact_lake(
-                spark, p, target_records_per_file=target_records_per_file
-            )
-    return out
+    return compact_stores(
+        spark, root, ("corpus", "digests", "buckets", "spans"), target_records_per_file
+    )
