@@ -17,18 +17,17 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import N_RUNS, sample, session, summarize  # noqa: E402
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     from pyspark.sql import functions as F
 
@@ -38,14 +37,9 @@ def main() -> None:
         ivfpq_knn,
         knn_brute_force,
     )
-    from bigdata_quality_assessment_spark.session import build_session
     from bigdata_quality_assessment_spark.sources.tables import load_table
 
-    spark = build_session(
-        app_name="bench_ann", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm = spark.sparkContext._jvm
+    spark = session("bench_ann")
 
     emb = load_table(spark, "embeddings", sf_dir)
     n_vec = emb.count()
@@ -117,22 +111,8 @@ def main() -> None:
         left, lab, dim=64, k=3, n_planes=jp, n_tables=6,
         max_bucket=4096,
     ).count()
-    meds: dict[str, float] = {}
-    stats: dict[str, dict[str, float]] = {}
-    for name, fn in queries.items():
-        samples = []
-        for _ in range(n_runs):
-            spark.catalog.clearCache()
-            jvm.System.gc()
-            t0 = time.perf_counter()
-            fn()
-            samples.append(time.perf_counter() - t0)
-        meds[name] = round(statistics.median(samples), 3)
-        stats[name] = {
-            "median": meds[name],
-            "spread": round(max(samples) - min(samples), 3),
-            "n_runs": n_runs,
-        }
+    stats = {name: summarize(sample(spark, fn, N_RUNS)) for name, fn in queries.items()}
+    meds = {name: s["median"] for name, s in stats.items()}
     spark.stop()
     print(json.dumps({
         "sf_dir": sf_dir, "n_vectors": n_vec, "n_queries": n_q,

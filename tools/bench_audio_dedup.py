@@ -11,9 +11,10 @@ collapse at scale.
 
 Usage: python tools/bench_audio_dedup.py [--two-level] [n_clips ...]
 Default scales: 20000 200000. Corpora cache under
-.localdata/audio/<n>[_seg<k>_trim<r>]/media.parquet (delete to
-regenerate). ``--two-level`` runs the nested (band, sub-band) scale
-regime (identical survivor sets — see simhash_near_dedup).
+.localdata/audio/<n>[_seg<k>_trim<r>]/media.parquet (rebuilt when
+the generator params change; see bench.cached_dir). ``--two-level``
+runs the nested (band, sub-band) scale regime (identical survivor
+sets — see simhash_near_dedup).
 
 Round-14 trim tier: SPARK_GRAFT_AUDIO_TRIM_RATE > 0 (with
 SPARK_GRAFT_AUDIO_N_SEGMENTS, default 4) plants head-trimmed copies
@@ -28,13 +29,13 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import N_RUNS, cached_corpus, calibrate, sample, session, summarize  # noqa: E402
 
 
 def main() -> None:
@@ -42,7 +43,6 @@ def main() -> None:
     two_level = "--two-level" in args
     args = [a for a in args if a != "--two-level"]
     scales = [int(a) for a in args] or [20_000, 200_000]
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     trim_rate = float(os.environ.get("SPARK_GRAFT_AUDIO_TRIM_RATE", "0"))
     n_segments = int(os.environ.get("SPARK_GRAFT_AUDIO_N_SEGMENTS",
                                     "4" if trim_rate > 0 else "1"))
@@ -54,49 +54,24 @@ def main() -> None:
         audio_fingerprint,
         near_dedup_audio,
     )
-    from bigdata_quality_assessment_spark.session import build_session
     from bigdata_quality_assessment_spark.sources.audiogen import (
         planted_audio,
     )
 
-    spark = build_session(
-        app_name="bench_audio_dedup",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm = spark.sparkContext._jvm
-
-    def calibrate() -> float:
-        xs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 768_000_000, 1, 32).selectExpr(
-                "sum(sin(id * 1.0e-6) + cos(id * 1.0e-6)) as s"
-            ).collect()
-            xs.append(time.perf_counter() - t0)
-        return round(statistics.median(xs), 3)
-
-    calibrate()  # codegen warmup
+    spark = session("bench_audio_dedup")
+    calibrate(spark)  # codegen warmup
     results = {}
     for n in scales:
         tag = str(n) if not seg_tier else f"{n}_seg{n_segments}_trim{trim_rate}"
-        path = REPO / ".localdata" / "audio" / tag / "media.parquet"
-        if not path.exists():
-            t0 = time.perf_counter()
-            planted_audio(
-                spark, n, seed=7, trim_rate=trim_rate, n_segments=n_segments
-            ).write.mode("overwrite").parquet(str(path))
-            print(
-                f"# generated {n} clips in {time.perf_counter()-t0:.1f}s",
-                file=sys.stderr,
-            )
-        media = spark.read.parquet(str(path))
+        media = cached_corpus(spark, "audio", tag, planted_audio,
+                              {"n_clips": n, "seed": 7, "trim_rate": trim_rate,
+                               "n_segments": n_segments})
         stats = {
             "n_clips": n,
             "two_level": two_level,
             "trim_rate": trim_rate,
             "n_segments": n_segments,
-            "cal_start": calibrate(),
+            "cal_start": calibrate(spark),
         }
 
         def quality(label: str, kept):
@@ -138,14 +113,7 @@ def main() -> None:
             )
 
         def timed(name, fn):
-            samples = []
-            for _ in range(n_runs):
-                spark.catalog.clearCache()
-                jvm.System.gc()
-                t0 = time.perf_counter()
-                fn()
-                samples.append(time.perf_counter() - t0)
-            stats[name] = round(statistics.median(samples), 3)
+            stats[name] = summarize(sample(spark, fn, N_RUNS))["median"]
 
         timed(
             "audio_fingerprint",
@@ -166,7 +134,7 @@ def main() -> None:
                     media, seg_frames=2080, max_offset=1
                 ).count(),
             )
-        stats["cal_end"] = calibrate()
+        stats["cal_end"] = calibrate(spark)
         results[n] = stats
         print(json.dumps(stats))
 

@@ -11,7 +11,8 @@ dedup — collapse at scale.
 
 Usage: python tools/bench_image_dedup.py [--two-level] [n_images ...]
 Default scales: 20000 200000. Corpora cache under
-.localdata/images/<n>/media.parquet (delete to regenerate).
+.localdata/images/<n>/media.parquet (rebuilt when the generator
+params change; see bench.cached_dir).
 Prints one JSON line per scale plus a summary line.
 
 ``--two-level`` (round-13) runs the nested (band, sub-band) SCALE
@@ -24,14 +25,13 @@ dominated).
 from __future__ import annotations
 
 import json
-import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import N_RUNS, cached_corpus, calibrate, sample, session, summarize  # noqa: E402
 
 
 def main() -> None:
@@ -39,7 +39,6 @@ def main() -> None:
     two_level = "--two-level" in args
     args = [a for a in args if a != "--two-level"]
     scales = [int(a) for a in args] or [20_000, 200_000]
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
     from pyspark.sql import functions as F
 
@@ -47,46 +46,20 @@ def main() -> None:
         image_phash,
         near_dedup_images,
     )
-    from bigdata_quality_assessment_spark.session import build_session
     from bigdata_quality_assessment_spark.sources.imagegen import (
         planted_images,
     )
 
-    spark = build_session(
-        app_name="bench_image_dedup",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm = spark.sparkContext._jvm
-
-    def calibrate() -> float:
-        xs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 768_000_000, 1, 32).selectExpr(
-                "sum(sin(id * 1.0e-6) + cos(id * 1.0e-6)) as s"
-            ).collect()
-            xs.append(time.perf_counter() - t0)
-        return round(statistics.median(xs), 3)
-
-    calibrate()  # codegen warmup
+    spark = session("bench_image_dedup")
+    calibrate(spark)  # codegen warmup
     results = {}
     for n in scales:
-        path = REPO / ".localdata" / "images" / str(n) / "media.parquet"
-        if not path.exists():
-            t0 = time.perf_counter()
-            planted_images(spark, n, seed=7).write.mode("overwrite").parquet(
-                str(path)
-            )
-            print(
-                f"# generated {n} images in {time.perf_counter()-t0:.1f}s",
-                file=sys.stderr,
-            )
-        media = spark.read.parquet(str(path))
+        media = cached_corpus(spark, "images", str(n), planted_images,
+                              {"n_images": n, "seed": 7})
         stats = {
             "n_images": n,
             "two_level": two_level,
-            "cal_start": calibrate(),
+            "cal_start": calibrate(spark),
         }
 
         # planted quality (untimed, distributed)
@@ -118,14 +91,7 @@ def main() -> None:
         stats["orig_survival"] = round(float(qual["survival"]), 4)
 
         def timed(name, fn):
-            samples = []
-            for _ in range(n_runs):
-                spark.catalog.clearCache()
-                jvm.System.gc()
-                t0 = time.perf_counter()
-                fn()
-                samples.append(time.perf_counter() - t0)
-            stats[name] = round(statistics.median(samples), 3)
+            stats[name] = summarize(sample(spark, fn, N_RUNS))["median"]
 
         timed(
             "image_phash",
@@ -142,7 +108,7 @@ def main() -> None:
                 media, max_hamming=3, two_level=two_level
             ).count(),
         )
-        stats["cal_end"] = calibrate()
+        stats["cal_end"] = calibrate(spark)
         results[n] = stats
         print(json.dumps(stats))
 

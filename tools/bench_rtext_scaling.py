@@ -19,7 +19,8 @@ sources/textgen.py — Zipfian 50k-token vocabulary, planted 6% exact /
 
 Usage: python tools/bench_rtext_scaling.py [n_docs ...]
 Default scales: 5000 50000 500000. Corpora cache under
-.localdata/rtext/<n>/documents.parquet (delete to regenerate).
+.localdata/rtext/<n>/documents.parquet (rebuilt when the generator
+params change; see bench.cached_dir).
 Prints one JSON line per scale plus a final summary line.
 
 ``SPARK_GRAFT_RTEXT_OPS`` (round 12, the 5M-doc fifth decade): a
@@ -36,18 +37,17 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import N_RUNS, cached_corpus, calibrate, sample, session, summarize  # noqa: E402
+
 
 def main() -> None:
     scales = [int(a) for a in sys.argv[1:]] or [5_000, 50_000, 500_000]
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     ops_env = os.environ.get("SPARK_GRAFT_RTEXT_OPS", "")
     ops_filter = {o.strip() for o in ops_env.split(",") if o.strip()} or None
 
@@ -65,49 +65,22 @@ def main() -> None:
         near_dedup_minhash,
         ngram_lm_score,
     )
-    from bigdata_quality_assessment_spark.session import build_session
     from bigdata_quality_assessment_spark.sources.textgen import (
         eval_spans,
         realistic_documents,
     )
 
-    spark = build_session(
-        app_name="bench_rtext_scaling",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm = spark.sparkContext._jvm
-
-    def calibrate() -> float:
-        """bench.py's fixed pure-CPU steal probe (median-of-3) — the
-        500k samples spread up to 2× run-to-run on this host, so every
-        scale row carries its own steal context."""
-        import statistics as _st
-
-        xs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 768_000_000, 1, 32).selectExpr(
-                "sum(sin(id * 1.0e-6) + cos(id * 1.0e-6)) as s"
-            ).collect()
-            xs.append(time.perf_counter() - t0)
-        return round(_st.median(xs), 3)
-
-    calibrate()  # discard codegen warmup
+    spark = session("bench_rtext_scaling")
+    # the 500k samples spread up to 2× run-to-run on a shared host, so
+    # every scale row carries its own calibration (steal) context
+    calibrate(spark)  # discard codegen warmup
 
     ev = eval_spans(spark, seed=7).cache()
     ev.count()
     results = {}
     for n in scales:
-        path = REPO / ".localdata" / "rtext" / str(n) / "documents.parquet"
-        if not path.exists():
-            t0 = time.perf_counter()
-            realistic_documents(spark, n, seed=7).write.mode(
-                "overwrite"
-            ).parquet(str(path))
-            print(f"# generated {n} docs in {time.perf_counter()-t0:.1f}s",
-                  file=sys.stderr)
-        docs = spark.read.parquet(str(path))
+        docs = cached_corpus(spark, "rtext", str(n), realistic_documents,
+                             {"n_docs": n, "seed": 7}, file="documents.parquet")
 
         # corpus collision statistics (original docs only — planted
         # dups share ALL their grams by construction)
@@ -141,7 +114,7 @@ def main() -> None:
                 )
                 .first()
             )
-        stats = {"n_docs": n, "cal_start": calibrate()}
+        stats = {"n_docs": n, "cal_start": calibrate(spark)}
         if want_grams:
             gs = gram_census()
             stats["distinct_5grams"] = int(gs["distinct_5grams"])
@@ -179,16 +152,8 @@ def main() -> None:
         stats["orig_survival"] = round(float(qual["survival"]), 4)
 
         def timed(name, fn):
-            if ops_filter is not None and name not in ops_filter:
-                return
-            samples = []
-            for _ in range(n_runs):
-                spark.catalog.clearCache()
-                jvm.System.gc()
-                t0 = time.perf_counter()
-                fn()
-                samples.append(time.perf_counter() - t0)
-            stats[name] = round(statistics.median(samples), 3)
+            if ops_filter is None or name in ops_filter:
+                stats[name] = summarize(sample(spark, fn, N_RUNS))["median"]
 
         timed("exact_dedup", lambda: exact_dedup(docs).count())
         timed("near_dedup_minhash",
@@ -223,7 +188,7 @@ def main() -> None:
             stats["decon_flagged"] = int(
                 decontaminate(docs, ev, k=5).filter("contaminated").count()
             )
-        stats["cal_end"] = calibrate()
+        stats["cal_end"] = calibrate(spark)
         results[n] = stats
         print(json.dumps(stats))
 

@@ -18,26 +18,25 @@ SURVEY §2.10), SPARK_GRAFT_VIDEO_MAX_OFFSET (default 0; when > 0 the
 dedup + quality pass runs at BOTH offset 0 and this offset, pricing
 the offset scan's (2·δ+1)× candidate volume and the trim-recall it
 buys). Default scales: 10000 100000. Corpora cache under
-.localdata/videos/<n>[_trim<rate>]/media.parquet (delete to
-regenerate).
+.localdata/videos/<n>[_trim<rate>]/media.parquet (rebuilt when
+the generator params change; see bench.cached_dir).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import N_RUNS, cached_corpus, calibrate, sample, session, summarize  # noqa: E402
+
 
 def main() -> None:
     scales = [int(a) for a in sys.argv[1:]] or [10_000, 100_000]
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     trim_rate = float(os.environ.get("SPARK_GRAFT_VIDEO_TRIM_RATE", "0"))
     max_offset = int(os.environ.get("SPARK_GRAFT_VIDEO_MAX_OFFSET", "0"))
 
@@ -47,48 +46,22 @@ def main() -> None:
         frame_phash,
         near_dedup_videos,
     )
-    from bigdata_quality_assessment_spark.session import build_session
     from bigdata_quality_assessment_spark.sources.videogen import (
         planted_videos,
     )
 
-    spark = build_session(
-        app_name="bench_video_dedup",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm = spark.sparkContext._jvm
-
-    def calibrate() -> float:
-        xs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(0, 768_000_000, 1, 32).selectExpr(
-                "sum(sin(id * 1.0e-6) + cos(id * 1.0e-6)) as s"
-            ).collect()
-            xs.append(time.perf_counter() - t0)
-        return round(statistics.median(xs), 3)
-
-    calibrate()  # codegen warmup
+    spark = session("bench_video_dedup")
+    calibrate(spark)  # codegen warmup
     results = {}
     for n in scales:
         tag = str(n) if trim_rate == 0 else f"{n}_trim{trim_rate}"
-        path = REPO / ".localdata" / "videos" / tag / "media.parquet"
-        if not path.exists():
-            t0 = time.perf_counter()
-            planted_videos(
-                spark, n, seed=7, trim_rate=trim_rate
-            ).write.mode("overwrite").parquet(str(path))
-            print(
-                f"# generated {n} videos in {time.perf_counter()-t0:.1f}s",
-                file=sys.stderr,
-            )
-        media = spark.read.parquet(str(path))
+        media = cached_corpus(spark, "videos", tag, planted_videos,
+                              {"n_videos": n, "seed": 7, "trim_rate": trim_rate})
         stats = {
             "n_videos": n,
             "trim_rate": trim_rate,
             "two_level": n >= 1_000_000,  # the auto default's switch
-            "cal_start": calibrate(),
+            "cal_start": calibrate(spark),
         }
 
         def quality(offset: int) -> dict:
@@ -128,14 +101,7 @@ def main() -> None:
             stats[f"quality{key}"] = quality(off)
 
         def timed(name, fn):
-            samples = []
-            for _ in range(n_runs):
-                spark.catalog.clearCache()
-                jvm.System.gc()
-                t0 = time.perf_counter()
-                fn()
-                samples.append(time.perf_counter() - t0)
-            stats[name] = round(statistics.median(samples), 3)
+            stats[name] = summarize(sample(spark, fn, N_RUNS))["median"]
 
         timed(
             "frame_phash",
@@ -151,7 +117,7 @@ def main() -> None:
                     media, n_frames=3, max_offset=off
                 ).count(),
             )
-        stats["cal_end"] = calibrate()
+        stats["cal_end"] = calibrate(spark)
         results[n] = stats
         print(json.dumps(stats))
 

@@ -7,11 +7,12 @@ Usage:
     python tools/dump_plans.py r15 before [query ...]
     python tools/dump_plans.py r15 after
 
-Mirrors bench.py's query bodies exactly but stops at the final
-DataFrame (no action), so the dumped plan is the plan the bench
-executes. Queries whose timed action is a driver loop
-(active_loop_3iter) dump the per-iteration scored-pool plan plus the
-explorer-union plan of iteration 0.
+Each query is built by ``bigdata_quality_assessment_spark.headline``,
+the bodies ``bench.py`` times, so the dumped plan is the plan of the
+frame the bench acts on. A build runs the jobs the bench times before
+the action (the flagship's eager barrier, ensemble_scoring's cache
+fill, active_loop_3iter's whole loop, whose dump is the final
+training set the bench counts).
 """
 
 from __future__ import annotations
@@ -33,415 +34,24 @@ def fmt(df) -> str:
 
 
 def main() -> None:
+    from bench import session
+    from bigdata_quality_assessment_spark.headline import HEADLINE
+
     tag = sys.argv[1] if len(sys.argv) > 1 else "r15"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
     out_dir = REPO / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    from pyspark.sql import functions as F
-
-    from bigdata_quality_assessment_spark.operators.density import (
-        histogram,
-        interp_uniform_grid,
-        kde_1d,
-    )
-    from bigdata_quality_assessment_spark.operators.models import (
-        predict_ensemble_stats,
-        train_ensemble,
-    )
-    from bigdata_quality_assessment_spark.operators.profiling import profile_table
-    from bigdata_quality_assessment_spark.operators.score import (
-        acquisition_us_lw,
-        ensemble_stats,
-        regression_metrics,
-    )
-    from bigdata_quality_assessment_spark.operators.select import argmax, top_k
-    from bigdata_quality_assessment_spark.operators.similarity import knn_brute_force
-    from bigdata_quality_assessment_spark.operators.text import near_dedup_minhash
-    from bigdata_quality_assessment_spark.operators.windows import (
-        horizon_abs_error,
-        sliding_windows,
-    )
-    from bigdata_quality_assessment_spark.session import build_session
-    from bigdata_quality_assessment_spark.sources.generators import stub_predictions
-    from bigdata_quality_assessment_spark.sources.tables import load_table
-
-    spark = build_session(
-        app_name="dump_plans", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def points():
-        li = load_table(spark, "lineitem", SF_DIR)
-        return li.select(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("point_id"),
-            (F.col("l_quantity") / 50.0).alias("x1"),
-            (F.col("l_discount") * 10.0).alias("x2"),
-            F.log("l_extendedprice").alias("y"),
-        )
-
-    def p_flagship():
-        pts = points()
-        scored = ensemble_stats(
-            stub_predictions(pts, 2, carry_cols=["x1", "x2", "y"]),
-            carry_cols=["x1", "x2", "y"],
-        )
-        grid = kde_1d(scored, "y_mean", bw=0.1, ngrid=256)
-        with_fy = interp_uniform_grid(scored, grid, q_col="y_mean", out_col="pdf_y_mean")
-        acq = with_fy.withColumn("acq", acquisition_us_lw(with_fy))
-        return top_k(acq, "acq", 20)
-
-    def p_ensemble():
-        pts = points()
-        train = pts.filter(F.col("point_id") % 997 == 0)
-        thetas = train_ensemble(train, ["x1", "x2"], "y", n_models=2, seed=42)
-        scored = predict_ensemble_stats(
-            pts, thetas, ["x1", "x2"], carry_cols=["x1", "x2", "y"]
-        ).withColumn(
-            "se", (F.col("y_mean") - F.col("y")) * (F.col("y_mean") - F.col("y"))
-        )
-        return regression_metrics(scored, "y_mean", "y", "y_var").crossJoin(
-            argmax(scored, "se")
-        )
-
-    def p_kde():
-        ev = load_table(spark, "events", SF_DIR)
-        return kde_1d(ev, "value", bw=20.0, ngrid=1024, lo=0.0, hi=500.0)
-
-    def p_histogram():
-        li = load_table(spark, "lineitem", SF_DIR)
-        return histogram(li, "l_extendedprice", nbins=50)
-
-    def p_topk():
-        li = load_table(spark, "lineitem", SF_DIR)
-        li = li.withColumn("lid", F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-        return top_k(li, "l_extendedprice", 100, id_col="lid")
-
-    def p_profile():
-        li = load_table(spark, "lineitem", SF_DIR)
-        return profile_table(
-            li,
-            ["l_quantity", "l_extendedprice", "l_discount", "l_returnflag", "l_shipdate"],
-        )
-
-    def p_sliding():
-        ev = load_table(spark, "events", SF_DIR)
-        w = sliding_windows(
-            ev, "event_id", "value", history=10, prediction=5, group_cols=["user_id"]
-        )
-        w = w.withColumn("pred", F.slice(F.col("history"), 6, 5))
-        return horizon_abs_error(w, pred_col="pred").agg(F.avg("horizon_err"))
-
-    def p_near_dedup():
-        docs = load_table(spark, "documents", SF_DIR)
-        return near_dedup_minhash(docs, k=3, n_hashes=128, bands=16, min_jaccard=0.8)
-
-    def p_knn():
-        emb = load_table(spark, "embeddings", SF_DIR)
-        q = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        return knn_brute_force(emb, q, k=10)
-
-    def p_asof():
-        from bigdata_quality_assessment_spark.operators.asof import asof_join
-
-        ev = load_table(spark, "events", SF_DIR).withColumn("ts", F.expr("ts DIV 1000"))
-        left = ev.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts", "value"
-        )
-        right = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", F.col("value").alias("purchase_value")
-        )
-        out = asof_join(left, right, on=["user_id"], ts_col="ts")
-        return out.agg(F.count(F.lit(1)), F.sum("purchase_value"), F.max("ts_right"))
-
-    def p_rollup():
-        from bigdata_quality_assessment_spark.operators.asof import time_rollup
-
-        ev = load_table(spark, "events", SF_DIR)
-        return time_rollup(ev, "ts", "value", levels=(86400, 3600))
-
-    def p_session():
-        from bigdata_quality_assessment_spark.streaming.aggregates import (
-            session_metrics,
-            with_event_time,
-        )
-
-        ev = with_event_time(load_table(spark, "events", SF_DIR))
-        return session_metrics(ev, gap="6 hours").agg(
-            F.count(F.lit(1)), F.sum("sum_value")
-        )
-
-    def p_loop_iter0():
-        """Iteration-0 shape of the active loop: the scored-pool pass
-        (pre-checkpoint), the KDE binning aggregate whose rows the
-        driver collects and convolves (A1-A3/A12 sums riding it), and
-        the explorer union, which reads the pool grid as a literal."""
-        from bigdata_quality_assessment_spark.operators.density import (
-            _kde_binned,
-            kde_1d_multi_local,
-        )
-        from bigdata_quality_assessment_spark.operators.score import (
-            acquisition_us,
-            regression_terms,
-        )
-        from bigdata_quality_assessment_spark.operators.models import fit_poly_member
-        from bigdata_quality_assessment_spark.sources.generators import grid_points_2d
-
-        import numpy as np
-
-        pts = grid_points_2d(spark, 100)
-        rows = pts.limit(100).collect()
-        X = np.array([[r["x1"], r["x2"]] for r in rows])
-        y = np.array([r["y"] for r in rows])
-        thetas = [list(fit_poly_member(X, y, m, seed=42)) for m in range(2)]
-        scored = predict_ensemble_stats(
-            pts, thetas, ["x1", "x2"], carry_cols=["x1", "x2", "y"]
-        ).withColumn("se", (F.col("y_mean") - F.col("y")) * (F.col("y_mean") - F.col("y")))
-        parts = {"loop_scored_pass": scored}
-        # mirror loop.py: bounds observed on the scored job, entering
-        # the KDE as literals
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        sc = scored.observe(
-            obs,
-            F.least(F.min("y_mean"), F.min("y")).alias("jmn"),
-            F.greatest(F.max("y_mean"), F.max("y")).alias("jmx"),
-            F.min("y_mean").alias("pmn"), F.max("y_mean").alias("pmx"),
-        ).localCheckpoint(eager=True)
-        ob = obs.get
-
-        def _pad(mn, mx, pad=0.01):
-            span = (mx - mn) if (mx - mn) > 0 else 1.0
-            return (mn - pad * span, mx + pad * span)
-
-        joint = _pad(ob["jmn"], ob["jmx"])
-        specs = [
-            {"tag": "pred", "col": "y_mean", "bw": 0.1, "bounds": joint},
-            {"tag": "truth", "col": "y", "bw": 0.1, "bounds": joint},
-            {"tag": "pool", "col": "y_mean", "bw": 0.1,
-             "bounds": _pad(ob["pmn"], ob["pmx"])},
-        ]
-        sums = regression_terms("y_mean", "y", "y_var")
-        # the aggregate kde_1d_multi_local collects
-        parts["loop_kde_binned"] = _kde_binned(sc, specs, 256, 0.01, sums)
-        grids, _ = kde_1d_multi_local(sc, specs, ngrid=256, sums=sums)
-        keep = ["point_id", "x1", "x2", "y"]
-        n_exp = 3
-        f1 = (
-            sc.orderBy(F.col("se").desc(), F.col("point_id").asc()).limit(n_exp)
-            .select(*keep, F.col("se").alias("__score"), F.lit("se").alias("__explorer"))
-        )
-        with_us = sc.withColumn("acq", acquisition_us(sc))
-        f2 = (
-            with_us.orderBy(F.col("acq").desc(), F.col("point_id").asc()).limit(n_exp)
-            .select(*keep, F.col("acq").alias("__score"), F.lit("us").alias("__explorer"))
-        )
-        with_fy = interp_uniform_grid(sc, grids["pool"], q_col="y_mean", out_col="pdf_y_mean")
-        with_lw = with_fy.withColumn("acq", acquisition_us_lw(with_fy))
-        f3 = (
-            with_lw.orderBy(F.col("acq").desc(), F.col("point_id").asc()).limit(n_exp)
-            .select(*keep, F.col("acq").alias("__score"), F.lit("us_lw").alias("__explorer"))
-        )
-        parts["loop_explorer_union"] = f1.unionByName(f2).unionByName(f3)
-        return parts
-
-    def p_kde_nobarrier():
-        """kde_1d's binning subtree with the lazy barrier suppressed,
-        so the plan shows the full lineage instead of a LogicalRDD.
-        Two shapes from CURRENT code: 'frames' = the one-row bounds
-        frame + broadcast crossJoin (the legacy path, still what a
-        DataFrame-bounds caller gets — byte-identical to the
-        pre-round-15 plan), 'lits' = the float lo/hi literal path
-        (round-15) where the crossJoin and bounds frame are gone."""
-        try:
-            from pyspark.sql.classic.dataframe import DataFrame as _DF
-        except ImportError:  # pre-4.0 layout
-            from pyspark.sql import DataFrame as _DF
-
-        ev = load_table(spark, "events", SF_DIR)
-        orig = _DF.localCheckpoint
-        _DF.localCheckpoint = lambda self, eager=True: self
-        try:
-            lits = kde_1d(ev, "value", bw=20.0, ngrid=1024, lo=0.0, hi=500.0)
-            bf = spark.range(1).select(
-                F.lit(0.0).alias("lo"), F.lit(500.0).alias("hi")
-            )
-            frames = kde_1d(ev, "value", bw=20.0, ngrid=1024, bounds=bf)
-        finally:
-            _DF.localCheckpoint = orig
-        return {
-            "kde_events_nobarrier_framebounds": frames,
-            "kde_events_nobarrier_litbounds": lits,
-        }
-
-    def _suppress_barriers():
-        """Monkeypatch context: localCheckpoint becomes identity so a
-        dumped plan shows the full lineage instead of truncating at a
-        LogicalRDD barrier. Returns (DataFrame class, original)."""
-        try:
-            from pyspark.sql.classic.dataframe import DataFrame as _DF
-        except ImportError:  # pre-4.0 layout
-            from pyspark.sql import DataFrame as _DF
-
-        return _DF, _DF.localCheckpoint
-
-    def p_flagship_nobarrier():
-        """Round-16 (VERDICT r15 'what's wrong' #1): TRUTHFUL
-        before/after evidence for the round-15 flagship change (lazy
-        localCheckpoint on ``scored``). The committed r15 pair was
-        structurally identical because both dumps truncated at
-        barriers. Here every barrier is suppressed EXCEPT the one
-        under test, so the structure shows:
-
-        * before — ``scored`` unbarriered feeds the KDE bounds
-          aggregate, the KDE binning pass, and the interp query side:
-          THREE copies of the scan → stub crossJoin → 600k-key
-          groupBy chain in one tree;
-        * after — ``scored`` behind the lazy barrier: the SAME three
-          consumers all read one ``Scan ExistingRDD`` (the stored
-          blocks of a single execution)."""
-        _DF, orig = _suppress_barriers()
-        pts = points()
-        pre = ensemble_stats(
-            stub_predictions(pts, 2, carry_cols=["x1", "x2", "y"]),
-            carry_cols=["x1", "x2", "y"],
-        )
-        # the barrier under test is applied OUTSIDE the patch so the
-        # after-plan carries the real LogicalRDD
-        scored_after = pre.localCheckpoint(eager=False)
-        _DF.localCheckpoint = lambda self, eager=True: self
-        try:
-            out = {}
-            for tag, scored in (("before", pre), ("after", scored_after)):
-                grid = kde_1d(scored, "y_mean", bw=0.1, ngrid=256)
-                with_fy = interp_uniform_grid(
-                    scored, grid, q_col="y_mean", out_col="pdf_y_mean"
-                )
-                acq = with_fy.withColumn("acq", acquisition_us_lw(with_fy))
-                out[f"flagship_nobarrier_{tag}"] = top_k(acq, "acq", 20)
-        finally:
-            _DF.localCheckpoint = orig
-        return out
-
-    def p_loop_nobarrier():
-        """Round-16 (VERDICT r15 'what's wrong' #1): truthful evidence
-        for the round-15 loop change (KDE grid bounds ride the scored
-        pool's checkpoint job as an Observation and enter kde_1d_multi
-        as literals). kde_1d_multi's internal barrier is suppressed so
-        the binning subtree is visible; the scored pool's own eager
-        checkpoint is real in both (the loop always had it):
-
-        * before — the pre-round-15 spec shape (internal range
-          derivation): a one-row bounds AGGREGATE over the pool +
-          broadcast crossJoin under the binning Generate;
-        * after — the observed-literal shape: no bounds aggregate, no
-          crossJoin; literal __lo/__dx/__bw inside the Generate.
-
-        The loop now collects this binning subtree through
-        kde_1d_multi_local instead (``loop_kde_binned`` of
-        active_loop_3iter); kde_1d_multi shares it."""
-        import numpy as np
-
-        from bigdata_quality_assessment_spark.operators.density import (
-            kde_1d_multi,
-        )
-        from bigdata_quality_assessment_spark.operators.models import (
-            fit_poly_member,
-        )
-        from bigdata_quality_assessment_spark.sources.generators import (
-            grid_points_2d,
-        )
-        from pyspark.sql import Observation
-
-        pts = grid_points_2d(spark, 100)
-        rows = pts.limit(100).collect()
-        X = np.array([[r["x1"], r["x2"]] for r in rows])
-        y = np.array([r["y"] for r in rows])
-        thetas = [list(fit_poly_member(X, y, m, seed=42)) for m in range(2)]
-        obs = Observation()
-        sc = predict_ensemble_stats(
-            pts, thetas, ["x1", "x2"], carry_cols=["x1", "x2", "y"]
-        ).withColumn(
-            "se", (F.col("y_mean") - F.col("y")) * (F.col("y_mean") - F.col("y"))
-        ).observe(
-            obs,
-            F.least(F.min("y_mean"), F.min("y")).alias("jmn"),
-            F.greatest(F.max("y_mean"), F.max("y")).alias("jmx"),
-            F.min("y_mean").alias("pmn"), F.max("y_mean").alias("pmx"),
-        ).localCheckpoint(eager=True)
-        ob = obs.get
-
-        def _pad(mn, mx, pad=0.01):
-            span = (mx - mn) if (mx - mn) > 0 else 1.0
-            return (mn - pad * span, mx + pad * span)
-
-        joint = _pad(ob["jmn"], ob["jmx"])
-        specs_after = [
-            {"tag": "pred", "col": "y_mean", "bw": 0.1, "bounds": joint},
-            {"tag": "truth", "col": "y", "bw": 0.1, "bounds": joint},
-            {"tag": "pool", "col": "y_mean", "bw": 0.1,
-             "bounds": _pad(ob["pmn"], ob["pmx"])},
-        ]
-        # pre-round-15 shape: bounds derived IN PLAN (range_cols), what
-        # kde_1d_multi runs for specs without literal bounds
-        shared = {"range_cols": ["y_mean", "y"]}
-        specs_before = [
-            {"tag": "pred", "col": "y_mean", "bw": 0.1, **shared},
-            {"tag": "truth", "col": "y", "bw": 0.1, **shared},
-            {"tag": "pool", "col": "y_mean", "bw": 0.1},
-        ]
-        _DF, orig = _suppress_barriers()
-        _DF.localCheckpoint = lambda self, eager=True: self
-        try:
-            out = {
-                "loop_kde_nobarrier_before": kde_1d_multi(
-                    sc, specs_before, ngrid=256
-                )["pred"],
-                "loop_kde_nobarrier_after": kde_1d_multi(
-                    sc, specs_after, ngrid=256
-                )["pred"],
-            }
-        finally:
-            _DF.localCheckpoint = orig
-        return out
-
-    plans = {
-        "kde_events_nobarrier": p_kde_nobarrier,
-        "flagship_nobarrier": p_flagship_nobarrier,
-        "loop_kde_nobarrier": p_loop_nobarrier,
-        "flagship_us_lw": p_flagship,
-        "ensemble_scoring": p_ensemble,
-        "kde_events": p_kde,
-        "histogram": p_histogram,
-        "topk": p_topk,
-        "profile": p_profile,
-        "sliding_windows": p_sliding,
-        "near_dedup_minhash": p_near_dedup,
-        "knn_cosine": p_knn,
-        "asof_join": p_asof,
-        "time_rollup": p_rollup,
-        "session_windows": p_session,
-        "active_loop_3iter": p_loop_iter0,
-    }
-    for name, builder in plans.items():
+    spark = session("dump_plans")
+    for name, build in HEADLINE.items():
         if only and name not in only:
             continue
-        obj = builder()
-        items = obj.items() if isinstance(obj, dict) else [(name, obj)]
-        for sub, df in items:
-            # the nobarrier evidence builders emit their own
-            # before/after pair from toggles in one invocation — keep
-            # their names as-is instead of double-suffixing
-            if sub.endswith(("_before", "_after")):
-                path = out_dir / f"{sub}.txt"
-            else:
-                path = out_dir / f"{sub}_{suffix}.txt"
-            path.write_text(fmt(df))
-            print(f"wrote {path}")
+        q = build(spark, SF_DIR)
+        path = out_dir / f"{name}_{suffix}.txt"
+        path.write_text(fmt(q.frame))
+        q.release()
+        print(f"wrote {path}")
     spark.stop()
 
 
