@@ -48,10 +48,10 @@ def entry(spark: SparkSession) -> DataFrame:
         F.log("l_extendedprice").alias("y"),
     )
     # M1: fit the 2-member ensemble on a small deterministic subsample
-    # (driver-side closed-form ridge solve — parameters, not data,
-    # return to the cluster). M2+M3 fused: one mapInPandas pass
-    # produces mean/var with point columns carried — zero exchanges
-    # over the pool.
+    # (one Arrow collect, then a driver-side closed-form ridge solve —
+    # parameters, not data, return to the cluster). M2+M3 fused: one
+    # Catalyst projection produces mean/var with point columns
+    # carried — zero exchanges and no Python worker over the pool.
     train = pts.filter(F.col("point_id") % 97 == 0)
     thetas = train_ensemble(train, ["x1", "x2"], "y", n_models=2, seed=42)
     scored = predict_ensemble_stats(

@@ -34,9 +34,10 @@ Steal-robust protocol (round 9): the shared-VM noise swung the
 recorded headline 25.8→43.5 s across rounds on UNCHANGED plans, so a
 single median can no longer adjudicate the 2× bar. Three additions:
 
-- a fixed CALIBRATION job (pure CPU, no I/O, constant work: one
-  whole-stage-codegen sum over ``spark.range`` — nothing this repo
-  optimizes can change it) timed at bench start / mid / end; its
+- a fixed CALIBRATION job (pure CPU, no I/O, constant work per core:
+  one whole-stage-codegen sum over ``spark.range``, one partition per
+  core — nothing this repo optimizes can change it) timed at bench
+  start / mid / end; its
   median over the pinned quiet-host reference ``CAL_REF`` is the
   run's ``steal`` factor.
 - best-of-N per query alongside the median (``query_stats[q]["best"]``
@@ -46,6 +47,8 @@ single median can no longer adjudicate the 2× bar. Three additions:
   (``ratio_vs_r3`` in BENCH_DETAIL.json): median/steal vs the pinned
   r3 FINAL v2 numbers (r7 quiet-host for the queries added later), so
   plan regressions separate from host noise without ad-hoc reruns.
+  Those are 32-core wall times, so the ratios are ``null`` (with
+  ``ratio_vs_r3_note`` saying why) on any other core count.
 
 The protocol pieces — ``session``, ``calibrate``, ``sample``,
 ``summarize`` and the ``.localdata`` corpus cache — are module-level so
@@ -74,11 +77,16 @@ LOCALDATA = REPO / ".localdata"
 
 # Quiet-host reference for the calibration job (seconds): measured
 # round 9 on an idle window, local[32] — 5 steady-state samples
-# 0.97/1.01/1.02/1.05/1.09 s. The job is constant work (768M-row
-# codegen sin+cos sum, no I/O, no shuffle), so cal_median/CAL_REF is a
-# direct estimate of how much slower THIS run's CPU was than the
-# reference window — the steal factor.
+# 0.97/1.01/1.02/1.05/1.09 s. The job is constant work PER CORE
+# (24M-row codegen sin+cos sum per core, one partition per core, no
+# I/O, no shuffle — 768M rows in 32 partitions at the reference's 32
+# cores), so cal_median/CAL_REF is a direct estimate of how much slower
+# THIS run's cores were than the reference window — the steal factor —
+# whatever the core count.
 CAL_REF = 1.0
+CAL_ROWS_PER_CPU = 24_000_000
+# the core count the R3_OPERATIVE wall times were measured on
+R3_CPUS = 32
 
 # Operative per-query baseline for steal-normalized ratios: the r3
 # FINAL v2 medians (BASELINE.md "Round-3 FINAL v2" table); the three
@@ -139,11 +147,13 @@ def session(app_name: str):
 
 
 def calibrate(spark) -> float:
-    """Median-of-3 seconds of the fixed pure-CPU job (see CAL_REF)."""
+    """Median-of-3 seconds of the fixed per-core pure-CPU job (see
+    CAL_REF)."""
+    cpus = spark.sparkContext.defaultParallelism
     xs = []
     for _ in range(3):
         t0 = time.perf_counter()
-        spark.range(0, 768_000_000, 1, 32).selectExpr(
+        spark.range(0, CAL_ROWS_PER_CPU * cpus, 1, cpus).selectExpr(
             "sum(sin(id * 1.0e-6) + cos(id * 1.0e-6)) as s"
         ).collect()
         xs.append(time.perf_counter() - t0)
@@ -696,12 +706,20 @@ def main() -> None:
     steal = round(cal_median / CAL_REF, 3)
     # steal-normalized per-query ratios vs the operative baseline:
     # (median / steal) / r3 — >1 means slower than r3 AFTER removing
-    # this run's measured CPU-steal factor, i.e. a real plan delta
-    ratios = {
-        q: round((timings[q] / steal) / R3_OPERATIVE[q], 2)
-        for q in timings
-        if q in R3_OPERATIVE
-    }
+    # this run's measured CPU-steal factor, i.e. a real plan delta.
+    # The r3 medians are 32-core wall times: on another core count the
+    # ratio would mix the core count into the "plan delta", so it is
+    # not computed there.
+    cpus = spark.sparkContext.defaultParallelism
+    ratios = ratios_note = None
+    if cpus == R3_CPUS:
+        ratios = {
+            q: round((timings[q] / steal) / R3_OPERATIVE[q], 2)
+            for q in timings
+            if q in R3_OPERATIVE
+        }
+    else:
+        ratios_note = f"r3 medians are {R3_CPUS}-core wall times; this run has {cpus} cores"
 
     spark.stop()
     # The driver records only the LAST ~2000 characters of stdout and
@@ -721,11 +739,13 @@ def main() -> None:
             "median": cal_median,
             "ref": CAL_REF,
             "steal": steal,
+            "cpus": cpus,
         },
         "queries": timings,
         "queries_best": bests,
         "query_stats": stats,
         "ratio_vs_r3_steal_normalized": ratios,
+        "ratio_vs_r3_note": ratios_note,
         "arrow_cold_start": {
             "cold": arrow_cold,
             "warm": arrow_warm,

@@ -95,8 +95,8 @@ def flagship_us_lw(spark: SparkSession, sf_dir: str) -> Query:
 
 
 def ensemble_scoring(spark: SparkSession, sf_dir: str) -> Query:
-    """M1 train (poly ridge) + M2 mapInPandas inference over the full
-    pool + A5/A6 reduction + A1-A3 metrics + T1 argmax."""
+    """M1 train (poly ridge, driver fit) + M2 Catalyst inference over
+    the full pool + A5/A6 reduction + A1-A3 metrics + T1 argmax."""
     pts = points(spark, sf_dir)
     train = pts.filter(F.col("point_id") % 997 == 0)
     thetas = train_ensemble(train, ["x1", "x2"], "y", n_models=2, seed=42)
@@ -105,7 +105,7 @@ def ensemble_scoring(spark: SparkSession, sf_dir: str) -> Query:
     ).withColumn(
         "se", (F.col("y_mean") - F.col("y")) * (F.col("y_mean") - F.col("y"))
     ).cache()
-    # one Arrow inference pass, pinned by an explicit materialization;
+    # one inference pass, pinned by an explicit materialization;
     # metrics + argmax then fuse into a single job over the cache (two
     # separate actions would each re-run the 600k-row predict)
     scored.count()

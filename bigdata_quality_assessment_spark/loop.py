@@ -169,7 +169,7 @@ def active_sampling_loop(
     """
     import numpy as np
 
-    from .operators.models import ensemble_jac_hess, fit_poly_member
+    from .operators.models import ensemble_jac_hess, fit_poly_ensemble
 
     if member_family not in ("poly", "mlp"):
         raise ValueError(f"member_family must be 'poly' or 'mlp', got {member_family!r}")
@@ -210,9 +210,7 @@ def active_sampling_loop(
                 )
                 for mid in range(n_models)
             ]
-        return [
-            list(fit_poly_member(X, y, mid, seed=seed)) for mid in range(n_models)
-        ]
+        return fit_poly_ensemble(X, y, n_models, seed=seed)
 
     def score_pool(thetas):
         if member_family == "mlp":
@@ -244,16 +242,18 @@ def active_sampling_loop(
         return (mn - pad * span, mx + pad * span)
 
     for it in range(n_iter):
-        # M2+M3 fused: one narrow mapInPandas pass over the pool carrying
+        # M2+M3 fused: one narrow pass over the pool carrying
         # features+truth through — no groupBy shuffle, no join-back
         # (predict_ensemble + ensemble_stats remain the general path).
+        # For the poly family it is a Catalyst projection (no Python
+        # worker); the mlp family scores in an Arrow pandas UDF.
         # ``localCheckpoint(eager=True)`` both MATERIALIZES the pass
         # (one clean execution — the fanned-out consumers below all
         # read stored blocks, no racy cold-cache recompute) and
         # TRUNCATES lineage to a LogicalRDD, so every downstream frame
         # this iteration builds analyzes a two-node plan instead of the
-        # deep Arrow-inference tree (measured: ~2× faster per-iteration
-        # plan construction). Blocks are reclaimed by the
+        # scoring tree (measured with the Arrow scorer: ~2× faster
+        # per-iteration plan construction). Blocks are reclaimed by the
         # ContextCleaner when the frame goes out of scope at the next
         # iteration — the same discipline train/pool already use.
         #
@@ -365,10 +365,10 @@ def active_sampling_loop(
                         F.lit("us_lw").alias("__explorer"))
             )
         if "us_lgw" in acq_list:
-            # M5 producer fused with the carry columns (one extra
-            # narrow mapInPandas pass over candidates, no join), then
-            # pdf + its spline derivative interpolated at the mean
-            # (core/likelihood.py:61-78).
+            # M5 producer fused with the carry columns (the analytic
+            # jac/hess as one more projection over the candidates, no
+            # join), then pdf + its spline derivative interpolated at
+            # the mean (core/likelihood.py:61-78).
             jh = ensemble_jac_hess(
                 candidates, thetas, feature_cols, id_col=id_col,
                 carry_cols=[*feature_cols, y_col, "y_mean", "y_var"],

@@ -319,7 +319,9 @@ def predict_ensemble_stats_mlp(
     """M2+M3 fused for the MLP family: one exchange-free
     ``mapInPandas`` pass computes every member's forward pass and the
     mean/population-variance reduction (A5/A6), carrying point columns
-    through — identical plan shape to the poly ``predict_ensemble_stats``."""
+    through. The poly ``predict_ensemble_stats`` is the same narrow
+    pass as a Catalyst projection; this family's forward pass stays in
+    Python."""
     import pandas as pd
 
     f_cols = list(feature_cols)

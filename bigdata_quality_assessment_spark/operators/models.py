@@ -1,37 +1,45 @@
 """M1/M2/M5: ensemble training, batch inference, and Jacobian/Hessian
 production (SURVEY.md §2.8).
 
-Reference: ``UQ_NN`` (/root/reference/core/ensemble_model.py:30-217)
-trains N Keras MLPs sequentially and predicts/differentiates them over
-the full candidate pool. The Spark-first re-expression decouples the
-two halves:
+Reference: ``UQ_NN`` (core/ensemble_model.py:30-217) trains N Keras
+MLPs sequentially and predicts/differentiates them over the full
+candidate pool. The Spark-first re-expression decouples the two
+halves:
 
   * TRAINING (M1/M4) happens on the distilled training set, which is
     ≤ a few hundred rows BY DESIGN (that is the whole point of the
-    tool) — so each ensemble member trains inside one
-    ``applyInPandas`` group keyed by ``model_id``. N members train in
-    parallel across executors; each sees the full (tiny) training set.
+    tool) — so it is collected to the driver in one Arrow job and
+    each member is a closed-form ridge solve there
+    (``fit_poly_ensemble``, the same helper the active loop's retrain
+    calls). Parameters, not data, go back to the cluster.
   * INFERENCE (M2) and gradients (M5) run over the FULL pool — the
-    100 TB axis — as ``mapInPandas`` with Arrow batches, one pass,
-    embarrassingly parallel. Models ride to the executors as broadcast
-    parameter vectors, loaded once per worker.
+    100 TB axis — as Catalyst projections: the member parameters
+    unroll into literals, so the scoring pass is whole-stage codegen
+    with no Python worker, no Arrow transport and no exchange.
 
 TensorFlow is NOT required: the default member model is a seeded
 polynomial ridge regression (closed-form normal-equation fit) whose
 predictions, Jacobians, and Hessians are exact analytic expressions —
 giving every downstream operator (A5/A6, P14-P16) a deterministic,
-oracle-checkable producer. A Keras path can be slotted in by passing a
-different ``fit_fn``/``predict_fn`` pair; the engine only consumes the
+oracle-checkable producer. The MLP family (operators/mlp.py) keeps
+its Arrow pandas-UDF scorer behind the same
 ``predictions(point_id, model_id, y_pred)`` contract
 (core/ensemble_model.py:59-68).
+
+Evaluation order is part of the contract: a member is the
+left-associative sum ``θ0 + θ1·Φ1 + … + θm·Φm`` over ``_poly_terms``,
+the ensemble mean ``((p0 + p1) + …) / K`` and the variance
+``Σ_k (p_k − m)·(p_k − m) / K`` in member order — the operations
+``np.mean``/``np.var(ddof=0)`` perform over the member axis. Neither
+numpy's elementwise kernels nor the JVM contract to FMA, so
+``predict_poly`` and the Catalyst scorers agree bit for bit.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import reduce
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # --------------------------------------------------------------------
@@ -42,18 +50,31 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------------
 
 
+def _poly_terms(xs, one=1.0, degree: int = 2):
+    """Φ(x) in the one evaluation order ``[1, x_i…, x_i·x_j (i ≤ j)…]``
+    over numpy columns or Spark Columns alike."""
+    yield one
+    yield from xs
+    if degree >= 2:
+        for i, a in enumerate(xs):
+            for b in xs[i:]:
+                yield a * b
+
+
 def _poly_features(X, degree: int = 2):
     import numpy as np
 
-    n, d = X.shape
-    cols = [np.ones(n)]
-    for i in range(d):
-        cols.append(X[:, i])
-    if degree >= 2:
-        for i in range(d):
-            for j in range(i, d):
-                cols.append(X[:, i] * X[:, j])
-    return np.column_stack(cols)
+    xs = [X[:, i] for i in range(X.shape[1])]
+    return np.column_stack(list(_poly_terms(xs, np.ones(len(X)), degree)))
+
+
+def _poly_member(theta, xs, degree: int = 2):
+    """``θ0 + θ1·Φ1 + … + θm·Φm``, summed left to right."""
+    terms = _poly_terms(xs, degree=degree)
+    acc = float(theta[0]) * next(terms)
+    for t, phi in zip(theta[1:], terms):
+        acc = acc + float(t) * phi
+    return acc
 
 
 def fit_poly_member(X, y, model_id: int, degree: int = 2, ridge: float = 1e-6, seed: int = 42):
@@ -69,8 +90,20 @@ def fit_poly_member(X, y, model_id: int, degree: int = 2, ridge: float = 1e-6, s
     return np.linalg.solve(A, b)
 
 
+def fit_poly_ensemble(
+    X, y, n_models: int, degree: int = 2, ridge: float = 1e-6, seed: int = 42
+) -> list[list[float]]:
+    """M1/M4: ``n_models`` members fitted on driver-side arrays — the
+    one fit behind ``train_ensemble`` and the active loop's retrain."""
+    return [
+        fit_poly_member(X, y, mid, degree=degree, ridge=ridge, seed=seed).tolist()
+        for mid in range(n_models)
+    ]
+
+
 def predict_poly(X, theta, degree: int = 2):
-    return _poly_features(X, degree) @ theta
+    """Numpy reference of one member, in the Catalyst scorers' order."""
+    return _poly_member(theta, [X[:, i] for i in range(X.shape[1])], degree)
 
 
 def train_ensemble(
@@ -82,36 +115,39 @@ def train_ensemble(
     seed: int = 42,
     ridge: float = 1e-6,
 ) -> list[list[float]]:
-    """M1: train N members in parallel — one ``applyInPandas`` group
-    per ``model_id``; the (small) training set is replicated across
-    members with a broadcast cross join, each group fits independently
-    and returns its parameter vector.
+    """M1: one Arrow collect of ``train`` (features, then target, in
+    partition order), then ``fit_poly_ensemble`` on the driver.
 
-    Returns the list of parameter vectors (driver-side; the model is
-    deliberately tiny — parameters, not data, cross the boundary).
-    """
-    spark = train.sparkSession
-    members = spark.range(n_models).select(F.col("id").cast("int").alias("model_id"))
-    replicated = train.select(*feature_cols, target_col).crossJoin(F.broadcast(members))
+    Returns the list of parameter vectors. The training set is small
+    by design; the driver holds it once, where a per-member executor
+    fit would replicate it ``n_models`` times."""
+    import numpy as np
 
-    schema = "model_id INT, theta ARRAY<DOUBLE>"
-
-    def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        mid = int(pdf["model_id"].iloc[0])
-        X = pdf[feature_cols].to_numpy(dtype="float64")
-        y = pdf[target_col].to_numpy(dtype="float64")
-        theta = fit_poly_member(X, y, mid, degree=degree, ridge=ridge, seed=seed)
-        return pd.DataFrame({"model_id": [mid], "theta": [list(theta)]})
-
-    rows = (
-        replicated.groupBy("model_id")
-        .applyInPandas(fit_group, schema)
-        .orderBy("model_id")
-        .collect()
+    cols = [*feature_cols, target_col]
+    table = train.select(
+        *[F.col(c).cast("double").alias(c) for c in cols]
+    ).toArrow()
+    if table.num_rows == 0:
+        raise ValueError("train_ensemble: the training frame is empty")
+    XY = np.column_stack([table.column(i).to_numpy() for i in range(len(cols))])
+    return fit_poly_ensemble(
+        XY[:, :-1], XY[:, -1], n_models, degree=degree, ridge=ridge, seed=seed
     )
-    return [list(r["theta"]) for r in rows]
+
+
+def _features(thetas, feature_cols: list[str]) -> list[Column]:
+    if not thetas:
+        raise ValueError("thetas is empty: an ensemble needs at least one member")
+    return [F.col(c).cast("double") for c in feature_cols]
+
+
+def _out_cols(id_col: str, carry_cols: list[str] | None) -> list[Column]:
+    """``id BIGINT`` then the carry columns as ``DOUBLE`` (id excluded)."""
+    carry = [c for c in (carry_cols or []) if c != id_col]
+    return [
+        F.col(id_col).cast("bigint").alias(id_col),
+        *[F.col(c).cast("double").alias(c) for c in carry],
+    ]
 
 
 def predict_ensemble(
@@ -121,36 +157,18 @@ def predict_ensemble(
     id_col: str = "point_id",
     degree: int = 2,
 ) -> DataFrame:
-    """M2: ensemble batch inference over the full pool as
-    ``mapInPandas`` — one Arrow-batched pass producing the long-format
-    ``predictions(point_id, model_id, y_pred)`` table
-    (core/ensemble_model.py:59-65). Parameters are closure-captured
-    (tiny), evaluated vectorized per batch; each input batch yields
-    N×batch rows with zero shuffle."""
-    import numpy as np
-
-    theta_arr = [np.asarray(t, dtype="float64") for t in thetas]
-    f_cols = list(feature_cols)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            X = pdf[f_cols].to_numpy(dtype="float64")
-            ids = pdf[id_col].to_numpy()
-            out = []
-            for mid, th in enumerate(theta_arr):
-                out.append(
-                    pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "model_id": mid,
-                            "y_pred": predict_poly(X, th, degree),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    schema = f"{id_col} BIGINT, model_id INT, y_pred DOUBLE"
-    return points.select(id_col, *f_cols).mapInPandas(score, schema)
+    """M2: ensemble batch inference over the full pool in the
+    long-format ``predictions(point_id, model_id, y_pred)`` table
+    (core/ensemble_model.py:59-65): one narrow ``explode`` of a
+    per-member struct array — K rows per point, zero shuffle."""
+    xs = _features(thetas, feature_cols)
+    members = F.array(*[
+        F.struct(F.lit(k).alias("model_id"), p.alias("y_pred"))
+        for k, p in enumerate(_poly_member(th, xs, degree) for th in thetas)
+    ])
+    return points.select(
+        *_out_cols(id_col, None), F.explode(members).alias("__m")
+    ).select(id_col, "__m.model_id", "__m.y_pred")
 
 
 def ensemble_jac_hess(
@@ -166,57 +184,34 @@ def ensemble_jac_hess(
     producer for P16 ``us_lgw`` (core/ensemble_model.py:70-217).
 
     For the polynomial member model both derivatives are analytic:
-    ŷ = θ₀ + Σθᵢxᵢ + Σθᵢⱼxᵢxⱼ ⇒ ∂ŷ/∂xᵢ and ∂²ŷ/∂xᵢ∂xⱼ are linear /
-    constant in x. One ``mapInPandas`` pass, averaged over members —
-    a single code path (the reference's batched jac-only branch is a
-    latent dead path we do not replicate,
-    core/ensemble_model.py:195)."""
-    import numpy as np
-
-    d = len(feature_cols)
-    theta_arr = [np.asarray(t, dtype="float64") for t in thetas]
-    f_cols = list(feature_cols)
-    carry = [c for c in (carry_cols or []) if c != id_col]
-    in_cols = [id_col, *dict.fromkeys([*f_cols, *carry])]
-
-    # index maps for the quadratic terms laid out by _poly_features
-    quad_idx = {}
-    pos = 1 + d
+    ŷ = θ₀ + Σθᵢxᵢ + Σθᵢⱼxᵢxⱼ ⇒ ∂ŷ/∂xᵢ is linear in x and ∂²ŷ/∂xᵢ∂xⱼ
+    a constant, so the Hessian is one literal and the Jacobian one
+    projection, averaged over members — a single code path (the
+    reference's batched jac-only branch is a latent dead path we do
+    not replicate, core/ensemble_model.py:195). A point with a NULL
+    feature has a NULL Jacobian."""
+    xs = _features(thetas, feature_cols)
+    d, k = len(xs), len(thetas)
+    quad = {}  # (i, j), i ≤ j → θ index of x_i·x_j in _poly_terms order
     for i in range(d):
         for j in range(i, d):
-            quad_idx[(i, j)] = pos
-            pos += 1
-
-    def grads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            X = pdf[f_cols].to_numpy(dtype="float64")
-            n = len(pdf)
-            jac = np.zeros((n, d))
-            hess = np.zeros((n, d, d))
-            for th in theta_arr:
-                for i in range(d):
-                    g = np.full(n, th[1 + i])
-                    for j in range(d):
-                        a, b = min(i, j), max(i, j)
-                        coef = th[quad_idx[(a, b)]]
-                        factor = 2.0 if i == j else 1.0
-                        g = g + factor * coef * X[:, j]
-                        hess[:, i, j] += factor * coef
-                    jac[:, i] += g
-            jac /= len(theta_arr)
-            hess /= len(theta_arr)
-            out = {id_col: pdf[id_col].to_numpy()}
-            for c in carry:
-                out[c] = pdf[c].to_numpy()
-            out["jac"] = [list(row) for row in jac]
-            out["hess"] = [[list(r) for r in h] for h in hess]
-            yield pd.DataFrame(out)
-
-    carry_schema = "".join(f", {c} DOUBLE" for c in carry)
-    schema = (
-        f"{id_col} BIGINT{carry_schema}, jac ARRAY<DOUBLE>, hess ARRAY<ARRAY<DOUBLE>>"
+            quad[i, j] = 1 + d + len(quad)
+    jac = [0.0] * d
+    hess = [[0.0] * d for _ in range(d)]
+    for th in thetas:
+        for i in range(d):
+            g = float(th[1 + i])
+            for j in range(d if degree >= 2 else 0):
+                fc = (2.0 if i == j else 1.0) * float(th[quad[min(i, j), max(i, j)]])
+                g = g + fc * xs[j]
+                hess[i][j] += fc
+            jac[i] = jac[i] + g
+    present = reduce(lambda a, b: a & b, [x.isNotNull() for x in xs])
+    return points.select(
+        *_out_cols(id_col, carry_cols),
+        F.when(present, F.array(*[F.lit(j / k) for j in jac])).alias("jac"),
+        F.array(*[F.array(*[F.lit(h / k) for h in row]) for row in hess]).alias("hess"),
     )
-    return points.select(*in_cols).mapInPandas(grads, schema)
 
 
 def stub_predictions_sql_expr(n_models: int) -> str:
@@ -310,34 +305,23 @@ def predict_ensemble_stats(
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
     """M2+M3 fused: per-point ensemble mean and population variance in
-    the SAME ``mapInPandas`` pass that evaluates the members — zero
-    shuffle, zero join.
+    the SAME projection that evaluates the members — zero shuffle,
+    zero join.
 
     The long-format ``predict_ensemble`` → ``ensemble_stats`` path is
     the general contract (any model family, any reducer), but it costs
     a groupBy shuffle of the predictions table plus a join back to the
     pool. When the consumer only needs mean/var (the §3.1 scoring pass
     — by far the hottest path at scale), fusing the reduction into the
-    scorer turns the whole M2→A5/A6 stage into one narrow map pass
-    over the pool: at 1000 executors there is no exchange at all."""
-    import numpy as np
-
-    theta_arr = [np.asarray(t, dtype="float64") for t in thetas]
-    f_cols = list(feature_cols)
-    carry = [c for c in (carry_cols or []) if c != id_col]
-    in_cols = [id_col, *dict.fromkeys([*f_cols, *carry])]
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            X = pdf[f_cols].to_numpy(dtype="float64")
-            preds = np.stack([predict_poly(X, th, degree) for th in theta_arr])
-            out = {id_col: pdf[id_col].to_numpy()}
-            for c in carry:
-                out[c] = pdf[c].to_numpy()
-            out["y_mean"] = preds.mean(axis=0)
-            out["y_var"] = preds.var(axis=0)  # ddof=0, matching np.var/A6
-            yield pd.DataFrame(out)
-
-    carry_schema = "".join(f", {c} DOUBLE" for c in carry)
-    schema = f"{id_col} BIGINT{carry_schema}, y_mean DOUBLE, y_var DOUBLE"
-    return points.select(*in_cols).mapInPandas(score, schema)
+    scorer turns the whole M2→A5/A6 stage into one narrow codegen
+    projection over the pool: at 1000 executors there is no exchange
+    at all, and no row leaves the JVM. A point with a NULL feature
+    scores NULL."""
+    xs = _features(thetas, feature_cols)
+    preds = [_poly_member(th, xs, degree) for th in thetas]
+    k = len(preds)
+    mean = reduce(lambda a, b: a + b, preds) / k
+    var = reduce(lambda a, b: a + b, [(p - mean) * (p - mean) for p in preds]) / k
+    return points.select(
+        *_out_cols(id_col, carry_cols), mean.alias("y_mean"), var.alias("y_var")
+    )

@@ -1238,12 +1238,12 @@ def q_w1a4u2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # literals (multiples of 2⁻³) and the grid features quantized to
 # multiples of 2⁻⁶ (floor(x·64)/64 — exact in both engines), every
 # Φ-term product and partial sum in ŷ = Φ(x)·θ is exactly
-# representable, so the numpy dgemv inside mapInPandas and the SQL
+# representable, so the Catalyst member projection and the DuckDB
 # polynomial agree BIT-EXACTLY regardless of accumulation order.
 # M1 TRAINING stays oracle-graded end-to-end through m4_loop_metrics'
 # committed goldens (the loop trains real members every iteration)
-# and numpy-golden pytest; this entry grades the M2 Arrow inference
-# path, the M3 reduction, and the M5 analytic Jacobian/Hessian.
+# and numpy-golden pytest; this entry grades the M2 Catalyst
+# inference, the M3 reduction, and the M5 analytic Jacobian/Hessian.
 # Φ order: [1, x1, x2, x1², x1·x2, x2²].
 _M2_THETAS = [
     [0.5, 1.25, -0.75, 0.25, 0.5, -0.25],
@@ -1285,11 +1285,11 @@ def _m2m5_sql() -> str:
 
 @_register("m2_m5_ensemble_udfs", _m2m5_sql())
 def q_m2m5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2 mapInPandas ensemble inference → M3 mean/var reduction,
-    joined with the M5 analytic Jacobian/Hessian producer — ORACLE-
-    GRADED with pinned dyadic member thetas (see _M2_THETAS note: the
-    dyadic lattice makes the Arrow/numpy matmul bit-exact against the
-    SQL polynomial; M1 training keeps its applyInPandas grading inside
+    """M2 Catalyst ensemble inference → M3 mean/var reduction, joined
+    with the M5 analytic Jacobian/Hessian producer — ORACLE-GRADED with
+    pinned dyadic member thetas (see _M2_THETAS note: the dyadic
+    lattice makes the member projection bit-exact against the SQL
+    polynomial; M1's driver fit keeps its grading inside
     m4_loop_metrics plus numpy-golden pytest). The graded plan is the
     production inference plan — only the theta source differs."""
     pts = grid_points_2d(spark, _M2_GRID_N).select(
