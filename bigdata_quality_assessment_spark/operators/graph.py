@@ -16,9 +16,10 @@ Scale shape — two tiers, auto-selected by edge count:
   tiny fraction of the corpus, so ship it to ONE executor task and run
   vectorized numpy min-label propagation with pointer jumping (a
   whole-array union-find; O(E) memory, O(E·log D) work, zero driver
-  collect). The edge frame sits behind a lazy checkpoint, so the
-  sizing ``count()`` materializes the (possibly expensive) verify
-  subtree exactly once and both the sizing and the closure reuse it.
+  collect). The edge frame sits behind an eager checkpoint whose job
+  also counts the edges (an ``Observation``), so the (possibly
+  expensive) verify subtree runs exactly once and the sizing costs no
+  query of its own.
 * **iterative** (adversarial corpora whose duplicate graph is itself
   data-sized): the ALTERNATING large-star/small-star algorithm of
   Kiveris et al., "Connected Components in MapReduce and Beyond"
@@ -39,7 +40,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Above this many directed edges the single-task tier would concentrate
@@ -96,8 +97,8 @@ def connected_components(
     minimum id in its connected component. Returns ``(id, component)``
     for every vertex that appears in at least one edge.
 
-    ``strategy``: ``"auto"`` (count the edge list — materialized once
-    behind a lazy barrier — and pick), ``"single"`` (one-task numpy
+    ``strategy``: ``"auto"`` (count the edge list while an eager
+    barrier materializes it, and pick), ``"single"`` (one-task numpy
     closure), or ``"iterative"`` (distributed min-label propagation +
     pointer jumping, early-exit on fixpoint).
 
@@ -118,35 +119,41 @@ def connected_components(
         # a null endpoint would surface as an opaque executor-side numpy
         # failure in the single-task tier; drop it here on the slim frame
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .localCheckpoint(eager=False)
     )
-    integral = edges.schema["src"].dataType.simpleString() in (
-        "tinyint", "smallint", "int", "bigint"
-    )
-    if not integral:
+    id_type = edges.schema["src"].dataType.simpleString()
+    if id_type not in ("tinyint", "smallint", "int", "bigint"):
         if strategy == "single":
             # the single-task tier is an int64 numpy closure; silently
             # handing back a different algorithm would defeat an
             # explicit tier request (round-14, ADVICE)
             raise ValueError(
                 "strategy='single' requires integral ids (the single-task "
-                "tier is an int64 numpy closure); got "
-                f"{edges.schema['src'].dataType.simpleString()} ids — use "
+                f"tier is an int64 numpy closure); got {id_type} ids — use "
                 "strategy='auto' or 'iterative'"
             )
         strategy = "iterative"
-    if strategy == "auto":
-        # tier on DISTINCT undirected edges so dup-heavy pair lists
-        # (e.g. both (a,b) and (b,a) from a symmetric verify join) don't
-        # spill small graphs into the slower iterative tier; the count
-        # also materializes the lazy barrier exactly once.
-        n_edges = (
-            edges.select(
-                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-            )
-            .distinct()
-            .count()
+    if strategy != "auto":
+        edges = edges.localCheckpoint(eager=False)
+    else:
+        # the raw edge count rides the job that materializes the barrier;
+        # the distinct count (the tier rule: dup-heavy pair lists, e.g.
+        # both (a,b) and (b,a) from a symmetric verify join, must not
+        # spill small graphs into the slower iterative tier) runs only
+        # when the raw count is over the threshold — it is never larger
+        obs = Observation()
+        edges = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
         )
+        n_edges = obs.get["n"]
+        if n_edges > small_edge_threshold:
+            n_edges = (
+                edges.select(
+                    F.least("src", "dst").alias("u"),
+                    F.greatest("src", "dst").alias("v"),
+                )
+                .distinct()
+                .count()
+            )
         strategy = "single" if n_edges <= small_edge_threshold else "iterative"
     if strategy == "single":
         return _cc_single_task(edges)

@@ -547,24 +547,35 @@ def doc_fingerprints(
 
 
 def _shingle_expr(t: Column, k: int, mode: str) -> Column:
-    """Array of k-shingles of ``t`` — EMPTY when the doc is shorter
-    than k (``F.sequence(1, 0)`` would count DOWN, so the upper bound
-    is guarded and the whole expression gated on length)."""
+    """Array of distinct k-shingles of ``t`` in first-occurrence order
+    — EMPTY when the doc is shorter than k or NULL.
+
+    Word mode builds every shingle from k slices of one token array:
+    shingle i is the i-th element of the aligned slices
+    ``toks[j : j+n-k+1]`` (j < k), zipped and joined by a space, so the
+    split runs a fixed number of times per row (per slice), never once
+    per shingle as a ``slice`` inside a per-shingle lambda would
+    (Catalyst does not CSE across a lambda boundary). Char mode takes
+    ``substring(t, i, k)`` per position (``F.sequence(1, 0)`` would
+    count DOWN, so the upper bound is guarded and the whole expression
+    gated on length)."""
     if mode == "word":
         toks = tokens(t)
-        n = F.size(toks)
+        # slice length 0 (doc shorter than k) yields empty slices and so
+        # no shingle; NULL text propagates to the coalesce
+        m = F.greatest(F.size(toks) - k + 1, F.lit(0))
+        zipped = F.arrays_zip(*[F.slice(toks, j + 1, m) for j in range(k)])
         body = F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+            zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(k)])
         )
-    elif mode == "char":
-        n = F.length(t)
-        body = F.transform(
-            F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
-            lambda i: F.substring(t, i, k),
-        )
-    else:
+        return F.coalesce(F.array_distinct(body), F.array().cast("array<string>"))
+    if mode != "char":
         raise ValueError(f"mode must be 'word' or 'char', got {mode!r}")
+    n = F.length(t)
+    body = F.transform(
+        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
+        lambda i: F.substring(t, i, k),
+    )
     return F.when(n >= k, F.array_distinct(body)).otherwise(
         F.array().cast("array<string>")
     )
@@ -673,10 +684,13 @@ def minhash_signatures(
     (expensive) string hash is computed ONCE via explode, then the
     n_hashes lanes are cheap integer re-hashes inside one map-side-
     combined aggregation (n_hashes ``min`` columns). A nested
-    higher-order-function formulation re-evaluates the shingle array
-    per lane — Catalyst does not CSE across lambda boundaries — which
-    is n_hashes× the string work; the explode+groupBy shuffle moves
-    only pre-aggregated (doc, 128 mins) rows and parallelizes cleanly.
+    higher-order-function formulation over THIS (unmaterialized)
+    shingle array re-evaluates it per lane: CollapseProject inlines
+    the array into the lane lambda and Catalyst does not CSE across
+    lambda boundaries — n_hashes× the string work (measured 22.9 s
+    against 2.2 s on 200 docs, 4 cores). Over a stored array the nested form is
+    the cheaper one; :func:`near_dedup_minhash` checkpoints its hash
+    arrays first and signs them that way.
 
     Docs shorter than k shingle into nothing and drop out — they
     cannot be near-duplicates, and an all-null signature would collide
@@ -797,12 +811,13 @@ def near_dedup_minhash(
     — for edges (1,3),(2,3) doc 2 would survive although it is in doc
     1's cluster.
 
-    Scale shape: signatures are one narrow pass; the bucket join's
-    fan-out is bounded by band collision rates; verification touches
-    candidate pairs only (each a set intersection of two shingle
-    sets, computed by re-joining the shingle table on the pair list);
-    the closure iterates over the duplicates-only edge list (see
-    operators/graph.py).
+    Scale shape: one row per document throughout. The shingling pass
+    stores each document's distinct shingle hashes as one array; the
+    signature is a projection over that array (no shuffle); the bucket
+    join's fan-out is bounded by band collision rates; verification
+    touches candidate pairs only (each one ``array_intersect`` of two
+    stored hash arrays); the closure iterates over the duplicates-only
+    edge list (see operators/graph.py).
 
     ``lane_params`` pins the signature family for the oracle-graded
     variant (same pattern as the pinned ANN planes): shingles hash via
@@ -820,83 +835,65 @@ def near_dedup_minhash(
     result, and its checkpoint blocks stay in the block store until
     driver GC lets Spark's ContextCleaner release them."""
     from bigdata_quality_assessment_spark.operators.graph import duplicate_drop_ids
-    # ONE shingling pass feeds everything. Signatures, set sizes, and
-    # BOTH verify sides all need the per-doc distinct shingle hashes;
-    # as separate subtrees each reference re-executes the (expensive:
-    # tokenize + k-gram + hash) shingling scan — four corpus scans per
-    # action, and the dominant noise amplifier in the bench. The lazy
-    # barrier stores the narrow ``(doc_id, hash BIGINT)`` long format
-    # (16 bytes/shingle, MEMORY_AND_DISK — comparable to the text it
-    # came from and far cheaper than 4× regex work at 100 TB); every
-    # consumer then reads stored longs. Verification intersects HASHED
-    # shingles, not strings: identical counts up to 64-bit xxhash64
-    # collisions (P ≈ |sh_a|·|sh_b|/2⁶⁴ per pair — immaterial against
-    # an 0.8 Jaccard threshold), with long join keys instead of string
-    # shingles on the wire. The string-exact path remains
-    # ``jaccard_pairs`` (the SQL oracle).
+    # ONE shingling pass feeds everything: the signatures and BOTH
+    # verify sides read the per-doc distinct shingle hashes, stored as
+    # ``(doc_id, array<bigint>)`` — one row per document, 8 bytes per
+    # shingle. Verification intersects HASHED shingles, not strings:
+    # identical counts up to 64-bit xxhash64 collisions (P ≈
+    # |sh_a|·|sh_b|/2⁶⁴ per pair — immaterial against an 0.8 Jaccard
+    # threshold). The string-exact path remains ``jaccard_pairs`` (the
+    # SQL oracle). Docs shorter than k have no shingle and drop out.
+    #
+    # EAGER, and it must stay a barrier: the signature's lane lambda
+    # reads ``__hs``, and over an unmaterialized projection Catalyst's
+    # CollapseProject inlines the whole tokenize+shingle+hash array
+    # into that lambda, which then re-evaluates it once per lane
+    # (minhash_signatures written that way: 22.9 s against 2.2 s for
+    # 200 docs on 4 cores; tests/test_plan_audit.py guards the plan). Eager rather than
+    # lazy (round-16): several subtrees of the first action read this
+    # frame, and a lazy barrier's cold blocks race — each concurrent
+    # reader recomputes the scan (sf10 swung 41.7→186 s across
+    # identical runs). The eager checkpoint runs the scan exactly once.
     sh = _shingle_expr(F.col(text_col), k, mode)
     shingle_hash = _md5_48 if lane_params is not None else F.xxhash64
-    # EAGER, not lazy (round-16): the first action over this operator
-    # is one big job (the closure's edge-sizing count) in which FIVE
-    # subtrees read this barrier — the fold feeding both band-join
-    # sides, the sizes aggregate, and both verify sides. A lazy
-    # barrier has cache semantics per partition, so those subtrees'
-    # concurrent stages RACE on the cold blocks and each recomputes
-    # the shingle+tokenize+hash scan it finds unmaterialized — at sf10
-    # the measured end-to-end swung 41.7→186 s across identical runs
-    # while the same stages off a pre-materialized table summed to
-    # ~28 s. The eager checkpoint runs the scan exactly once at call
-    # time; every consumer then reads stored rows (same discipline
-    # loop.py documents for its scored pool).
-    hashes = ensure_min_parallelism(docs.select(id_col, text_col)).select(
-        id_col, F.explode(F.transform(sh, lambda s: shingle_hash(s))).alias("__h")
-    ).localCheckpoint(eager=True)
-    if lane_params is not None:
-        n_hashes = len(lane_params)
-        lanes = [
-            F.min(
-                (F.lit(a) * F.col("__h").bitwiseXOR(F.lit(c)) + F.lit(b))
-                % F.lit(MINHASH_P)
-            ).alias(f"__s{i}")
-            for i, (a, b, c) in enumerate(lane_params)
-        ]
-    else:
-        lanes = [
-            F.min(F.xxhash64(F.lit(i), F.col("__h"))).alias(f"__s{i}")
-            for i in range(n_hashes)
-        ]
-    sigs = (
-        hashes.groupBy(id_col)
-        .agg(*lanes)
+    hashes = (
+        ensure_min_parallelism(docs.select(id_col, text_col))
         .select(
             id_col,
-            F.array(*[F.col(f"__s{i}") for i in range(n_hashes)]).alias("sig"),
+            F.array_distinct(F.transform(sh, lambda s: shingle_hash(s))).alias("__hs"),
         )
+        .localCheckpoint(eager=True)
+        # after the barrier: a filter above the projection would be
+        # pushed below it with ``__hs`` inlined, shingling every doc twice
+        .filter(F.size("__hs") > 0)
     )
+    if lane_params is not None:
+        lanes = F.array(*[
+            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"), F.lit(c).alias("c"))
+            for a, b, c in lane_params
+        ])
+
+        def lane_min(p):
+            return F.array_min(F.transform("__hs", lambda h: (
+                p["a"] * h.bitwiseXOR(p["c"]) + p["b"]) % F.lit(MINHASH_P)))
+    else:
+        lanes = F.sequence(F.lit(0), F.lit(n_hashes - 1))
+
+        def lane_min(i):
+            return F.array_min(F.transform("__hs", lambda h: F.xxhash64(i, h)))
+
+    sigs = hashes.select(id_col, F.transform(lanes, lane_min).alias("sig"))
     cands = minhash_lsh_candidates(sigs, bands, id_col, materialize=True)
-    # separate light count agg — the sizes path must not re-run the
-    # 128-lane min aggregation it doesn't need
-    sizes = hashes.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    # Verify only candidate pairs — and keep every intermediate bounded
-    # by |candidates|, not by hot-shingle fan-out: expand each candidate
-    # pair by doc_a's shingles, then semi-match doc_b's. Joining the two
-    # shingle tables first (then filtering to candidates) explodes on
-    # corpora with skewed shingle frequencies long before the filter.
-    a = hashes.select(F.col(id_col).alias("doc_a"), "__h")
-    b = hashes.select(F.col(id_col).alias("doc_b"), "__h")
-    inter = (
-        cands.join(a, "doc_a")
-        .join(b, ["doc_b", "__h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+    a = hashes.select(F.col(id_col).alias("doc_a"), F.col("__hs").alias("__ha"))
+    b = hashes.select(F.col(id_col).alias("doc_b"), F.col("__hs").alias("__hb"))
+    n_common = F.size(F.array_intersect("__ha", "__hb"))
     verified = (
-        inter.join(sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
+        cands.join(a, "doc_a")
+        .join(b, "doc_b")
         .filter(
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            >= min_jaccard
+            n_common / (F.size("__ha") + F.size("__hb") - n_common) >= min_jaccard
         )
+        .select("doc_a", "doc_b")
     )
     if cluster:
         drop_ids = duplicate_drop_ids(verified).select(F.col("id").alias(id_col))
@@ -935,9 +932,10 @@ def simhash(
 
     Same explode+aggregate shape as ``minhash_signatures``: each
     shingle is hashed once, the bit-votes are map-side-combined sums
-    (an n_bits-fold array ``aggregate`` would re-evaluate the
-    shingle+hash array per bit — Catalyst does not CSE across lambda
-    boundaries)."""
+    (an n_bits-fold array ``aggregate`` over the unmaterialized
+    shingle+hash array would re-evaluate it per bit — CollapseProject
+    inlines it into the lambda and Catalyst does not CSE across lambda
+    boundaries; see ``minhash_signatures``)."""
     n_bits = _simhash_bits(hash_fn)
     hfn = _md5_48 if hash_fn == "md5_48" else F.xxhash64
     shingles = _shingle_expr(F.col(text_col), k, mode)

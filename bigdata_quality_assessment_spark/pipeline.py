@@ -14,8 +14,9 @@ per-stage row-count report for the curation ledger every real pipeline
 has to produce.
 
 Scale notes: stages communicate by doc_id frames (anti-joins), never
-by re-materialized text; the report's counts are the only extra
-actions and each runs on the already-computed stage output. The whole
+by re-materialized text; the report's counts are ``Observation``s on
+the jobs that materialize the stage barriers, not queries of their
+own (see ``_stage_barrier``). The whole
 pipeline is restartable per stage by landing each stage's survivor ids
 with ``sources.io.write_lake``.
 """
@@ -24,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from bigdata_quality_assessment_spark.operators.select import (
@@ -109,6 +110,23 @@ class CurationConfig:
     seed: int = 42
 
 
+def _stage_barrier(
+    df: DataFrame, name: str, ledger: list[tuple[str, int]] | None
+) -> DataFrame:
+    """Barrier at a curation stage boundary, so every downstream stage
+    consumes stored rows instead of re-running the prefix chain (the
+    multi-reference pathology, PLANS.md). With a ``ledger`` the barrier
+    is EAGER and its row count rides the materializing job as an
+    ``Observation``, appended as ``(name, rows)`` — the report costs no
+    query of its own. Without one it is lazy and runs no count."""
+    if ledger is None:
+        return df.localCheckpoint(eager=False)
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    ledger.append((name, obs.get["rows"]))
+    return df
+
+
 def curate(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
@@ -122,25 +140,20 @@ def curate(
 
     ``benchmark`` enables the decontamination stage. Stages that are
     switched off in the config are skipped entirely (no pass, no
-    report row beyond 'input'). ``with_report=False`` skips the
-    per-stage counts (one ACTION each — they materialize the stage
-    barriers eagerly); the returned report is then None and no stage
+    report row beyond 'input'). With the report, each stage barrier is
+    eager and counts its rows in the job that materializes it, so the
+    stages run at call time. ``with_report=False`` keeps the barriers
+    lazy and count-free; the returned report is then None and no stage
     output materializes until the caller's first action. (Construction
     is not job-FREE: under AQE each lazy stage barrier compiles its
     plan and runs its shuffle-map stages at localCheckpoint call time —
     bounded work per stage, but not zero; what is guaranteed is that
     no stage's rows are stored and no count runs.)"""
     cfg = config or CurationConfig()
-    stages: list[tuple[str, DataFrame]] = []
+    ledger: list[tuple[str, int]] | None = [] if with_report else None
 
     def stage(name: str, df_: DataFrame) -> DataFrame:
-        # lazy barrier per stage boundary: the report count
-        # materializes the stage ONCE and every downstream stage
-        # consumes the materialized rows instead of re-running the
-        # whole prefix chain (the multi-reference pathology, PLANS.md)
-        df_ = df_.localCheckpoint(eager=False)
-        stages.append((name, df_))
-        return df_
+        return _stage_barrier(df_, name, ledger)
 
     cur = stage("input", docs)
     if cfg.strip_markup:
@@ -322,12 +335,9 @@ def curate(
             ),
         )
 
-    if not with_report:
+    if ledger is None:
         return cur, None
-    spark = docs.sparkSession
-    report_rows = [(name, df_.count()) for name, df_ in stages]
-    report = local_frame(spark, report_rows, "stage string, rows long")
-    return cur, report
+    return cur, local_frame(docs.sparkSession, ledger, "stage string, rows long")
 
 
 def prepare_training_data(
@@ -619,7 +629,7 @@ def curate_audio(
     projection alone (8 B/row) and the stage's rows re-derive from
     ``media`` via a column-pruned semi-join re-scan — the text
     pipeline's "stages communicate by id frames" doctrine. The report
-    counts run on the id frames (same numbers). Two contract notes:
+    counts ride the id-frame barriers (same numbers). Two contract notes:
     ids must be non-NULL (the lake key: a semi-join never matches a
     NULL id), so NULL-id rows are dropped once, up front, and the
     report then carries a ``non_null_id`` row right after ``input``
@@ -628,11 +638,10 @@ def curate_audio(
     is an expensive COMPUTED frame (not a lake scan) should checkpoint
     it first."""
     cfg = config or AudioCurationConfig()
-    stages: list[tuple[str, DataFrame]] = []
+    ledger: list[tuple[str, int]] | None = [] if with_report else None
 
     def stage(name: str, survivors: DataFrame) -> DataFrame:
-        ids_ = survivors.select(cfg.id_col).localCheckpoint(eager=False)
-        stages.append((name, ids_))
+        ids_ = _stage_barrier(survivors.select(cfg.id_col), name, ledger)
         return media.join(ids_, cfg.id_col, "left_semi")
 
     cur = media.filter(F.col(cfg.id_col).isNotNull())
@@ -718,12 +727,12 @@ def curate_audio(
                 ),
             )
 
-    if not with_report:
+    if ledger is None:
         return cur, None
     n_in, n_ids = media.agg(F.count(F.lit(1)), F.count(cfg.id_col)).first()
     report_rows = [("input", n_in)]
     if n_ids < n_in:
         report_rows.append(("non_null_id", n_ids))
-    report_rows += [(name, df_.count()) for name, df_ in stages]
+    report_rows += ledger
     report = local_frame(media.sparkSession, report_rows, "stage string, rows long")
     return cur, report

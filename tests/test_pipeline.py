@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_quality_assessment_spark.pipeline import CurationConfig, curate
+from bigdata_quality_assessment_spark.sources.textgen import eval_spans, realistic_documents
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -46,6 +47,27 @@ def test_curate_full_ledger(spark, corpus):
     # report order is pipeline order
     order = [r.stage for r in report.collect()]
     assert order == ["input", "exact_dedup", "near_dedup", "decontaminate", "quality_filter"]
+
+
+def test_curate_job_count(spark):
+    """One 200-doc ``realistic_documents`` delivery curated against a
+    benchmark, with the report, runs a pinned number of Spark jobs:
+    the report counts ride the stage barriers' jobs and near-dedup's
+    closure is sized on its edge barrier. A change that adds a job
+    fails."""
+    from test_loop import _jobs
+
+    docs = realistic_documents(spark, 200, seed=5).select(
+        "doc_id", "text", "source"
+    ).localCheckpoint(eager=True)
+    bench = eval_spans(spark, seed=5).select("text").localCheckpoint(eager=True)
+    out = {}
+    jobs = _jobs(spark, lambda: out.update(r=curate(docs, bench, CurationConfig())))
+    assert jobs == 23
+    report = [tuple(r) for r in out["r"][1].collect()]
+    assert report == [
+        ("input", 200), ("exact_dedup", 186), ("near_dedup", 179), ("decontaminate", 177)
+    ]
 
 
 def test_curate_minimal_config(spark, corpus):

@@ -288,3 +288,58 @@ def test_time_rollup_single_scan(t):
     """Expand + single aggregation, no re-scan per level."""
     plan = simple(time_rollup(t["ev"].withColumn("ts", F.col("ts") * 1000), "ts", "value"))
     assert plan.count("FileScan parquet") == 1 and "Expand" in plan
+
+
+def _nodes(tree):
+    """``tree`` and every descendant of a Catalyst tree (a plan or an
+    expression), walked through py4j."""
+    yield tree
+    kids = tree.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+@pytest.mark.parametrize("lanes", ["xxhash64", "lane_params"])
+def test_near_dedup_minhash_lanes_read_a_barrier(t, monkeypatch, lanes):
+    """The signature lanes are higher-order functions over a STORED hash
+    array. Over an unmaterialized projection CollapseProject inlines
+    the tokenize+shingle array into the lane lambda, which re-splits
+    every document once per lane; an explode into one ``min`` column
+    per lane builds an aggregate too wide for whole-stage codegen
+    (``spark.sql.codegen.maxFields`` = 100). Checked on every frame
+    the operator checkpoints and on its result."""
+    from bigdata_quality_assessment_spark.queries import _MINHASH_LANES
+
+    plans = []
+    frame_cls = type(t["docs"])
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().sparkPlan())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    kw = {"lane_params": _MINHASH_LANES} if lanes == "lane_params" else {}
+    out = near_dedup_minhash(t["docs"], k=3, n_hashes=128, bands=16, **kw)
+    plans.append(out._jdf.queryExecution().sparkPlan())
+    split_in_lambda, wide_aggs = [], []
+    for plan in plans:
+        for node in _nodes(plan):
+            if _kind(node) == "HashAggregateExec":
+                n_aggs = node.aggregateExpressions().size()
+                if n_aggs > 100:
+                    wide_aggs.append(n_aggs)
+            exprs = node.expressions()
+            for i in range(exprs.size()):
+                for e in _nodes(exprs.apply(i)):
+                    if _kind(e) == "LambdaFunction" and any(
+                        _kind(x) == "StringSplit" for x in _nodes(e.function())
+                    ):
+                        split_in_lambda.append(e.toString()[:200])
+    assert len(plans) >= 3  # the hash table, the band keys, the result
+    assert not split_in_lambda, split_in_lambda
+    assert not wide_aggs, wide_aggs

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigdata_quality_assessment_spark.operators.text import (
+    _shingle_expr,
     exact_dedup,
     jaccard_pairs,
     language_id,
@@ -21,6 +22,7 @@ from bigdata_quality_assessment_spark.operators.text import (
     shingle_sets,
     simhash,
     text_stats,
+    tokens,
 )
 
 BASE = (
@@ -54,6 +56,43 @@ def test_shingle_sets_match_python(docs):
     pdf = docs.toPandas()
     expect = {(r.doc_id, s) for r in pdf.itertuples() for s in _pyshingles(r.text)}
     assert got == expect
+
+
+def _shingles_per_position(t, k):
+    """The reference word-shingle formulation: one ``slice`` of the
+    token array per shingle position, inside a ``transform`` lambda."""
+    toks = tokens(t)
+    n = F.size(toks)
+    body = F.transform(
+        F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+    )
+    return F.when(n >= k, F.array_distinct(body)).otherwise(
+        F.array().cast("array<string>")
+    )
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 5, 13])
+def test_word_shingles_equal_per_position_formulation(spark, k):
+    texts = [
+        None,
+        "",
+        "one two",  # fewer than k tokens for k >= 3
+        "a  b c",  # double space: an empty token
+        " a b c ",  # leading and trailing space
+        "x y x y x y x y x y x y x y x y",  # repeated k-grams
+        "the quick brown fox jumps over the lazy dog and then the quick brown fox",
+        " ".join(f"w{i % 7}" for i in range(40)),
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    rows = df.select(
+        "id",
+        _shingle_expr(F.col("t"), k, "word").alias("got"),
+        _shingles_per_position(F.col("t"), k).alias("want"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["got"] == r["want"], (k, texts[r["id"]], r["got"], r["want"])
 
 
 def test_jaccard_pairs_match_python(docs):
