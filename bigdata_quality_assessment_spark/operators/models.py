@@ -214,20 +214,6 @@ def ensemble_jac_hess(
     )
 
 
-def stub_predictions_sql_expr(n_models: int) -> str:
-    """The DuckDB-oracle expression mirroring
-    ``sources.generators.stub_predictions`` — kept adjacent to the
-    models so the closed-form contract stays in one place."""
-    from ..sources.generators import STUB_MODEL_PARAMS
-
-    rows = ", ".join(
-        f"({k}, {a!r}::DOUBLE, {b!r}::DOUBLE, {c!r}::DOUBLE)"
-        for k, (a, b, c) in enumerate(STUB_MODEL_PARAMS[:n_models])
-    )
-    return f"(VALUES {rows}) AS models(model_id, a, b, c)"
-
-
-
 # --------------------------------------------------------------------
 # M6: sequence forecaster (history window → prediction window).
 # The reference trains an LSTM (SDE_forecast_ActiveSampling.py:153-171);

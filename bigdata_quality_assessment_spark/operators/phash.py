@@ -392,8 +392,6 @@ def near_dedup_videos(
     any action on the result, and its checkpoint blocks stay in the
     block store until driver GC lets Spark's ContextCleaner release
     them."""
-    if not 0 <= max_hamming <= 3:
-        raise ValueError("4x16-bit banding is complete only for max_hamming <= 3")
     if max_bucket is not None and max_bucket < 1:
         raise ValueError("max_bucket must be >= 1 when set")
     if not 0 < min_frame_frac <= 1:
@@ -402,6 +400,8 @@ def near_dedup_videos(
         raise ValueError("min_frame_frac must be in (0, 1]")
     if max_offset < 0:
         raise ValueError("max_offset must be >= 0")
+    from .text import _hamming_band_keys
+
     fh = (
         frame_hashes
         if frame_hashes is not None
@@ -414,38 +414,11 @@ def near_dedup_videos(
     # barrier discipline — one decode pass, guaranteed)
     fh = fh.filter(F.col("dhash").isNotNull()).localCheckpoint(eager=True)
     n_by_vid = fh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__nf"))
-    if two_level == "auto":
-        from .text import TWO_LEVEL_AUTO_THRESHOLD
-
-        # fh is already materialized (eager barrier above), so the
-        # sizing count is a cheap aggregate over stored blocks
-        two_level = n_by_vid.count() >= TWO_LEVEL_AUTO_THRESHOLD
-    elif not isinstance(two_level, bool):
-        raise ValueError(f"two_level must be a bool or 'auto', got {two_level!r}")
-
-    def _band(t: int):
-        return F.shiftrightunsigned(F.col("dhash"), 16 * t).bitwiseAND(
-            F.lit((1 << 16) - 1)
-        )
-
-    if two_level:
-        # nested pigeonhole over each primary band's remaining 48 bits
-        # (4 sub-bands of 12) — see simhash_near_dedup
-        keys = []
-        for t in range(4):
-            rem = (
-                _band((t + 1) % 4)
-                .bitwiseOR(F.shiftleft(_band((t + 2) % 4), 16))
-                .bitwiseOR(F.shiftleft(_band((t + 3) % 4), 32))
-            )
-            for s in range(4):
-                sub = F.shiftrightunsigned(rem, 12 * s).bitwiseAND(
-                    F.lit((1 << 12) - 1)
-                )
-                keys.append(F.shiftleft(_band(t), 12).bitwiseOR(sub))
-        bands = F.array(*keys)
-    else:
-        bands = F.array(*[_band(t) for t in range(4)])
+    # fh is already materialized (eager barrier above), so the auto
+    # tier's sizing count is a cheap aggregate over stored blocks
+    bands = _hamming_band_keys(
+        F.col("dhash"), 16, two_level, max_hamming, n_by_vid.count
+    )
     fhe = fh.select(
         F.col(id_col), "frame_id", "dhash",
         F.posexplode(bands).alias("__t", "__b"),

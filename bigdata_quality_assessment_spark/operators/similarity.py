@@ -1070,6 +1070,13 @@ def _centroid_dists(vec_col, centroids: list[list[float]]):
     )
 
 
+def nearest_centroid(dists):
+    """0-based index of the smallest entry of the distance array
+    ``dists`` (ties → the lowest cell) — the one assignment rule of the
+    IVF, PQ and k-means paths; NULL when ``dists`` is NULL."""
+    return F.array_position(dists, F.array_min(dists)) - 1
+
+
 def ivf_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1157,9 +1164,8 @@ def ivf_knn(
         )
 
     with_cd = _with_centroid_dists(c, id_col, "__v", cents, "__cd", impl=path)
-    cd = F.col("__cd")
     assigned = with_cd.withColumn(
-        "__cell", (F.array_position(cd, F.array_min(cd)) - 1).cast("int")
+        "__cell", nearest_centroid(F.col("__cd")).cast("int")
     ).drop("__cd")
 
     # query side: a handful of rows — the fold expression is fine and
@@ -1365,7 +1371,7 @@ def semantic_dedup(
         .select(
             id_col,
             "__v",
-            (F.array_position(cd, F.array_min(cd)) - 1).cast("int").alias("__cell"),
+            nearest_centroid(cd).cast("int").alias("__cell"),
         )
     )
     if path == "arrow":
@@ -1773,7 +1779,7 @@ def pq_encode(
     for j, book in enumerate(codebooks):
         sub = F.slice(v, j * dsub + 1, dsub)
         d = _centroid_dists(sub, book)
-        parts.append((F.array_position(d, F.array_min(d)) - 1).cast(code_type))
+        parts.append(nearest_centroid(d).cast(code_type))
     return df.withColumn(code_col, F.array(*parts))
 
 
@@ -2244,7 +2250,7 @@ def cluster_embeddings(
         return _cluster_assign_gemm(corpus, cents, dim, vec_col), cents
 
     cd = _centroid_dists(F.col("__v"), cents)
-    cluster = (F.array_position(cd, F.array_min(cd)) - 1).cast("int")
+    cluster = nearest_centroid(cd).cast("int")
     # centroid norms are driver-known constants — one element_at per
     # row instead of an O(dim) fold over the picked centroid
     import math
@@ -2466,7 +2472,7 @@ def ivfpq_knn(
     else:
         v = _as_double(F.col(vec_col))
         cd = _centroid_dists(v, cents)
-        cell = (F.array_position(cd, F.array_min(cd)) - 1).cast("int")
+        cell = nearest_centroid(cd).cast("int")
         cvec = F.element_at(F.lit(cents), cell + 1)
         resid = F.zip_with(v, cvec, lambda a, b: a - b)
         code_type = "tinyint" if max(len(b) for b in books) <= 128 else "smallint"
@@ -2474,9 +2480,7 @@ def ivfpq_knn(
         for j, book in enumerate(books):
             sub = F.slice(resid, j * dsub + 1, dsub)
             d = _centroid_dists(sub, book)
-            parts.append(
-                (F.array_position(d, F.array_min(d)) - 1).cast(code_type)
-            )
+            parts.append(nearest_centroid(d).cast(code_type))
         index = narrow.select(
             F.col(id_col),
             cell.alias("__cell"),

@@ -17,6 +17,8 @@ linearly with the corpus.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -669,6 +671,86 @@ def jaccard_pairs(
     return out.select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
 
 
+# Mersenne prime modulus for the PINNED MinHash lane family
+# (a·(h ⊕ c) + b) mod P over 48-bit md5-derived shingle hashes:
+# a < 2^13 and h ⊕ c < 2^48 keep every product inside BIGINT, and the
+# whole pipeline — hash, xor, lanes, min — is exact integer arithmetic
+# both engines can run. The per-lane XOR constant c is what makes the
+# lanes distinct minwise orders: a·x+b never exceeds P at these
+# operand bounds, so the mod is the identity and the bare affine is
+# MONOTONE in its input — without the xor every lane's min() would
+# select the same argmin(h) shingle, collapsing the family to a
+# single permutation (all-or-nothing band collisions).
+MINHASH_P = (1 << 61) - 1
+
+
+def _md5_48(col):
+    """48-bit BIGINT from the md5 hex prefix — the SQL-expressible
+    shingle hash for the pinned MinHash variant (DuckDB twin:
+    ('0x' || substring(md5(s), 1, 12))::BIGINT)."""
+    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
+
+
+def _shingle_hashes(
+    docs: DataFrame,
+    text_col: str,
+    k: int,
+    mode: str,
+    id_col: str,
+    lane_params: list[tuple[int, int, int]] | None,
+) -> DataFrame:
+    """``(id_col, __hs)``: each document's distinct shingle hashes as
+    one ``array<bigint>`` — ``_md5_48`` for the pinned lane family
+    (``lane_params`` set), ``xxhash64`` otherwise. NULL, empty and
+    shorter-than-k texts get an empty array. Checkpoint the result
+    before :func:`_minhash_sign` reads it."""
+    sh = _shingle_expr(F.col(text_col), k, mode)
+    shingle_hash = _md5_48 if lane_params is not None else F.xxhash64
+    return ensure_min_parallelism(docs.select(id_col, text_col)).select(
+        id_col,
+        F.array_distinct(F.transform(sh, lambda s: shingle_hash(s))).alias("__hs"),
+    )
+
+
+def _minhash_sign(
+    hashes: DataFrame,
+    id_col: str,
+    n_hashes: int,
+    lane_params: list[tuple[int, int, int]] | None,
+) -> DataFrame:
+    """``(id_col, sig)`` from a CHECKPOINTED :func:`_shingle_hashes`
+    frame — the one MinHash signing kernel. Lane i is
+    ``array_min`` over the stored hashes of ``xxhash64(i, h)``, or with
+    ``lane_params`` of ``(aᵢ·(h ⊕ cᵢ) + bᵢ) mod MINHASH_P`` (whose length
+    then overrides ``n_hashes``). Docs without a shingle drop out.
+
+    ``hashes`` must be a barrier: over an unmaterialized projection
+    Catalyst's CollapseProject inlines the whole tokenize+shingle+hash
+    array into the lane lambda, which then re-evaluates it once per
+    lane (22.9 s against 2.2 s for 200 docs on 4 cores;
+    tests/test_plan_audit.py guards every caller's plan). The filter
+    sits above the barrier for the same reason: below it, it would be
+    pushed under the projection with ``__hs`` inlined."""
+    if lane_params is not None:
+        lanes = F.array(*[
+            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"), F.lit(c).alias("c"))
+            for a, b, c in lane_params
+        ])
+
+        def lane_min(p):
+            return F.array_min(F.transform("__hs", lambda h: (
+                p["a"] * h.bitwiseXOR(p["c"]) + p["b"]) % F.lit(MINHASH_P)))
+    else:
+        lanes = F.sequence(F.lit(0), F.lit(n_hashes - 1))
+
+        def lane_min(i):
+            return F.array_min(F.transform("__hs", lambda h: F.xxhash64(i, h)))
+
+    return hashes.filter(F.size("__hs") > 0).select(
+        id_col, F.transform(lanes, lane_min).alias("sig")
+    )
+
+
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
@@ -680,33 +762,22 @@ def minhash_signatures(
     """MinHash signatures: ``sig[i] = min over shingles of
     xxhash64(i, base_hash(shingle))``.
 
-    Shape chosen for scale AND single-evaluation: each shingle's
-    (expensive) string hash is computed ONCE via explode, then the
-    n_hashes lanes are cheap integer re-hashes inside one map-side-
-    combined aggregation (n_hashes ``min`` columns). A nested
-    higher-order-function formulation over THIS (unmaterialized)
-    shingle array re-evaluates it per lane: CollapseProject inlines
-    the array into the lane lambda and Catalyst does not CSE across
-    lambda boundaries — n_hashes× the string work (measured 22.9 s
-    against 2.2 s on 200 docs, 4 cores). Over a stored array the nested form is
-    the cheaper one; :func:`near_dedup_minhash` checkpoints its hash
-    arrays first and signs them that way.
+    One small row per document, built by the package's one MinHash
+    kernel: each document's distinct shingle hashes are stored as one
+    array (:func:`_shingle_hashes`, each string hashed once), and the
+    n_hashes lanes are an ``array_min`` projection over that stored
+    array (:func:`_minhash_sign`) — no shuffle, no n_hashes-wide
+    aggregate. The barrier is lazy: the signature projection is its
+    only reader.
 
     Docs shorter than k shingle into nothing and drop out — they
     cannot be near-duplicates, and an all-null signature would collide
     every short doc into every LSH bucket (candidate-pair explosion).
-    """
-    shingles = _shingle_expr(F.col(text_col), k, mode)
-    base = ensure_min_parallelism(docs.select(id_col, text_col)).select(
-        id_col, F.explode(F.transform(shingles, lambda s: F.xxhash64(s))).alias("__h")
-    )
-    lanes = [
-        F.min(F.xxhash64(F.lit(i), F.col("__h"))).alias(f"__s{i}") for i in range(n_hashes)
-    ]
-    wide = base.groupBy(id_col).agg(*lanes)
-    return wide.select(
-        id_col, F.array(*[F.col(f"__s{i}") for i in range(n_hashes)]).alias("sig")
-    )
+
+    Call-time cost: the lazy hash-array barrier runs the shuffle-map
+    stages of ``docs``'s plan (if any) when this function is called."""
+    hashes = _shingle_hashes(docs, text_col, k, mode, id_col, None)
+    return _minhash_sign(hashes.localCheckpoint(eager=False), id_col, n_hashes, None)
 
 
 def minhash_band_keys(
@@ -749,10 +820,10 @@ def minhash_lsh_candidates(
 
     ``materialize`` (round-16): EAGERLY checkpoint the band-key frame
     before the self-join. Both join sides derive from it, and the
-    executed sf0.1 plan showed the full upstream signature fold (the
-    128-min aggregation) running ONCE PER SIDE — broadcast-side
-    planning defeats ReuseExchange, and a lazy barrier's cache
-    semantics let concurrent cold readers race into recompute. The
+    executed sf0.1 plan showed the full upstream signature fold
+    running ONCE PER SIDE — broadcast-side planning defeats
+    ReuseExchange, and a lazy barrier's cache semantics let
+    concurrent cold readers race into recompute. The
     eager barrier stores ~20 B × bands per doc and pins exactly one
     fold execution; it runs a job at call time, so it is opt-in for
     this otherwise-lazy builder (near_dedup_minhash opts in)."""
@@ -767,26 +838,6 @@ def minhash_lsh_candidates(
         .select("doc_a", "doc_b")
         .distinct()
     )
-
-
-# Mersenne prime modulus for the PINNED MinHash lane family
-# (a·(h ⊕ c) + b) mod P over 48-bit md5-derived shingle hashes:
-# a < 2^13 and h ⊕ c < 2^48 keep every product inside BIGINT, and the
-# whole pipeline — hash, xor, lanes, min — is exact integer arithmetic
-# both engines can run. The per-lane XOR constant c is what makes the
-# lanes distinct minwise orders: a·x+b never exceeds P at these
-# operand bounds, so the mod is the identity and the bare affine is
-# MONOTONE in its input — without the xor every lane's min() would
-# select the same argmin(h) shingle, collapsing the family to a
-# single permutation (all-or-nothing band collisions).
-MINHASH_P = (1 << 61) - 1
-
-
-def _md5_48(col):
-    """48-bit BIGINT from the md5 hex prefix — the SQL-expressible
-    shingle hash for the pinned MinHash variant (DuckDB twin:
-    ('0x' || substring(md5(s), 1, 12))::BIGINT)."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
 def near_dedup_minhash(
@@ -842,47 +893,18 @@ def near_dedup_minhash(
     # identical counts up to 64-bit xxhash64 collisions (P ≈
     # |sh_a|·|sh_b|/2⁶⁴ per pair — immaterial against an 0.8 Jaccard
     # threshold). The string-exact path remains ``jaccard_pairs`` (the
-    # SQL oracle). Docs shorter than k have no shingle and drop out.
+    # SQL oracle). Docs shorter than k have no signature, so they are
+    # never a candidate and drop out.
     #
-    # EAGER, and it must stay a barrier: the signature's lane lambda
-    # reads ``__hs``, and over an unmaterialized projection Catalyst's
-    # CollapseProject inlines the whole tokenize+shingle+hash array
-    # into that lambda, which then re-evaluates it once per lane
-    # (minhash_signatures written that way: 22.9 s against 2.2 s for
-    # 200 docs on 4 cores; tests/test_plan_audit.py guards the plan). Eager rather than
-    # lazy (round-16): several subtrees of the first action read this
-    # frame, and a lazy barrier's cold blocks race — each concurrent
-    # reader recomputes the scan (sf10 swung 41.7→186 s across
-    # identical runs). The eager checkpoint runs the scan exactly once.
-    sh = _shingle_expr(F.col(text_col), k, mode)
-    shingle_hash = _md5_48 if lane_params is not None else F.xxhash64
-    hashes = (
-        ensure_min_parallelism(docs.select(id_col, text_col))
-        .select(
-            id_col,
-            F.array_distinct(F.transform(sh, lambda s: shingle_hash(s))).alias("__hs"),
-        )
-        .localCheckpoint(eager=True)
-        # after the barrier: a filter above the projection would be
-        # pushed below it with ``__hs`` inlined, shingling every doc twice
-        .filter(F.size("__hs") > 0)
-    )
-    if lane_params is not None:
-        lanes = F.array(*[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"), F.lit(c).alias("c"))
-            for a, b, c in lane_params
-        ])
-
-        def lane_min(p):
-            return F.array_min(F.transform("__hs", lambda h: (
-                p["a"] * h.bitwiseXOR(p["c"]) + p["b"]) % F.lit(MINHASH_P)))
-    else:
-        lanes = F.sequence(F.lit(0), F.lit(n_hashes - 1))
-
-        def lane_min(i):
-            return F.array_min(F.transform("__hs", lambda h: F.xxhash64(i, h)))
-
-    sigs = hashes.select(id_col, F.transform(lanes, lane_min).alias("sig"))
+    # EAGER rather than lazy (round-16): several subtrees of the first
+    # action read this frame, and a lazy barrier's cold blocks race —
+    # each concurrent reader recomputes the scan (sf10 swung 41.7→186 s
+    # across identical runs). The eager checkpoint runs the scan
+    # exactly once.
+    hashes = _shingle_hashes(
+        docs, text_col, k, mode, id_col, lane_params
+    ).localCheckpoint(eager=True)
+    sigs = _minhash_sign(hashes, id_col, n_hashes, lane_params)
     cands = minhash_lsh_candidates(sigs, bands, id_col, materialize=True)
     a = hashes.select(F.col(id_col).alias("doc_a"), F.col("__hs").alias("__ha"))
     b = hashes.select(F.col(id_col).alias("doc_b"), F.col("__hs").alias("__hb"))
@@ -930,12 +952,12 @@ def simhash(
     SQL oracle can recompute (see x_simhash_near_dedup); xxhash64
     stays the production default.
 
-    Same explode+aggregate shape as ``minhash_signatures``: each
-    shingle is hashed once, the bit-votes are map-side-combined sums
-    (an n_bits-fold array ``aggregate`` over the unmaterialized
-    shingle+hash array would re-evaluate it per bit — CollapseProject
-    inlines it into the lambda and Catalyst does not CSE across lambda
-    boundaries; see ``minhash_signatures``)."""
+    Shape: each shingle is hashed once, then exploded, and the
+    bit-votes are map-side-combined sums. An n_bits-fold array
+    ``aggregate`` over the unmaterialized shingle+hash array would
+    re-evaluate it per bit — CollapseProject inlines it into the lambda
+    and Catalyst does not CSE across lambda boundaries; MinHash avoids
+    that by signing a stored hash array (see :func:`_minhash_sign`)."""
     n_bits = _simhash_bits(hash_fn)
     hfn = _md5_48 if hash_fn == "md5_48" else F.xxhash64
     shingles = _shingle_expr(F.col(text_col), k, mode)
@@ -955,6 +977,52 @@ def simhash(
             F.col(f"__v{j}") > 0, F.lit(1 << j if j < 63 else -(1 << 63)).cast("bigint")
         ).otherwise(F.lit(0).cast("bigint"))
     return wide.select(id_col, packed.alias("simhash"))
+
+
+def _hamming_band_keys(
+    sig: Column,
+    band_bits: int,
+    two_level: bool | str,
+    max_hamming: int,
+    n_signatures: Callable[[], int],
+) -> Column:
+    """The pigeonhole band keys of a ``4 · band_bits``-bit Hamming
+    signature, as one array per row; the caller posexplodes it and
+    equi-joins on (position, key). Single-level: the 4 primary bands.
+    ``two_level=True``: each primary band t packed with each of 4
+    sub-bands of the other three bands' bits — 16 keys (the nested
+    pigeonhole of :func:`simhash_near_dedup`). ``"auto"`` engages the
+    nested keys at ``n_signatures() ≥ TWO_LEVEL_AUTO_THRESHOLD``.
+    Complete (no pair within ``max_hamming`` is missed) only for
+    ``max_hamming ≤ 3``, which is checked here."""
+    if not 0 <= max_hamming <= 3:
+        raise ValueError("4-band banding is complete only for max_hamming <= 3")
+    if two_level == "auto":
+        two_level = n_signatures() >= TWO_LEVEL_AUTO_THRESHOLD
+    elif not isinstance(two_level, bool):
+        raise ValueError(f"two_level must be a bool or 'auto', got {two_level!r}")
+
+    def band(t: int) -> Column:
+        return F.shiftrightunsigned(sig, band_bits * t).bitwiseAND(
+            F.lit((1 << band_bits) - 1)
+        )
+
+    if not two_level:
+        return F.array(*[band(t) for t in range(4)])
+    sub_bits = (3 * band_bits) // 4
+    keys = []
+    for t in range(4):
+        rem = (
+            band((t + 1) % 4)
+            .bitwiseOR(F.shiftleft(band((t + 2) % 4), band_bits))
+            .bitwiseOR(F.shiftleft(band((t + 3) % 4), 2 * band_bits))
+        )
+        for s in range(4):
+            sub = F.shiftrightunsigned(rem, sub_bits * s).bitwiseAND(
+                F.lit((1 << sub_bits) - 1)
+            )
+            keys.append(F.shiftleft(band(t), sub_bits).bitwiseOR(sub))
+    return F.array(*keys)
 
 
 def simhash_near_dedup(
@@ -1028,8 +1096,6 @@ def simhash_near_dedup(
     eager barrier, so a call runs a corpus-scale Spark job before any
     action on the result, and its checkpoint blocks stay in the block
     store until driver GC lets Spark's ContextCleaner release them."""
-    if not 0 <= max_hamming <= 3:
-        raise ValueError("4x16-bit banding is complete only for max_hamming <= 3")
     # EAGER barrier on the (id, simhash) frame — 16 bytes/doc. The a/b
     # band self-join below otherwise re-executes the whole shingling +
     # 64-vote aggregation once per side: a LAZY barrier only protects
@@ -1044,50 +1110,25 @@ def simhash_near_dedup(
         )
     else:
         sig = signatures
-    if two_level == "auto":
-        if (
-            signatures is not None
-            and sig._jdf.queryExecution().logical().getClass().getSimpleName()
-            != "LogicalRDD"
-        ):
-            # the auto count is an extra action over the caller's
-            # frame; without a barrier an UNcheckpointed precomputed
-            # frame would run its full derivation twice (count + band
-            # join) — a silent regression vs two_level=False for
-            # existing callers (round-15, ADVICE). Frames that already
-            # sit on a checkpoint boundary (LogicalRDD — both lazy and
-            # eager localCheckpoint produce one) are left alone so the
-            # internal audio/image callers don't pay a second copy.
-            sig = sig.localCheckpoint(eager=False)
-        two_level = sig.count() >= TWO_LEVEL_AUTO_THRESHOLD
-    elif not isinstance(two_level, bool):
-        raise ValueError(f"two_level must be a bool or 'auto', got {two_level!r}")
-    band_bits = _simhash_bits(hash_fn) // 4
-
-    def _band(t: int):
-        return F.shiftrightunsigned(F.col("simhash"), band_bits * t).bitwiseAND(
-            F.lit((1 << band_bits) - 1)
-        )
-
-    if two_level:
-        # nested pigeonhole (docstring): key (t, s) = primary band t
-        # packed with sub-band s of the OTHER three bands' bits
-        sub_bits = (3 * band_bits) // 4
-        keys = []
-        for t in range(4):
-            rem = (
-                _band((t + 1) % 4)
-                .bitwiseOR(F.shiftleft(_band((t + 2) % 4), band_bits))
-                .bitwiseOR(F.shiftleft(_band((t + 3) % 4), 2 * band_bits))
-            )
-            for s in range(4):
-                sub = F.shiftrightunsigned(rem, sub_bits * s).bitwiseAND(
-                    F.lit((1 << sub_bits) - 1)
-                )
-                keys.append(F.shiftleft(_band(t), sub_bits).bitwiseOR(sub))
-        bands = F.array(*keys)
-    else:
-        bands = F.array(*[_band(t) for t in range(4)])
+    if (
+        two_level == "auto"
+        and signatures is not None
+        and sig._jdf.queryExecution().logical().getClass().getSimpleName()
+        != "LogicalRDD"
+    ):
+        # the auto count is an extra action over the caller's frame;
+        # without a barrier an UNcheckpointed precomputed frame would
+        # run its full derivation twice (count + band join) — a silent
+        # regression vs two_level=False for existing callers (round-15,
+        # ADVICE). Frames that already sit on a checkpoint boundary
+        # (LogicalRDD — both lazy and eager localCheckpoint produce
+        # one) are left alone so the internal audio/image callers don't
+        # pay a second copy.
+        sig = sig.localCheckpoint(eager=False)
+    bands = _hamming_band_keys(
+        F.col("simhash"), _simhash_bits(hash_fn) // 4, two_level, max_hamming,
+        sig.count,
+    )
     sige = sig.select(
         F.col(id_col), F.col("simhash"), F.posexplode(bands).alias("__t", "__b")
     )
@@ -1282,41 +1323,30 @@ def fuzzy_decontaminate(
     tiny benchmark sides, but size bands down (e.g. bands=16, r=8) if
     a large bench side makes the candidate join expensive.
 
-    ``lane_params`` pins the signature family exactly as in
-    :func:`near_dedup_minhash` (48-bit md5 shingle hash + linear
-    lanes; n_hashes is ignored in lane mode) — the ORACLE-graded
-    variant (part='fdecon' of x_doc_fingerprints); since the Jaccard
-    verify intersects STRING shingles and the ratio is
-    integer-derived, the flagged set and best-match scores are
-    integer-exact cross-engine."""
+    Both sides are signed by the same kernel as
+    :func:`minhash_signatures` and :func:`near_dedup_minhash`: a stored
+    array of distinct shingle hashes per document, then an
+    ``array_min`` lane projection over it. ``lane_params`` pins the
+    lane family exactly as in :func:`near_dedup_minhash` (48-bit md5
+    shingle hash + linear lanes; n_hashes is ignored in lane mode) —
+    the ORACLE-graded variant (part='fdecon' of x_doc_fingerprints);
+    since the Jaccard verify intersects STRING shingles and the ratio
+    is integer-derived, the flagged set and best-match scores are
+    integer-exact cross-engine.
 
-    def _sigs(frame: DataFrame) -> DataFrame:
-        if lane_params is None:
-            return minhash_signatures(frame, text_col, k, n_hashes, mode, id_col)
-        sh = _shingle_expr(F.col(text_col), k, mode)
-        hashes = frame.select(
-            id_col, F.explode(F.transform(sh, lambda s: _md5_48(s))).alias("__h")
+    Call-time cost: each side's lazy hash-array barrier runs the
+    shuffle-map stages of its input's plan (if any) when this function
+    is called."""
+    # lazy barriers: each side's signature projection is its only reader
+    sig_d, sig_b = (
+        _minhash_sign(
+            _shingle_hashes(
+                frame, text_col, k, mode, id_col, lane_params
+            ).localCheckpoint(eager=False),
+            id_col, n_hashes, lane_params,
         )
-        lanes = [
-            F.min(
-                (F.lit(a) * F.col("__h").bitwiseXOR(F.lit(c)) + F.lit(b))
-                % F.lit(MINHASH_P)
-            ).alias(f"__s{i}")
-            for i, (a, b, c) in enumerate(lane_params)
-        ]
-        return (
-            hashes.groupBy(id_col)
-            .agg(*lanes)
-            .select(
-                id_col,
-                F.array(
-                    *[F.col(f"__s{i}") for i in range(len(lane_params))]
-                ).alias("sig"),
-            )
-        )
-
-    sig_d = _sigs(docs)
-    sig_b = _sigs(benchmark)
+        for frame in (docs, benchmark)
+    )
 
     def band_keys(sig: DataFrame, out_id: str) -> DataFrame:
         return minhash_band_keys(sig, bands, id_col).withColumnRenamed(id_col, out_id)
@@ -2761,19 +2791,20 @@ def span_frame(
     streaming ingest span state."""
     span = int(span_tokens)
     ws = F.filter(tokens(F.col(text_col)), lambda t: t != "")
-    n_spans = F.ceil(F.size("__ws") / F.lit(span)).cast("int")
-    spans = F.when(
-        F.size("__ws") > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_spans - 1),
-            lambda sid: F.concat_ws(
-                " ", F.slice(F.col("__ws"), sid * span + 1, span)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    # span i is words i·span … i·span+span-1: zip the span strided
+    # sub-arrays (word j of every span; the last span's missing words
+    # are NULL, which concat_ws skips), so the text is split once per
+    # stride — never once per span inside a lambda, which is what a
+    # per-span ``slice`` becomes once CollapseProject inlines the words
+    strided = [F.filter(ws, lambda t, i: i % span == j) for j in range(span)]
+    spans = F.transform(
+        F.arrays_zip(*strided),
+        lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(span)]),
+    )
     return ensure_min_parallelism(docs.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), ws.alias("__ws")
-    ).select(id_col, spans.alias("__spans"))
+        F.col(id_col),
+        F.coalesce(spans, F.array().cast("array<string>")).alias("__spans"),
+    )
 
 
 def span_keys(

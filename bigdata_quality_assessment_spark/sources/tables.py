@@ -120,12 +120,6 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     return {name: load_table(spark, name, sf_dir) for name in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all test tables as temp views for ``spark.sql`` use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_bucketed(
     df,
     table_name: str,

@@ -41,14 +41,20 @@ from bigdata_quality_assessment_spark.operators.text import (
     bm25_index_delta,
     bm25_search,
     exact_dedup,
+    fuzzy_decontaminate,
     merge_bm25_stats,
     minhash_lsh_candidates,
     minhash_signatures,
     near_dedup_minhash,
     simhash_near_dedup,
 )
+from bigdata_quality_assessment_spark.pipeline import CurationConfig, curate
 from bigdata_quality_assessment_spark.sources.audiogen import planted_audio
 from bigdata_quality_assessment_spark.sources.tables import load_table
+from bigdata_quality_assessment_spark.streaming.ingest import (
+    init_ingest_store,
+    streaming_ingest_curated,
+)
 
 SF_DIR = "/root/testdata/sf0.01"
 SINGLE = "Exchange SinglePartition"
@@ -303,19 +309,11 @@ def _kind(node) -> str:
     return node.getClass().getSimpleName()
 
 
-@pytest.mark.parametrize("lanes", ["xxhash64", "lane_params"])
-def test_near_dedup_minhash_lanes_read_a_barrier(t, monkeypatch, lanes):
-    """The signature lanes are higher-order functions over a STORED hash
-    array. Over an unmaterialized projection CollapseProject inlines
-    the tokenize+shingle array into the lane lambda, which re-splits
-    every document once per lane; an explode into one ``min`` column
-    per lane builds an aggregate too wide for whole-stage codegen
-    (``spark.sql.codegen.maxFields`` = 100). Checked on every frame
-    the operator checkpoints and on its result."""
-    from bigdata_quality_assessment_spark.queries import _MINHASH_LANES
-
+def _checkpointed_plans(monkeypatch, frame_cls) -> list:
+    """Patch ``frame_cls.localCheckpoint`` to record the planned
+    physical plan of every frame checkpointed from now on (foreachBatch
+    bodies run on the driver, so streaming folds are seen too)."""
     plans = []
-    frame_cls = type(t["docs"])
     checkpoint = frame_cls.localCheckpoint
 
     def recording(self, *args, **kwargs):
@@ -323,9 +321,13 @@ def test_near_dedup_minhash_lanes_read_a_barrier(t, monkeypatch, lanes):
         return checkpoint(self, *args, **kwargs)
 
     monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
-    kw = {"lane_params": _MINHASH_LANES} if lanes == "lane_params" else {}
-    out = near_dedup_minhash(t["docs"], k=3, n_hashes=128, bands=16, **kw)
-    plans.append(out._jdf.queryExecution().sparkPlan())
+    return plans
+
+
+def _signing_faults(plans) -> tuple[list, list]:
+    """``(split_in_lambda, wide_aggs)`` over ``plans``: every lambda
+    that tokenizes text, and the size of every aggregate with more than
+    ``spark.sql.codegen.maxFields`` = 100 aggregate expressions."""
     split_in_lambda, wide_aggs = [], []
     for plan in plans:
         for node in _nodes(plan):
@@ -340,6 +342,93 @@ def test_near_dedup_minhash_lanes_read_a_barrier(t, monkeypatch, lanes):
                         _kind(x) == "StringSplit" for x in _nodes(e.function())
                     ):
                         split_in_lambda.append(e.toString()[:200])
+    return split_in_lambda, wide_aggs
+
+
+@pytest.mark.parametrize("lanes", ["xxhash64", "lane_params"])
+def test_near_dedup_minhash_lanes_read_a_barrier(t, monkeypatch, lanes):
+    """The signature lanes are higher-order functions over a STORED hash
+    array. Over an unmaterialized projection CollapseProject inlines
+    the tokenize+shingle array into the lane lambda, which re-splits
+    every document once per lane; an explode into one ``min`` column
+    per lane builds an aggregate too wide for whole-stage codegen
+    (``spark.sql.codegen.maxFields`` = 100). Checked on every frame
+    the operator checkpoints and on its result."""
+    from bigdata_quality_assessment_spark.queries import _MINHASH_LANES
+
+    plans = _checkpointed_plans(monkeypatch, type(t["docs"]))
+    kw = {"lane_params": _MINHASH_LANES} if lanes == "lane_params" else {}
+    out = near_dedup_minhash(t["docs"], k=3, n_hashes=128, bands=16, **kw)
+    plans.append(out._jdf.queryExecution().sparkPlan())
     assert len(plans) >= 3  # the hash table, the band keys, the result
-    assert not split_in_lambda, split_in_lambda
-    assert not wide_aggs, wide_aggs
+    assert _signing_faults(plans) == ([], [])
+
+
+def _fuzzy(lanes: str):
+    def run(t, tmp_path):
+        from bigdata_quality_assessment_spark.queries import _MINHASH_LANES
+
+        bench = t["docs"].filter(F.col("doc_id") % 50 == 0)
+        kw = {"lane_params": _MINHASH_LANES} if lanes == "lane_params" else {}
+        return fuzzy_decontaminate(t["docs"], bench, bands=32, **kw)
+
+    return run
+
+
+def _curate_fuzzy(t, tmp_path):
+    bench = t["docs"].filter(F.col("doc_id") % 50 == 0).select("doc_id", "text")
+    cfg = CurationConfig(fuzzy_decon=True, fuzzy_min_jaccard=0.5)
+    return curate(t["docs"], bench, cfg)[0]
+
+
+def _ingest(span_dedup: bool):
+    def run(t, tmp_path):
+        docs = t["docs"].filter(F.col("doc_id") < 200).select("doc_id", "text")
+        docs.coalesce(1).write.parquet(str(tmp_path / "arrivals" / "d0"))
+        schema = "doc_id long, text string"
+        root = str(tmp_path / "store")
+        init_ingest_store(docs.sparkSession, root, schema)
+        stream = docs.sparkSession.readStream.schema(schema).parquet(
+            str(tmp_path / "arrivals" / "*")
+        )
+        q = streaming_ingest_curated(
+            stream, root, checkpoint=str(tmp_path / "ckpt"), span_dedup=span_dedup
+        )
+        q.awaitTermination()
+        assert q.exception() is None
+
+    return run
+
+
+# caller -> (run(t, tmp_path) returning its result frame or None, the
+# Spark jobs the call itself runs or None where another test pins them)
+SIGNING_CALLERS = {
+    "minhash_signatures": (lambda t, tmp_path: minhash_signatures(t["docs"]), 1),
+    "fuzzy_xxhash64": (_fuzzy("xxhash64"), 2),
+    "fuzzy_lane_params": (_fuzzy("lane_params"), 2),
+    "curate_fuzzy": (_curate_fuzzy, None),
+    "ingest": (_ingest(False), None),
+    "ingest_span_dedup": (_ingest(True), None),
+}
+
+
+@pytest.mark.parametrize("caller", list(SIGNING_CALLERS))
+def test_minhash_signing_callers_read_a_barrier(spark, t, monkeypatch, tmp_path, caller):
+    """Every caller of the MinHash signing kernel signs a stored hash
+    array: no recorded plan tokenizes inside a lambda or builds an
+    aggregate wider than whole-stage codegen takes (see
+    ``test_near_dedup_minhash_lanes_read_a_barrier``). The lazy hash
+    barriers of ``minhash_signatures`` and ``fuzzy_decontaminate`` run
+    a pinned number of jobs at call time."""
+    from test_loop import _jobs
+
+    run, call_jobs = SIGNING_CALLERS[caller]
+    plans = _checkpointed_plans(monkeypatch, type(t["docs"]))
+    out = {}
+    jobs = _jobs(spark, lambda: out.update(r=run(t, tmp_path)))
+    if out["r"] is not None:
+        plans.append(out["r"]._jdf.queryExecution().sparkPlan())
+    assert plans
+    assert _signing_faults(plans) == ([], [])
+    if call_jobs is not None:
+        assert jobs == call_jobs

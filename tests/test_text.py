@@ -95,6 +95,74 @@ def test_word_shingles_equal_per_position_formulation(spark, k):
         assert r["got"] == r["want"], (k, texts[r["id"]], r["got"], r["want"])
 
 
+def _aggregate_signatures(frame, k, n_hashes, lane_params):
+    """The reference MinHash formulation: explode every shingle hash to
+    its own row, then one ``min`` aggregate column per lane."""
+    from bigdata_quality_assessment_spark.operators.text import MINHASH_P, _md5_48
+
+    shingle_hash = _md5_48 if lane_params is not None else F.xxhash64
+    h = F.col("__h")
+    if lane_params is not None:
+        lanes = [
+            F.min((F.lit(a) * h.bitwiseXOR(F.lit(c)) + F.lit(b)) % F.lit(MINHASH_P))
+            for a, b, c in lane_params
+        ]
+    else:
+        lanes = [F.min(F.xxhash64(F.lit(i), h)) for i in range(n_hashes)]
+    sh = _shingle_expr(F.col("text"), k, "word")
+    rows = (
+        frame.select("doc_id", F.explode(F.transform(sh, lambda s: shingle_hash(s))).alias("__h"))
+        .groupBy("doc_id")
+        .agg(*lanes)
+        .collect()
+    )
+    return {r[0]: list(r[1:]) for r in rows}
+
+
+@pytest.mark.parametrize("lanes", ["xxhash64", "lane_params"])
+def test_minhash_signatures_equal_aggregate_formulation(spark, monkeypatch, lanes):
+    """Every MinHash signature the package builds — ``minhash_signatures``
+    and both sides ``fuzzy_decontaminate`` bands — equals the
+    explode → per-lane ``min`` formulation bit for bit, for both lane
+    families; NULL, empty and shorter-than-k texts drop out."""
+    import bigdata_quality_assessment_spark.operators.text as T
+    from bigdata_quality_assessment_spark.queries import _MINHASH_LANES
+    from bigdata_quality_assessment_spark.sources.textgen import realistic_documents
+
+    lane_params = _MINHASH_LANES if lanes == "lane_params" else None
+    short = spark.createDataFrame(
+        [(10_000, None), (10_001, ""), (10_002, "one two")],
+        "doc_id long, text string",
+    )
+    docs = realistic_documents(spark, 60, seed=5).select("doc_id", "text")
+    docs = docs.unionByName(short).localCheckpoint(eager=True)
+    bench = docs.filter(
+        (F.col("doc_id") % 7 == 0) | (F.col("doc_id") == 10_001)
+    ).localCheckpoint(eager=True)
+    want_d = _aggregate_signatures(docs, 3, 128, lane_params)
+    want_b = _aggregate_signatures(bench, 3, 128, lane_params)
+    assert set(want_d) == set(range(60))
+    assert set(want_b) == {i for i in range(60) if i % 7 == 0}
+
+    def sigs(frame):
+        return {r["doc_id"]: list(r["sig"]) for r in frame.collect()}
+
+    if lane_params is None:
+        assert sigs(minhash_signatures(docs, k=3, n_hashes=128)) == want_d
+    banded = []
+    band_keys = T.minhash_band_keys
+
+    def recording(signatures, *args, **kwargs):
+        banded.append(signatures)
+        return band_keys(signatures, *args, **kwargs)
+
+    monkeypatch.setattr(T, "minhash_band_keys", recording)
+    T.fuzzy_decontaminate(
+        docs, bench, k=3, n_hashes=128, bands=32, lane_params=lane_params
+    ).collect()
+    assert [sigs(f) for f in banded] == [want_d, want_b]
+
+
 def test_jaccard_pairs_match_python(docs):
     sh = shingle_sets(docs, k=3, mode="word")
     rows = jaccard_pairs(sh, min_jaccard=0.0).collect()
@@ -625,6 +693,33 @@ def test_dedup_spans_removes_boilerplate_keeps_first(spark):
     a = sorted(map(tuple, dedup_spans(docs, 5, hash_spans=True).collect()))
     b = sorted(map(tuple, dedup_spans(docs, 5, hash_spans=False).collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("span", [1, 2, 5, 7])
+def test_span_frame_equals_per_span_slices(spark, span):
+    """The strided span framing equals the per-span ``slice`` of the
+    word array, including NULL, blank, short and ragged-tail texts."""
+    from bigdata_quality_assessment_spark.operators.text import span_frame
+
+    texts = [None, "", "   ", "a", "a b c d e", "  a  b c d e f g h i j ", "x\ty\nz w"]
+    texts.append(" ".join(f"w{i}" for i in range(23)))
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    ws = F.filter(tokens(F.col("text")), lambda t: t != "")
+    n_spans = F.ceil(F.size(ws) / F.lit(span)).cast("int")
+    want = df.select(
+        "doc_id",
+        F.when(
+            F.size(ws) > 0,
+            F.transform(
+                F.sequence(F.lit(0), n_spans - 1),
+                lambda i: F.concat_ws(" ", F.slice(ws, i * span + 1, span)),
+            ),
+        ).otherwise(F.array().cast("array<string>")).alias("want"),
+    )
+    rows = span_frame(df, span).join(want, "doc_id").collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["__spans"] == r["want"], (span, texts[r["doc_id"]])
 
 
 def test_dedup_spans_all_removed_yields_empty_string(spark):
