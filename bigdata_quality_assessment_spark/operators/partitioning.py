@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ``df`` up to ``defaultParallelism`` if it arrives
-    with fewer partitions; identity otherwise (the at-scale path)."""
+    with fewer partitions; identity otherwise (the at-scale path).
+    Runs no Spark job (see ``_planned_partitions``)."""
     if df.isStreaming:
         # a streaming frame has no static partition count to inspect
         # (.rdd is illegal); micro-batch parallelism is the source's
@@ -35,9 +36,43 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
         return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if _planned_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """The partition count of ``df``'s physical plan, read without
+    running any of it.
+
+    A plan with no exchange (a scan, a checkpoint, narrow work over
+    either) is not adaptive, and building its RDD runs no job, so its
+    count is the input split count. An adaptive plan would run every
+    shuffle-map stage to build its RDD (``df.rdd``), and the caller's
+    own action would then run them again; its count is read from the
+    plan AQE starts from instead. For a plan that ends in a shuffle
+    that is the planned shuffle partition count: AQE's runtime
+    coalescing, which only merges the partitions of small shuffles,
+    is not known until the stages run."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan":
+        return df.rdd.getNumPartitions()
+    return _node_partitions(plan.executedPlan())
+
+
+def _node_partitions(node) -> int:
+    # a node that passes its input's partitioning through (a broadcast
+    # join's streamed side, a project over a scan) reports it as
+    # unknown (0) when the input is a scan: count the scan's splits
+    n = node.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = node.children()
+    if kids.isEmpty():
+        rdd = node.executeColumnar() if node.supportsColumnar() else node.execute()
+        return rdd.getNumPartitions()
+    counts = [_node_partitions(kids.apply(i)) for i in range(kids.size())]
+    return sum(counts) if node.nodeName() == "Union" else max(counts)
 
 
 def id_ddl_type(df: DataFrame, col: str) -> str:

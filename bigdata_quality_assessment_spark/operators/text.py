@@ -1265,7 +1265,10 @@ def normalize_text(
 
     Deliberately NOT unicode-NFC: Spark has no built-in normalizer and
     a per-row Python UDF would drop the whole text path out of
-    codegen; byte-identical unicode variants are near-dedup's job."""
+    codegen; byte-identical unicode variants are near-dedup's job.
+    Lower-casing uses the JVM's case tables (``build_session`` turns
+    ICU case mapping off), which agree with ICU's except on letters
+    added after the JVM's Unicode version."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     if strip_control:
         c = F.regexp_replace(c, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "")

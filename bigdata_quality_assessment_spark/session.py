@@ -59,6 +59,29 @@ def build_session(
     unset). ``shuffle_partitions`` defaults to the core count — the
     right size for local mode; on a real cluster it is raised to
     ~2-3× total executor cores and AQE coalesces from there.
+
+    Case mapping (``lower``/``upper``) goes through ``UTF8String``'s
+    JVM path, not ICU (``spark.sql.icu.caseMappings.enabled=false``).
+    On Spark 4.1 the first ICU case mapping in a JVM runs the static
+    initializer of ``CollationAwareUTF8String``, which title-cases all
+    1,114,112 code points to build a lookup table that ``lower`` on
+    ASCII text never reads: measured on a 4-core VM (``local[4]``,
+    200 ASCII rows, after a warm-up query) the first ``lower`` took
+    1.6-1.9 s and 3.7-4.1 JVM CPU-s with ICU, 0.13-0.15 s and
+    0.44-0.51 CPU-s without. That cost was paid by every cold curation
+    op (the exact-dedup ``normalize_text`` task). Both paths lower-case
+    ASCII with the same byte loop and both follow the JVM default
+    locale for non-ASCII text. Checked over every Unicode scalar value
+    (JDK 17, ICU4J 77.1), they differ on 67 code points for ``lower``
+    and 67 for ``upper``, all added in Unicode 14-16, which Java 17
+    does not case-map, and on 617 for ``initcap`` (e.g. ``ß``), which
+    the package never calls.
+
+    ``spark.sql.codegen.cache.maxEntries`` is raised to 2000 from 100:
+    one curation op compiles more generated classes than 100, so the
+    next op in the same JVM found its early classes evicted. Measured
+    on a 50-doc ``curate`` + ingest drain: 137 classes cold and 121 on
+    the repeat at 100 entries, 136 and 0 at 2000.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -74,6 +97,11 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # JVM case tables, not ICU: the first ICU case mapping in a JVM
+        # costs ~4 CPU-s of table building (see the docstring)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        # static: holds one op's generated classes (default 100)
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # pinned explicitly (it is the default, but a regression here
         # re-pays the ~2-2.5 s/worker pandas-import cold start on EVERY

@@ -53,8 +53,8 @@ def _leftovers(root) -> list[str]:
     "kw, jobs",
     [
         # the benchmark's shape: BM25 index on, no span tier, no event time
-        ({"bm25": True}, 32),
-        ({"span_dedup": True, "event_time_col": "ts"}, 47),
+        ({"bm25": True}, 29),
+        ({"span_dedup": True, "event_time_col": "ts"}, 44),
     ],
     ids=["bm25", "span_event_time"],
 )

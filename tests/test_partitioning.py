@@ -59,3 +59,60 @@ def test_operator_results_partition_invariant(spark, tmp_path):
     a = sorted(r.doc_id for r in near_dedup_minhash(docs1, k=3).collect())
     b = sorted(r.doc_id for r in near_dedup_minhash(docsN, k=3).collect())
     assert a == b
+
+
+def test_widen_decision_on_scan_and_checkpoint_inputs(spark, tmp_path):
+    # the decision is the input split count, as the inputs arrive
+    target = spark.sparkContext.defaultParallelism
+    spark.range(1000).coalesce(1).write.parquet(str(tmp_path / "one"))
+    scan = spark.read.parquet(str(tmp_path / "one"))
+    assert ensure_min_parallelism(scan) is not scan
+    one = spark.range(1000).coalesce(1).localCheckpoint(eager=True)
+    assert ensure_min_parallelism(one) is not one
+    wide = spark.range(1000).repartition(target).localCheckpoint(eager=True)
+    assert ensure_min_parallelism(wide) is wide
+
+
+def test_shuffled_input_runs_no_job_at_call_time(spark):
+    # reading the count of an adaptive plan must not run its map stages
+    # (the caller's action would run them again)
+    from test_loop import _jobs
+
+    base = spark.range(100).localCheckpoint(eager=True)
+
+    def grouped():
+        return base.groupBy((F.col("id") % 7).alias("k")).count()
+
+    df = grouped()
+    out = {}
+    assert _jobs(spark, lambda: out.update(r=ensure_min_parallelism(df))) == 0
+    alone = _jobs(spark, lambda: grouped().count())
+    assert _jobs(spark, lambda: ensure_min_parallelism(grouped()).count()) == alone
+    assert out["r"].count() == 7
+
+
+def test_adaptive_plan_over_scan_counts_scan_splits(spark, tmp_path):
+    # a broadcast join makes the plan adaptive while the output keeps
+    # the streamed scan's splits; a union adds its inputs' splits
+    from test_loop import _jobs
+
+    target = spark.sparkContext.defaultParallelism
+    small = F.broadcast(spark.range(10).withColumnRenamed("id", "k"))
+
+    def joined(n_files):
+        path = str(tmp_path / f"f{n_files}")
+        spark.range(1000).withColumnRenamed("id", "k").repartition(n_files).write.parquet(path)
+        return spark.read.parquet(path).join(small, "k")
+
+    one, full, half = joined(1), joined(target), joined(target // 2)
+    union = half.unionByName(half)
+    out = {}
+
+    def call():
+        out.update({name: ensure_min_parallelism(df) for name, df in
+                    (("one", one), ("full", full), ("union", union))})
+
+    assert _jobs(spark, call) == 0
+    assert out["one"] is not one
+    assert out["full"] is full
+    assert out["union"] is union

@@ -453,6 +453,61 @@ def test_normalize_text(spark):
     assert sorted(r.doc_id for r in kept.collect()) == [0, 3]
 
 
+# ASCII, Latin-1 and German sharp s, Greek final sigma, Turkish dotted
+# I, Cyrillic, CJK, emoji, combining marks, NULL and ''
+MULTILINGUAL = [
+    "The Quick  Brown FOX and the dog",
+    "Café CRÈME brûlée ß ẞ Straße",
+    "ΟΔΟΣ Σίσυφος ΣΟΦΟΣ",
+    "İSTANBUL ıi Iİ",
+    "ПРИВЕТ Мир И и",
+    "東京 日本語 ＡＢＣ",
+    "emoji 😀 👍🏽 ok THE END",
+    "Cafe\u0301 A\u030a e\u0308 THE",
+    None,
+    "",
+]
+
+
+def test_case_mapping_matches_icu_setting(spark):
+    """The session maps case through ``UTF8String``'s JVM tables
+    (``spark.sql.icu.caseMappings.enabled=false``, see
+    ``build_session``); ``normalize_text`` and ``stopword_ratio`` return
+    the same values as under ICU case mapping on multilingual text.
+    The two settings do differ on letters newer than the JVM's Unicode
+    (U+2C2F, Unicode 14), which shows the setting takes effect."""
+    from bigdata_quality_assessment_spark.operators.text import (
+        normalize_text,
+        stopword_ratio,
+    )
+    from bigdata_quality_assessment_spark.session import local_frame
+
+    key = "spark.sql.icu.caseMappings.enabled"
+    docs = local_frame(
+        spark, list(enumerate(MULTILINGUAL)), "doc_id long, text string"
+    )
+    cols = [
+        "doc_id",
+        normalize_text("text").alias("n"),
+        normalize_text("text", strip_punct=True).alias("np"),
+        stopword_ratio(F.col("text"), ("the", "and", "i", "и")).alias("r"),
+        F.lower(F.lit("\u2c2f")).alias("new_letter"),
+    ]
+
+    def run():
+        return sorted(tuple(r) for r in docs.select(*cols).collect())
+
+    assert spark.conf.get(key) == "false"
+    jvm = run()
+    spark.conf.set(key, "true")
+    try:
+        icu = run()
+    finally:
+        spark.conf.set(key, "false")
+    assert [r[:4] for r in jvm] == [r[:4] for r in icu]
+    assert jvm[0][4] == "\u2c2f" and icu[0][4] == "\u2c5f"
+
+
 def test_fuzzy_decontaminate_catches_paraphrase(spark):
     from bigdata_quality_assessment_spark.operators.text import (
         decontaminate,
