@@ -297,8 +297,8 @@ def near_dedup_audio(
     Returns the surviving rows of ``media``; undecodable / too-short
     clips always survive. ``two_level``: the ≳10⁶-clip scale regime —
     nested (band, sub-band) keys, identical results; ``"auto"`` (the
-    round-14 default) counts the fingerprint frame and engages it at
-    ≥10⁶ clips (see ``simhash_near_dedup``).
+    round-14 default) engages it at ≥10⁶ fingerprinted clips (see
+    ``simhash_near_dedup``).
 
     TRIM tier (round-14, ``seg_frames`` set): the whole-clip
     fingerprint is trim-BLIND by construction (see
@@ -327,12 +327,11 @@ def near_dedup_audio(
     generation over ``ceil(n/max_bucket)`` reduce keys. ``None``
     disables it (the exact round-15 plan).
 
-    Call-time cost: the fingerprint frame (segment tier: the
-    frame-hash probe of :func:`..phash.near_dedup_videos`) is an eager
-    barrier, so a call runs a corpus-scale decode-and-fingerprint job
-    before any action on the result, and its checkpoint blocks stay in
-    the block store until driver GC lets Spark's ContextCleaner
-    release them."""
+    The fingerprint barrier, the ``"auto"`` count and the call-time
+    cost (a corpus-scale decode-and-fingerprint job) are those of
+    :func:`..text._hamming_band_keys`, reached through
+    :func:`..text.simhash_near_dedup` or, in the segment tier,
+    :func:`..phash.near_dedup_videos`."""
     from .text import simhash_near_dedup
 
     if seg_frames is not None:
@@ -366,19 +365,14 @@ def near_dedup_audio(
         if fingerprints is not None
         else audio_fingerprint(media, content_col, id_col)
     )
-    # EAGER: same round-16 barrier discipline as near_dedup_images —
-    # an explicit two_level bool skips the sizing count, and the band
-    # self-join's two sides would race the cold lazy barrier into a
-    # double PCM decode
-    sig = fp.filter(F.col("afp").isNotNull()).select(
-        id_col, F.col("afp").alias("simhash")
-    ).localCheckpoint(eager=True)
     return simhash_near_dedup(
         media,
         max_hamming=max_hamming,
         id_col=id_col,
         cluster=cluster,
-        signatures=sig,
+        signatures=fp.filter(F.col("afp").isNotNull()).select(
+            id_col, F.col("afp").alias("simhash")
+        ),
         hash_fn="xxhash64",  # 64-bit signature → 16-bit bands
         two_level=two_level,
     )

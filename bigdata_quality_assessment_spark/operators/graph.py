@@ -33,14 +33,19 @@ Scale shape — two tiers, auto-selected by edge count:
   count+hash checksum instead of a full set comparison. Lineage is
   cut per round with a lazy barrier so the plan does not grow across
   iterations (the classic iterative-Spark failure mode).
+
+The bucket-keyed near-dup skeleton around the closure lives here too:
+:func:`_band_sides` + :func:`_band_pairs` are the band self-join
+(SimHash, media and embedding dedup), and :func:`drop_duplicates_of`
+is the one drop rule of the whole near-dup family.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Above this many directed edges the single-task tier would concentrate
@@ -246,3 +251,66 @@ def duplicate_drop_ids(
     id column name)."""
     cc = connected_components(pairs, src_col, dst_col)
     return cc.filter(F.col("id") != F.col("component")).select("id")
+
+
+def drop_duplicates_of(
+    rows: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    src_col: str,
+    dst_col: str,
+    cluster: bool,
+) -> DataFrame:
+    """The near-dup family's drop rule: ``rows`` without the duplicates
+    named by the verified ``pairs`` (``src < dst``). ``cluster=True``
+    keeps the minimum id of each connected component
+    (:func:`duplicate_drop_ids`); ``cluster=False`` drops the higher id
+    of each pair, which leaves transitive chains behind.
+
+    The anti-join is UNHINTED (round-14): on a real web corpus the
+    duplicate set is 30-50 % of all rows, so the broadcast-vs-shuffle
+    choice belongs to AQE's measured sizes; a forced broadcast is a
+    driver/executor OOM at 10⁹ rows."""
+    if cluster:
+        drop = duplicate_drop_ids(pairs, src_col, dst_col).select(
+            F.col("id").alias(id_col)
+        )
+    else:
+        drop = pairs.select(F.col(dst_col).alias(id_col)).distinct()
+    return rows.join(drop, id_col, "left_anti")
+
+
+def _band_sides(
+    keyed: DataFrame, id_col: str, keys: Column, carry: Mapping[str, str]
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a band self-join. ``keys`` is a per-row array
+    of band keys, exploded into ``(__t, __b)`` = (key position, key).
+    Side ``s`` ∈ {a, b} renames ``id_col`` to ``__id<s>`` and each
+    ``carry`` column ``c`` to ``carry[c] + s``. Only these columns ride
+    the join, never the payload the keys were derived from."""
+    e = keyed.select(id_col, *carry, F.posexplode(keys).alias("__t", "__b"))
+
+    def side(s: str) -> DataFrame:
+        return e.select(
+            F.col(id_col).alias("__id" + s),
+            *[F.col(c).alias(stem + s) for c, stem in carry.items()],
+            "__t", "__b",
+        )
+
+    return side("a"), side("b")
+
+
+def _band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    on: Sequence[str] = ("__t", "__b"),
+    unique: Sequence[str] = ("__ida", "__idb"),
+) -> DataFrame:
+    """Candidate pairs of a band self-join: rows of the two
+    :func:`_band_sides` sides that share every ``on`` key, each
+    unordered pair once (``__ida < __idb``) per ``unique`` key."""
+    return (
+        a.join(b, list(on))
+        .filter(F.col("__ida") < F.col("__idb"))
+        .dropDuplicates(list(unique))
+    )

@@ -20,8 +20,8 @@ Scale design (the 100 TB lens): the signature frame is 24 bytes/image
 3`` and 4 bands the pigeonhole argument makes the band equi-join
 COMPLETE (any qualifying pair shares at least one exact band), so
 verify touches candidate pairs only (corpus²/2¹⁶ per band in the
-uniform-hash worst case, far less on real corpora); the drop set is
-duplicates-only and broadcasts into the final anti-join. Decode cost
+uniform-hash worst case, far less on real corpora); the drop set
+joins unhinted (:func:`.graph.drop_duplicates_of`). Decode cost
 is one linear pass over the blobs, exactly `decode_media`'s plan
 shape. Reference scope: extends the reference's exact T5 dedup
 (/root/reference/SDE_forecast_ActiveSampling.py:134-135) to
@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph import _band_pairs, _band_sides, drop_duplicates_of
 from .partitioning import ensure_min_parallelism, id_ddl_type
 
 _I64 = 1 << 64
@@ -233,31 +234,24 @@ def near_dedup_images(
     (band, sub-band) keys cut same-bucket candidate pairs 2¹²× with
     identical results (completeness argument and the measured 2M-image
     single-level ceiling: simhash_near_dedup docstring /
-    BASELINE.md); ``"auto"`` (the round-14 default) counts the
-    decodable-hash frame and engages it at ≥10⁶ images, so a direct
-    20M-image call gets the scale regime without caller knowledge.
-    Call-time cost: the decodable-hash frame is an eager barrier, so a
-    call runs a corpus-scale decode-and-hash job before any action on
-    the result, and its checkpoint blocks stay in the block store
-    until driver GC lets Spark's ContextCleaner release them."""
+    BASELINE.md); ``"auto"`` (the round-14 default) engages it at
+    ≥10⁶ decodable images, so a direct 20M-image call gets the scale
+    regime without caller knowledge. The decodable-hash barrier, the
+    ``"auto"`` count and the call-time cost (a corpus-scale
+    decode-and-hash job) are those of :func:`..text._hamming_band_keys`."""
     from .text import simhash_near_dedup
 
     ph = hashes if hashes is not None else image_phash(
         media, content_col, id_col, grid
     )
-    # EAGER: with an explicit two_level bool no sizing count runs
-    # before the band self-join, and a lazy barrier lets the two join
-    # sides race the cold blocks into a DOUBLE image decode (round-16
-    # barrier discipline — see simhash_near_dedup / near_dedup_minhash)
-    sig = ph.filter(F.col("dhash").isNotNull()).select(
-        id_col, F.col("dhash").alias("simhash")
-    ).localCheckpoint(eager=True)
     return simhash_near_dedup(
         media,
         max_hamming=max_hamming,
         id_col=id_col,
         cluster=cluster,
-        signatures=sig,
+        signatures=ph.filter(F.col("dhash").isNotNull()).select(
+            id_col, F.col("dhash").alias("simhash")
+        ),
         hash_fn="xxhash64",  # 64-bit signature → 16-bit bands
         two_level=two_level,
     )
@@ -359,9 +353,8 @@ def near_dedup_videos(
     n²/2¹⁶ term the image tier measured, so at ≳10⁶ videos per frame
     slot the 16-key/2²⁸ keying applies verbatim with identical
     verified pairs (see ``simhash_near_dedup``); ``"auto"`` (the
-    round-14 default) counts the decodable-video set — the per-slot
-    signature population IS the video count — and engages it at ≥10⁶
-    videos.
+    round-14 default) engages it at ≥10⁶ decodable videos — the
+    per-slot signature population IS the video count.
 
     ``max_bucket`` (round-16, VERDICT r15 ask #4 — §2.5 skew): a
     HOT-BUCKET SALT-SPLIT guard for the candidate join. Low-entropy
@@ -387,11 +380,10 @@ def near_dedup_videos(
     segment tier — where the hazard was measured — passes a default
     through :func:`..audio.near_dedup_audio`.
 
-    Call-time cost: the decodable frame-hash probe is an eager
-    barrier, so a call runs a corpus-scale decode-and-hash job before
-    any action on the result, and its checkpoint blocks stay in the
-    block store until driver GC lets Spark's ContextCleaner release
-    them."""
+    The decodable frame-hash barrier, the ``"auto"`` count and the
+    call-time cost (a corpus-scale decode-and-hash job) are those of
+    :func:`..text._hamming_band_keys`; ``max_bucket`` adds its probe
+    job at call time."""
     if max_bucket is not None and max_bucket < 1:
         raise ValueError("max_bucket must be >= 1 when set")
     if not 0 < min_frame_frac <= 1:
@@ -400,57 +392,36 @@ def near_dedup_videos(
         raise ValueError("min_frame_frac must be in (0, 1]")
     if max_offset < 0:
         raise ValueError("max_offset must be >= 0")
-    from .text import _hamming_band_keys
+    from .text import _hamming_band_keys, _within_hamming
 
     fh = (
         frame_hashes
         if frame_hashes is not None
         else frame_phash(media, n_frames, content_col, id_col)
     )
-    # EAGER: the banded self-join (plus the round-16 bucket-size
-    # frame) reads this barrier from several subtrees of one job; a
-    # lazy barrier is only safe when the auto-tier count materializes
-    # it first, which an explicit two_level bool skips (round-16
-    # barrier discipline — one decode pass, guaranteed)
-    fh = fh.filter(F.col("dhash").isNotNull()).localCheckpoint(eager=True)
+    fh, keys = _hamming_band_keys(
+        fh.filter(F.col("dhash").isNotNull()).select(
+            id_col, "frame_id", "dhash"
+        ),
+        id_col, "dhash", 16, two_level, max_hamming,
+    )
     n_by_vid = fh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__nf"))
-    # fh is already materialized (eager barrier above), so the auto
-    # tier's sizing count is a cheap aggregate over stored blocks
-    bands = _hamming_band_keys(
-        F.col("dhash"), 16, two_level, max_hamming, n_by_vid.count
-    )
-    fhe = fh.select(
-        F.col(id_col), "frame_id", "dhash",
-        F.posexplode(bands).alias("__t", "__b"),
-    )
-    a = fhe.select(
-        F.col(id_col).alias("__ida"), F.col("frame_id").alias("__slot"),
-        F.col("dhash").alias("__da"), "__t", "__b",
-    )
-    b = fhe.select(
-        F.col(id_col).alias("__idb"), F.col("frame_id"),
-        F.col("dhash").alias("__db"), "__t", "__b",
-    )
+    a, b = _band_sides(fh, id_col, keys, {"dhash": "__s", "frame_id": "__f"})
+    a = a.withColumnRenamed("__fa", "__slot")
     if max_offset == 0:
-        b = b.select(
-            "__idb", F.lit(0).alias("__delta"),
-            F.col("frame_id").alias("__slot"), "__db", "__t", "__b",
-        )
+        # the unshifted b side keeps a's exchange shape, so both sides
+        # read one shuffle (ReusedExchange)
+        b = b.withColumn("__delta", F.lit(0))
     else:
-        # side b participates at every shifted slot: a's frame i
-        # aligns with b's frame i + δ, i.e. b's frame j votes at
-        # slot j − δ
+        # side b participates at every shifted slot: a's frame i aligns
+        # with b's frame i + δ, i.e. b's frame j votes at slot j − δ
         deltas = F.array(
             *[F.lit(d) for d in range(-max_offset, max_offset + 1)]
         )
-        b = b.select(
-            "__idb", F.explode(deltas).alias("__delta"),
-            "frame_id", "__db", "__t", "__b",
-        ).select(
-            "__idb", "__delta",
-            (F.col("frame_id") - F.col("__delta")).alias("__slot"),
-            "__db", "__t", "__b",
+        b = b.withColumn("__delta", F.explode(deltas)).withColumn(
+            "__fb", F.col("__fb") - F.col("__delta")
         )
+    b = b.withColumnRenamed("__fb", "__slot")
     # slot-aligned candidate pairs: same frame slot (per offset),
     # same band bucket
     join_keys = ["__slot", "__t", "__b"]
@@ -467,9 +438,7 @@ def near_dedup_videos(
         # when it trips, the engagement is warned with the measured
         # population. Inner-joining the count frame drops only keys
         # absent from the a side, which produce no candidates anyway.
-        bsz = fhe.groupBy(
-            F.col("frame_id").alias("__slot"), "__t", "__b"
-        ).agg(F.count(F.lit(1)).alias("__bn"))
+        bsz = a.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("__bn"))
         mx_row = bsz.agg(F.max("__bn").alias("mx")).first()
         mx = int(mx_row["mx"] or 0)
         if mx <= max_bucket:
@@ -486,7 +455,7 @@ def near_dedup_videos(
             )
     if max_bucket is not None:
         bsz = bsz.select(
-            "__slot", "__t", "__b",
+            *join_keys,
             F.greatest(
                 F.ceil(F.col("__bn") / max_bucket), F.lit(1)
             ).cast("int").alias("__ns"),
@@ -508,14 +477,9 @@ def near_dedup_videos(
             .drop("__ns")
         )
         join_keys = ["__slot", "__t", "__b", "__salt"]
-    cand_frames = (
-        a.join(b, join_keys)
-        .filter(F.col("__ida") < F.col("__idb"))
-        .dropDuplicates(["__ida", "__idb", "__delta", "__slot"])
-        .filter(
-            F.bit_count(F.col("__da").bitwiseXOR(F.col("__db"))) <= max_hamming
-        )
-    )
+    cand_frames = _band_pairs(
+        a, b, join_keys, ["__ida", "__idb", "__delta", "__slot"]
+    ).filter(_within_hamming(max_hamming))
     matched = cand_frames.groupBy("__ida", "__idb", "__delta").agg(
         F.count(F.lit(1)).alias("__match")
     )
@@ -533,12 +497,4 @@ def near_dedup_videos(
         )
         .dropDuplicates(["__ida", "__idb"])
     )
-    if cluster:
-        from .graph import duplicate_drop_ids
-
-        dup = duplicate_drop_ids(verified, "__ida", "__idb").select(
-            F.col("id").alias(id_col)
-        )
-    else:
-        dup = verified.select(F.col("__idb").alias(id_col)).distinct()
-    return media.join(dup, id_col, "left_anti")
+    return drop_duplicates_of(media, verified, id_col, "__ida", "__idb", cluster)

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
 from ..session import local_frame
+from .graph import _band_pairs, _band_sides, drop_duplicates_of
 from .partitioning import ensure_min_parallelism
 
 
@@ -1229,7 +1230,16 @@ def embedding_near_dedup(
     higher-id drop, which misses transitive chains). Returns the
     surviving rows of ``corpus``. ``planes`` pins the LSH projections
     (see :func:`hyperplane_buckets`) for the oracle-graded variant;
-    ``impl`` selects the projection path (Arrow gemm default)."""
+    ``impl`` selects the projection path (Arrow gemm default).
+
+    The band self-join and the drop rule are the near-dup family's
+    (:func:`.graph._band_pairs`, :func:`.graph.drop_duplicates_of`).
+    The bucket frame is a LAZY barrier, unlike the Hamming family's
+    eager one (:func:`.text._hamming_band_keys`): traced, the corpus
+    is derived once for the join and once for the final anti-join,
+    with no recompute race. Call-time cost: with ``cluster=True`` the
+    closure's eager edge barrier (:func:`.graph.connected_components`)
+    runs the candidate and verify jobs when the operator is called."""
     # Lazy barrier on the pre-explode bucket frame (corpus + n_tables
     # longs per row): the a/b self-join below otherwise re-executes the
     # n_tables × n_planes × dim hyperplane dot products once per side.
@@ -1237,35 +1247,15 @@ def embedding_near_dedup(
         _widen_for_fanout(corpus), dim, n_planes, n_tables, seed,
         id_col, vec_col, planes=planes, impl=impl,
     ).localCheckpoint(eager=False)
-    buckets = [F.col(f"bucket_{t}") for t in range(n_tables)]
-    cbe = cb.select(
-        id_col, "__v", F.posexplode(F.array(*buckets)).alias("__t", "__b")
-    )
-    a = cbe.select(
-        F.col(id_col).alias("id_a"), F.col("__v").alias("__va"), "__t", "__b"
-    )
-    b = cbe.select(
-        F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"), "__t", "__b"
-    )
-    pairs = (
-        a.join(b, ["__t", "__b"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "__va", "__vb")
+    a, b = _band_sides(
+        cb, id_col, F.array(*[F.col(f"bucket_{t}") for t in range(n_tables)]),
+        {"__v": "__v"},
     )
     verified = _rowwise_cosine(
-        pairs.dropDuplicates(["id_a", "id_b"]),
-        "__va", "__vb", ["id_a", "id_b"],
+        _band_pairs(a, b), "__va", "__vb", ["__ida", "__idb"],
         impl=_resolve_impl(impl, pinned=planes is not None),
     ).filter(F.col("cosine") >= threshold)
-    if cluster:
-        from bigdata_quality_assessment_spark.operators.graph import duplicate_drop_ids
-
-        dup = duplicate_drop_ids(verified, "id_a", "id_b").select(
-            F.col("id").alias(id_col)
-        )
-    else:
-        dup = verified.select(F.col("id_b").alias(id_col)).distinct()
-    return corpus.join(dup, id_col, "left_anti")
+    return drop_duplicates_of(corpus, verified, id_col, "__ida", "__idb", cluster)
 
 
 def semantic_dedup(

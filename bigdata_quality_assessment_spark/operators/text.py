@@ -17,12 +17,11 @@ linearly with the corpus.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
+from .graph import _band_pairs, _band_sides, drop_duplicates_of
 from .partitioning import ensure_min_parallelism, id_ddl_type
 
 # A deliberately tiny multilingual stopword lexicon — enough for a
@@ -885,7 +884,6 @@ def near_dedup_minhash(
     call runs a corpus-scale Spark job before any action on the
     result, and its checkpoint blocks stay in the block store until
     driver GC lets Spark's ContextCleaner release them."""
-    from bigdata_quality_assessment_spark.operators.graph import duplicate_drop_ids
     # ONE shingling pass feeds everything: the signatures and BOTH
     # verify sides read the per-doc distinct shingle hashes, stored as
     # ``(doc_id, array<bigint>)`` — one row per document, 8 bytes per
@@ -917,11 +915,7 @@ def near_dedup_minhash(
         )
         .select("doc_a", "doc_b")
     )
-    if cluster:
-        drop_ids = duplicate_drop_ids(verified).select(F.col("id").alias(id_col))
-    else:
-        drop_ids = verified.select(F.col("doc_b").alias(id_col)).distinct()
-    return docs.join(drop_ids, id_col, "left_anti")
+    return drop_duplicates_of(docs, verified, id_col, "doc_a", "doc_b", cluster)
 
 
 def _simhash_bits(hash_fn: str) -> int:
@@ -980,35 +974,65 @@ def simhash(
 
 
 def _hamming_band_keys(
-    sig: Column,
+    sig: DataFrame,
+    id_col: str,
+    sig_col: str,
     band_bits: int,
     two_level: bool | str,
     max_hamming: int,
-    n_signatures: Callable[[], int],
-) -> Column:
-    """The pigeonhole band keys of a ``4 · band_bits``-bit Hamming
-    signature, as one array per row; the caller posexplodes it and
-    equi-joins on (position, key). Single-level: the 4 primary bands.
+) -> tuple[DataFrame, Column]:
+    """The Hamming near-dup family's kernel: the one signature barrier
+    and the pigeonhole band keys of its ``4 · band_bits``-bit
+    signatures. ``sig`` is the raw signature frame (``sig_col`` per
+    item, or per (video, frame slot)); returns ``(barrier, keys)``,
+    where ``keys`` is one band-key array per barrier row for
+    :func:`.graph._band_sides`. Single-level: the 4 primary bands.
     ``two_level=True``: each primary band t packed with each of 4
     sub-bands of the other three bands' bits — 16 keys (the nested
-    pigeonhole of :func:`simhash_near_dedup`). ``"auto"`` engages the
-    nested keys at ``n_signatures() ≥ TWO_LEVEL_AUTO_THRESHOLD``.
-    Complete (no pair within ``max_hamming`` is missed) only for
-    ``max_hamming ≤ 3``, which is checked here."""
+    pigeonhole of :func:`simhash_near_dedup`). Complete (no pair
+    within ``max_hamming`` is missed) only for ``max_hamming ≤ 3``,
+    which is checked here, before any job runs.
+
+    Barrier discipline (round-16): the barrier is an EAGER
+    ``localCheckpoint`` for every ``two_level``. Both sides of the band
+    self-join read it, and a lazy barrier lets them race its cold
+    blocks into deriving the signatures twice (a second shingling,
+    image decode or PCM decode). Callers pass the raw frame and add
+    no barrier of their own.
+
+    ``two_level="auto"`` engages the nested keys at
+    ``TWO_LEVEL_AUTO_THRESHOLD`` items, sized by an ``Observation`` of
+    ``approx_count_distinct(id_col)`` on the barrier's own job, so the
+    sizing runs no job of its own (observed metrics refuse DISTINCT
+    aggregates). With one signature per item (docs, images, clips) it
+    estimates the item count; over frame hashes, the decodable-video
+    count. It is exact at small counts; near 10⁶ its ~5 % error can
+    only change which of two output-identical regimes runs.
+
+    Call-time cost: the barrier job is a corpus-scale signature pass
+    (shingle + vote, image decode, audio decode) that runs when the
+    operator is called, before any action on its result, and its
+    checkpoint blocks stay in the block store until driver GC lets
+    Spark's ContextCleaner release them. ``"auto"`` runs the same jobs
+    as an explicit bool."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("4-band banding is complete only for max_hamming <= 3")
-    if two_level == "auto":
-        two_level = n_signatures() >= TWO_LEVEL_AUTO_THRESHOLD
-    elif not isinstance(two_level, bool):
+    if two_level != "auto" and not isinstance(two_level, bool):
         raise ValueError(f"two_level must be a bool or 'auto', got {two_level!r}")
+    if two_level == "auto":
+        obs = Observation()
+        sig = sig.observe(obs, F.approx_count_distinct(id_col).alias("n"))
+    sig = sig.localCheckpoint(eager=True)
+    if two_level == "auto":
+        two_level = obs.get["n"] >= TWO_LEVEL_AUTO_THRESHOLD
 
     def band(t: int) -> Column:
-        return F.shiftrightunsigned(sig, band_bits * t).bitwiseAND(
+        return F.shiftrightunsigned(F.col(sig_col), band_bits * t).bitwiseAND(
             F.lit((1 << band_bits) - 1)
         )
 
     if not two_level:
-        return F.array(*[band(t) for t in range(4)])
+        return sig, F.array(*[band(t) for t in range(4)])
     sub_bits = (3 * band_bits) // 4
     keys = []
     for t in range(4):
@@ -1022,7 +1046,14 @@ def _hamming_band_keys(
                 F.lit((1 << sub_bits) - 1)
             )
             keys.append(F.shiftleft(band(t), sub_bits).bitwiseOR(sub))
-    return F.array(*keys)
+    return sig, F.array(*keys)
+
+
+def _within_hamming(max_hamming: int) -> Column:
+    """The Hamming family's exact verify over :func:`.graph._band_pairs`
+    candidates whose sides carry the signature as ``__s``:
+    ``bit_count(__sa XOR __sb) ≤ max_hamming``."""
+    return F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))) <= max_hamming
 
 
 def simhash_near_dedup(
@@ -1053,13 +1084,8 @@ def simhash_near_dedup(
     qualifying pair (same banding argument as MinHash-LSH, but exact).
     Candidate volume per band key ≈ corpus/2^band_bits; the signature frame is
     (id, BIGINT) — the equi-join never carries document text. The drop
-    set joins UNHINTED (round-14): on a real web-media corpus the
-    perceptual-duplicate set is 30-50 % of ALL rows — corpus-shaped,
-    not dimension-shaped — so the broadcast-vs-shuffle choice belongs
-    to AQE's measured sizes, exactly the discipline
-    :func:`near_dedup_minhash` and :func:`near_dedup_videos` apply; a
-    forced broadcast here is a driver/executor OOM at 10⁹ images (this
-    operator backs the whole SimHash media-dedup family).
+    set joins UNHINTED (:func:`.graph.drop_duplicates_of`); this
+    operator backs the whole SimHash media-dedup family.
 
     ``two_level=True`` is the SCALE regime for the band join (round-13
     — retires the measured 2M-image n²/2¹⁶ candidate ceiling,
@@ -1077,86 +1103,28 @@ def simhash_near_dedup(
     runtime (≳10⁶ signatures), loses for small corpora where the extra
     explode outweighs the collision savings. ``two_level="auto"`` (the
     round-14 default, mirroring the embedding family's count-driven
-    two-regime CASE in similarity.py): count the signature frame —
-    which ALSO materializes its lazy barrier exactly once, a job the
-    first join action would have run anyway — and engage the nested
-    regime at ≥ ``TWO_LEVEL_AUTO_THRESHOLD`` (10⁶) signatures, so a
+    two-regime CASE in similarity.py) engages the nested regime at
+    ≥ ``TWO_LEVEL_AUTO_THRESHOLD`` (10⁶) signatures, counted on the
+    signature barrier's own job (:func:`_hamming_band_keys`), so a
     direct ``near_dedup_images(media)`` at 20M images gets the scale
     regime without caller knowledge. Pass an explicit bool to pin
     either regime (identity across the boundary is pytest-pinned).
 
     ``signatures``: optional precomputed ``simhash(docs, ...)`` frame —
     pass it when the caller ALSO consumes the signatures so the
-    shingling + 64-vote pass runs once, not once per consumer (put an
-    EAGER ``localCheckpoint`` on it — the band self-join's two sides
-    race a lazy one into duplicate recompute, see below; this function
-    adds one otherwise).
-
-    Call-time cost: without ``signatures`` the signature frame is an
-    eager barrier, so a call runs a corpus-scale Spark job before any
-    action on the result, and its checkpoint blocks stay in the block
-    store until driver GC lets Spark's ContextCleaner release them."""
-    # EAGER barrier on the (id, simhash) frame — 16 bytes/doc. The a/b
-    # band self-join below otherwise re-executes the whole shingling +
-    # 64-vote aggregation once per side: a LAZY barrier only protects
-    # consumers that run after something materializes it, and with an
-    # explicit two_level bool no sizing count runs first — the two
-    # join sides then race the cold barrier into duplicate recompute
-    # (round-16; the same racy-cold-cache pathology measured on
-    # near_dedup_minhash's shingle table at sf10).
+    shingling + 64-vote pass runs once, not once per consumer. It
+    needs no barrier of its own: the signature barrier, the
+    ``"auto"`` count and the call-time cost are those of
+    :func:`_hamming_band_keys`, which derives the frame exactly once."""
     if signatures is None:
-        sig = simhash(docs, text_col, k, mode, id_col, hash_fn).localCheckpoint(
-            eager=True
-        )
-    else:
-        sig = signatures
-    if (
-        two_level == "auto"
-        and signatures is not None
-        and sig._jdf.queryExecution().logical().getClass().getSimpleName()
-        != "LogicalRDD"
-    ):
-        # the auto count is an extra action over the caller's frame;
-        # without a barrier an UNcheckpointed precomputed frame would
-        # run its full derivation twice (count + band join) — a silent
-        # regression vs two_level=False for existing callers (round-15,
-        # ADVICE). Frames that already sit on a checkpoint boundary
-        # (LogicalRDD — both lazy and eager localCheckpoint produce
-        # one) are left alone so the internal audio/image callers don't
-        # pay a second copy.
-        sig = sig.localCheckpoint(eager=False)
-    bands = _hamming_band_keys(
-        F.col("simhash"), _simhash_bits(hash_fn) // 4, two_level, max_hamming,
-        sig.count,
+        signatures = simhash(docs, text_col, k, mode, id_col, hash_fn)
+    sig, keys = _hamming_band_keys(
+        signatures, id_col, "simhash", _simhash_bits(hash_fn) // 4,
+        two_level, max_hamming,
     )
-    sige = sig.select(
-        F.col(id_col), F.col("simhash"), F.posexplode(bands).alias("__t", "__b")
-    )
-    a = sige.select(
-        F.col(id_col).alias("__ida"), F.col("simhash").alias("__sa"), "__t", "__b"
-    )
-    b = sige.select(
-        F.col(id_col).alias("__idb"), F.col("simhash").alias("__sb"), "__t", "__b"
-    )
-    verified = (
-        a.join(b, ["__t", "__b"])
-        .filter(F.col("__ida") < F.col("__idb"))
-        .dropDuplicates(["__ida", "__idb"])
-        .filter(
-            F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))) <= max_hamming
-        )
-    )
-    if cluster:
-        from bigdata_quality_assessment_spark.operators.graph import duplicate_drop_ids
-
-        dup = duplicate_drop_ids(verified, "__ida", "__idb").select(
-            F.col("id").alias(id_col)
-        )
-    else:
-        dup = verified.select(F.col("__idb").alias(id_col)).distinct()
-    # unhinted: dup is corpus-shaped in the worst case (docstring); AQE
-    # broadcasts measured-small drop sets on its own
-    return docs.join(dup, id_col, "left_anti")
+    a, b = _band_sides(sig, id_col, keys, {"simhash": "__s"})
+    verified = _band_pairs(a, b).filter(_within_hamming(max_hamming))
+    return drop_duplicates_of(docs, verified, id_col, "__ida", "__idb", cluster)
 
 
 # --------------------------------------------------------------------

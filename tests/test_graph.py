@@ -3,6 +3,7 @@ the near-dedup families (transitive chains must not survive)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_quality_assessment_spark.operators.graph import (
@@ -56,6 +57,43 @@ def test_near_dedup_minhash_closes_transitive_chains(spark):
     )
     kept_pw = {r["doc_id"] for r in pairwise.collect()}
     assert kept.issubset(kept_pw)
+
+
+# a transitive chain of 64-bit signatures: 1-3 and 2-3 differ in 2
+# bits, 1-2 in 4 (over max_hamming=3, and no shared band either)
+_CHAIN = {1: 0, 3: 1 | 1 << 16, 2: 1 | 1 << 16 | 1 << 32 | 1 << 48}
+
+
+def _chain_simhash(spark, cluster):
+    from bigdata_quality_assessment_spark.operators.text import simhash_near_dedup
+
+    sig = spark.createDataFrame(list(_CHAIN.items()), "doc_id long, simhash long")
+    docs = sig.select("doc_id", F.lit("unused").alias("text"))
+    return simhash_near_dedup(docs, signatures=sig, cluster=cluster)
+
+
+def _chain_videos(spark, cluster):
+    from bigdata_quality_assessment_spark.operators.phash import near_dedup_videos
+
+    # two frames per video, each frame's hash the chain pattern XOR a
+    # per-frame base, so every aligned frame pair keeps its distance
+    fh = spark.createDataFrame(
+        [(v, f, s ^ base) for v, s in _CHAIN.items() for f, base in enumerate((7, -99))],
+        "media_id long, frame_id long, dhash long",
+    )
+    media = spark.createDataFrame([(v,) for v in _CHAIN], "media_id long")
+    return near_dedup_videos(media, frame_hashes=fh, cluster=cluster)
+
+
+@pytest.mark.parametrize("run", [_chain_simhash, _chain_videos], ids=["simhash", "videos"])
+def test_hamming_drop_rule_keeps_cluster_minimum(spark, run):
+    """The shared drop rule (graph.drop_duplicates_of) on a transitive
+    chain: cluster=True keeps only the component minimum, cluster=False
+    drops the higher id of each verified pair (1-3, 2-3) and keeps 2."""
+    kept = {r[0] for r in run(spark, True).collect()}
+    assert kept == {1}
+    kept_pw = {r[0] for r in run(spark, False).collect()}
+    assert kept_pw == {1, 2}
 
 
 def test_cc_single_and_iterative_agree(spark):

@@ -29,9 +29,11 @@ from bigdata_quality_assessment_spark.operators.models import (
     train_ensemble,
 )
 from bigdata_quality_assessment_spark.operators.multimodal import decode_media
+from bigdata_quality_assessment_spark.operators.phash import near_dedup_videos
 from bigdata_quality_assessment_spark.operators.score import inverse_density_weights
 from bigdata_quality_assessment_spark.operators.select import pool_remove
 from bigdata_quality_assessment_spark.operators.similarity import (
+    embedding_near_dedup,
     ivf_knn,
     ivfpq_knn,
     knn_brute_force,
@@ -46,6 +48,7 @@ from bigdata_quality_assessment_spark.operators.text import (
     minhash_lsh_candidates,
     minhash_signatures,
     near_dedup_minhash,
+    simhash,
     simhash_near_dedup,
 )
 from bigdata_quality_assessment_spark.pipeline import CurationConfig, curate
@@ -146,6 +149,19 @@ def _bm25_inc(t):
                        df_frame=d_a)
 
 
+def _doc_frames(t):
+    """Two frame slots per document: its word and character SimHash."""
+    return simhash(t["docs"]).select(
+        F.col("doc_id").alias("media_id"), F.lit(0).alias("frame_id"),
+        F.col("simhash").alias("dhash"),
+    ).union(
+        simhash(t["docs"], mode="char", k=5).select(
+            F.col("doc_id").alias("media_id"), F.lit(1).alias("frame_id"),
+            F.col("simhash").alias("dhash"),
+        )
+    )
+
+
 def _media(t):
     return t["docs"].select(
         F.col("doc_id").alias("media_id"), F.encode("text", "UTF-8").alias("content")
@@ -185,6 +201,11 @@ AUDITED = {
     # AQE broadcasts measured-small drop sets itself)
     "exact_dedup": (lambda s, t: exact_dedup(t["docs"]), ()),
     "simhash_near_dedup": (lambda s, t: simhash_near_dedup(t["docs"]), (SINGLE,)),
+    "near_dedup_videos": (
+        lambda s, t: near_dedup_videos(_media(t), frame_hashes=_doc_frames(t)),
+        (SINGLE,),
+    ),
+    "embedding_near_dedup": (lambda s, t: embedding_near_dedup(t["emb"]), (SINGLE,)),
     # knn: two-phase top-k — no single-partition sort over the scored
     # corpus (phase-1 window partitions on (query, spark_partition_id))
     "knn_two_phase_topk_sql": (lambda s, t: knn_brute_force(t["emb"], t["q"], k=5, impl="sql"), ()),

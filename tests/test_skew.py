@@ -49,8 +49,12 @@ def test_aqe_skew_join_splits_hot_key(spark):
         assert "skew=true" in plan, plan
         assert "skewed" in plan, plan
     finally:
+        # unset what was unset: leaving these on would run every later
+        # test in the shared session without broadcast joins
         for k, v in old.items():
-            if v is not None:
+            if v is None:
+                spark.conf.unset(k)
+            else:
                 spark.conf.set(k, v)
 
 
