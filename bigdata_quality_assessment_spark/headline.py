@@ -28,6 +28,7 @@ from .operators.select import argmax, top_k
 from .operators.similarity import knn_brute_force
 from .operators.text import near_dedup_minhash
 from .operators.windows import horizon_abs_error, sliding_windows
+from .session import barrier
 from .sources.generators import grid_points_2d, stub_predictions
 from .sources.tables import load_table
 from .streaming.aggregates import session_metrics, with_event_time
@@ -85,9 +86,9 @@ def flagship_us_lw(spark: SparkSession, sf_dir: str) -> Query:
     # carry point columns through the stats groupBy (F.first per unique
     # key) — one shuffle, no join-back exchange of the pool
     carry = ["x1", "x2", "y"]
-    scored = ensemble_stats(
-        stub_predictions(pts, 2, carry_cols=carry), carry_cols=carry
-    ).localCheckpoint(eager=True)
+    scored = barrier(
+        ensemble_stats(stub_predictions(pts, 2, carry_cols=carry), carry_cols=carry)
+    )
     grid = kde_1d(scored, "y_mean", bw=0.1, ngrid=256)
     with_fy = interp_uniform_grid(scored, grid, q_col="y_mean", out_col="pdf_y_mean")
     acq = with_fy.withColumn("acq", acquisition_us_lw(with_fy))

@@ -68,7 +68,7 @@ from .operators.select import (
     train_append,
     weighted_sample_with_replacement,
 )
-from .session import local_frame
+from .session import barrier, local_frame
 
 
 @dataclass
@@ -113,7 +113,7 @@ def initial_selection(
     # references ``values`` twice — without the checkpoint Catalyst
     # re-analyzes the whole upstream per reference (seconds of pure
     # planning), and the sampler pipeline re-EXECUTES per action.
-    draws = draws.localCheckpoint(eager=True)
+    draws = barrier(draws)
     values = draws.select(y_col, "draw_id")
     matched = middle_match(points, values, on=y_col, id_col=id_col)
     return matched.drop("draw_id")
@@ -228,8 +228,6 @@ def active_sampling_loop(
     metrics: list[dict] = []
     thetas = fit_members()
 
-    from pyspark.sql import Observation
-
     def _pad_bounds(mn, mx, pad: float = 0.01):
         """kde_1d_multi's internal bounds rule on driver floats — the
         same IEEE double ops the Catalyst expressions perform, so the
@@ -247,7 +245,7 @@ def active_sampling_loop(
         # (predict_ensemble + ensemble_stats remain the general path).
         # For the poly family it is a Catalyst projection (no Python
         # worker); the mlp family scores in an Arrow pandas UDF.
-        # ``localCheckpoint(eager=True)`` both MATERIALIZES the pass
+        # The eager ``barrier`` both MATERIALIZES the pass
         # (one clean execution — the fanned-out consumers below all
         # read stored blocks, no racy cold-cache recompute) and
         # TRUNCATES lineage to a LogicalRDD, so every downstream frame
@@ -272,7 +270,6 @@ def active_sampling_loop(
             ~F.col(id_col).isin(*explorer_ids) if explorer_ids else None
         )
         need_pool = "us_lw" in acq_list or "us_lgw" in acq_list
-        obs = Observation()
         obs_exprs = [
             F.least(F.min("y_mean"), F.min(y_col)).alias("jmn"),
             F.greatest(F.max("y_mean"), F.max(y_col)).alias("jmx"),
@@ -286,13 +283,12 @@ def active_sampling_loop(
             obs_exprs += [
                 F.min(pool_col).alias("pmn"), F.max(pool_col).alias("pmx"),
             ]
-        scored = (
-            score_pool(thetas)
-            .withColumn("se", (F.col("y_mean") - F.col(y_col)) * (F.col("y_mean") - F.col(y_col)))
-            .observe(obs, *obs_exprs)
-            .localCheckpoint(eager=True)
+        scored, ob = barrier(
+            score_pool(thetas).withColumn(
+                "se", (F.col("y_mean") - F.col(y_col)) * (F.col("y_mean") - F.col(y_col))
+            ),
+            *obs_exprs,
         )
-        ob = obs.get  # filled: the eager checkpoint ran the job
 
         # The iteration needs THREE densities of the scored pool —
         # pred + truth on the shared joint-range A13 grid rebuilt per
@@ -453,17 +449,17 @@ def sde_initial_resample(
         grid = kde_1d(with_c, "__c", bw=bw, ngrid=ngrid)
         with_pdf = interp_uniform_grid(with_c, grid, q_col="__c", out_col="__pdf")
         weighted = inverse_density_weights(with_pdf, pdf_col="__pdf", weight_col="__w")
-        draws = weighted_sample_with_replacement(
+        # draw-sized lineage cut: the n_modes per-mode KDE→sampler
+        # plans otherwise union into one enormous tree (see
+        # initial_selection).
+        draws = barrier(weighted_sample_with_replacement(
             weighted.select(id_col, "__c", "__w"),
             "__w",
             n_draws,
             seed=seed + mode,
             id_col=id_col,
             rng="spark",  # golden continuity — see initial_selection
-        # draw-sized lineage cut: the n_modes per-mode KDE→sampler
-        # plans otherwise union into one enormous tree (see
-        # initial_selection).
-        ).localCheckpoint(eager=True)
+        ))
         # every window matching a drawn coefficient value (values are
         # continuous, so almost always exactly the drawn row itself)
         matched = with_c.join(
@@ -552,10 +548,12 @@ def sde_forecast_loop(
         picked = sde_initial_resample(
             coeffs, n_modes=n_modes, n_draws=n_draws, bw=bw, ngrid=ngrid, seed=seed
         )
-    train = picked.select("window_id", "history", "target").localCheckpoint(eager=True)
-    pool = pool_remove(joint, train, id_col="window_id").select(
-        "window_id", "history", "target"
-    ).localCheckpoint(eager=True)
+    train = barrier(picked.select("window_id", "history", "target"))
+    pool = barrier(
+        pool_remove(joint, train, id_col="window_id").select(
+            "window_id", "history", "target"
+        )
+    )
 
     if forecaster_family == "lstm":
         from .operators.lstm import fit_lstm_forecaster_df, predict_lstm_forecaster
@@ -596,13 +594,13 @@ def sde_forecast_loop(
     metrics: list[dict] = []
     for it in range(n_iter):
         err = pred.withColumn("horizon_err", horizon_err)
-        sel = (
-            top_k(err, "horizon_err", n_select, id_col="window_id")
-            .select("window_id", "history", "target")
-            .localCheckpoint(eager=True)
+        sel = barrier(
+            top_k(err, "horizon_err", n_select, id_col="window_id").select(
+                "window_id", "history", "target"
+            )
         )
-        train = train_append(train, sel).localCheckpoint(eager=True)
-        pool = pool_remove(pool, sel, id_col="window_id").localCheckpoint(eager=True)
+        train = barrier(train_append(train, sel))
+        pool = barrier(pool_remove(pool, sel, id_col="window_id"))
         weights = fit_fc(train, weights)
 
         prev = pred

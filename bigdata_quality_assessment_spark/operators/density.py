@@ -29,6 +29,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import barrier
+
 
 def minmax(df: DataFrame, col: str) -> DataFrame:
     """A10: global min/max of a column (one-row frame, broadcastable)."""
@@ -318,11 +320,12 @@ def kde_1d(
     # measured plans showed 3× the binning shuffle and 7× the source
     # scan in one job with ReuseExchange finding nothing (the broadcast
     # subtrees differ above the shared exchange). The checkpoint makes
-    # single-execution physical: still no eager job (eager=False — the
-    # first action materializes it), but all consumers then share the
-    # stored ≤ngrid rows. At 100 TB this is the difference between one
-    # pool scan per KDE and one per KDE *reference*.
-    return pdf.localCheckpoint(eager=False)
+    # single-execution physical: the first action stores the ≤ngrid
+    # rows and all consumers share them. It is not job-free: the
+    # binning and convolution shuffles' map stages run at call time
+    # (see ``session.barrier``). At 100 TB this is the difference
+    # between one pool scan per KDE and one per KDE *reference*.
+    return barrier(pdf, lazy=True)
 
 
 def kde_1d_pair(
@@ -432,7 +435,7 @@ def kde_1d_multi(
     # filters from pushing below the aggregate into N source scans,
     # and is the only physical-plan compilation the whole N-density
     # family pays.
-    binned = _kde_binned(df, specs, ngrid, pad).localCheckpoint(eager=False)
+    binned = barrier(_kde_binned(df, specs, ngrid, pad), lazy=True)
 
     grid = spark.range(ngrid).select(F.col("id").cast("int").alias("eval_node"))
     norm_const = 1.0 / (F.col("__bw") * math.sqrt(2.0 * math.pi))

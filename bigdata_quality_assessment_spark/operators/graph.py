@@ -45,8 +45,10 @@ from __future__ import annotations
 from collections.abc import Iterator, Mapping, Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import barrier
 
 # Above this many directed edges the single-task tier would concentrate
 # too much data on one executor; fall back to distributed iteration.
@@ -138,18 +140,15 @@ def connected_components(
             )
         strategy = "iterative"
     if strategy != "auto":
-        edges = edges.localCheckpoint(eager=False)
+        edges = barrier(edges, lazy=True)
     else:
         # the raw edge count rides the job that materializes the barrier;
         # the distinct count (the tier rule: dup-heavy pair lists, e.g.
         # both (a,b) and (b,a) from a symmetric verify join, must not
         # spill small graphs into the slower iterative tier) runs only
         # when the raw count is over the threshold — it is never larger
-        obs = Observation()
-        edges = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        n_edges = obs.get["n"]
+        edges, seen = barrier(edges, F.count(F.lit(1)).alias("n"))
+        n_edges = seen["n"]
         if n_edges > small_edge_threshold:
             n_edges = (
                 edges.select(
@@ -203,24 +202,24 @@ def _cc_alternating_stars(edges: DataFrame, max_iter: int) -> DataFrame:
     {(child, component-min)}; labels fall out of one final left join
     against the full vertex set (covering roots, isolated self-loop
     vertices, and singletons alike)."""
-    verts = (
+    verts = barrier(
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        lazy=True,
     )
     # canonical bigger-first undirected edge list, self-loops dropped
-    e = (
+    e = barrier(
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        lazy=True,
     )
     prev_sig = None
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = barrier(_small_star(_large_star(e)), lazy=True)
         # cheap fixpoint probe: count + two independent hash sums over
         # the canonical edge set (materializes the round's barrier)
         # bit_xor, not sum: ANSI mode overflows a long sum of hashes,

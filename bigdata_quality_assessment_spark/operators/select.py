@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import barrier
+
 
 def argmax(df: DataFrame, score_col: str, id_col: str = "point_id") -> DataFrame:
     """T1: the single row maximizing ``score_col``; ties break to the
@@ -146,7 +148,7 @@ def weighted_sample_with_replacement(
     # checkpoint materializes the running sums once, and makes the
     # ulp-consistency contract physical: offsets and intervals read the
     # SAME stored sums, not two re-planned evaluations.
-    local = local.localCheckpoint(eager=False)
+    local = barrier(local, lazy=True)
     # Tiny frame: one row per bucket. Its unpartitioned window is over
     # n_parts rows, not the pool.
     psums = local.groupBy("__b").agg(F.max("__lcum").alias("__psum"))
@@ -436,7 +438,6 @@ def apply_cdc(
     keys: str | list[str],
     seq_col: str = "seq",
     op_col: str = "op",
-    barrier: bool = True,
 ) -> DataFrame:
     """Apply a CDC change stream to a snapshot: ``changes`` carries the
     target's columns plus ``op`` ('I'nsert / 'U'psert / 'D'elete) and a
@@ -465,10 +466,9 @@ def apply_cdc(
         *[F.col(f"__last.{c}") for c in payload if c not in keys],
         F.col(f"__last.{op_col}").alias(op_col),
     )
-    if barrier:
-        # consumed twice (anti-join keys + upsert rows); the lazy
-        # barrier runs the change aggregation once, not once per side
-        latest = latest.localCheckpoint(eager=False)
+    # consumed twice (anti-join keys + upsert rows); the lazy barrier
+    # runs the change aggregation once, not once per side
+    latest = barrier(latest, lazy=True)
     kept = target.join(F.broadcast(latest.select(*keys)), keys, "left_anti")
     upserts = latest.filter(F.col(op_col) != "D").select(*target.columns)
     return kept.unionByName(upserts)

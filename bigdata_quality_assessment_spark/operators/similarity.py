@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
-from ..session import local_frame
+from ..session import barrier, local_frame
 from .graph import _band_pairs, _band_sides, drop_duplicates_of
 from .partitioning import ensure_min_parallelism
 
@@ -167,7 +167,7 @@ def knn_brute_force(
     collected EAGERLY at call time — building the plan triggers a
     Spark job — and is capped at :data:`QUERY_BATCH_CAP` rows with a
     fail-fast ValueError (see :func:`_collect_query_batch`)."""
-    if _resolve_impl(impl, pinned=False) == "arrow":
+    if _resolve_impl(impl) == "arrow":
         q_rows = _collect_query_batch(queries, query_id_col, vec_col)
         q_id_type = dict(queries.dtypes)[query_id_col]
         return _brute_knn_gemm(
@@ -464,7 +464,7 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.randn(n_planes, dim).tolist()
 
 
-def _resolve_impl(impl: str, pinned: bool) -> str:
+def _resolve_impl(impl: str) -> str:
     """Shared ``impl`` switch for the projection stages: ``"auto"``
     resolves to the Arrow gemm — production callers always get the
     fast path, INCLUDING ones that supply their own trained
@@ -473,8 +473,7 @@ def _resolve_impl(impl: str, pinned: bool) -> str:
     IVF at sf1 was 5.0 s on the fold vs 2.3 s on the gemm). Only the
     DuckDB-graded registry queries pass ``impl="sql"`` explicitly —
     their oracles replay the fold's left-to-right accumulation order,
-    which is the one consumer that genuinely needs it. ``pinned`` is
-    accepted for signature stability but no longer steers ``auto``."""
+    which is the one consumer that genuinely needs it."""
     if impl not in ("auto", "arrow", "sql"):
         raise ValueError("impl must be 'auto', 'arrow' or 'sql'")
     return "arrow" if impl == "auto" else impl
@@ -859,7 +858,7 @@ def hyperplane_buckets(
     sign test is bit-identical across engines."""
     if planes is not None and len(planes) != n_tables:
         raise ValueError("planes must supply one matrix per table")
-    if _resolve_impl(impl, pinned=planes is not None) == "arrow":
+    if _resolve_impl(impl) == "arrow":
         tbls = (
             planes
             if planes is not None
@@ -1007,7 +1006,7 @@ def ann_hyperplane_knn(
             F.col("__v").alias("__qv"),
             F.posexplode(F.array(*buckets)).alias("__t", "__b"),
         )
-    path = _resolve_impl(impl, pinned=planes is not None)
+    path = _resolve_impl(impl)
     if path == "arrow":
         # the query vectors ride the scoring closure (queries are
         # driver-sized by the same contract that broadcasts qbe), so
@@ -1123,7 +1122,7 @@ def ivf_knn(
     as explicit literals — the deterministic variant whose cell
     assignment and probe order a SQL oracle can recompute (see
     ``x_ann_ivf_knn``); the trained path stays the production default."""
-    path = _resolve_impl(impl, pinned=centroids is not None)
+    path = _resolve_impl(impl)
     # the double cast is itself an interpreted HOF — the arrow path
     # casts in numpy inside the gemm (float32 -> float64 is exact, so
     # the trained quantizer is identical either way)
@@ -1237,23 +1236,24 @@ def embedding_near_dedup(
     The bucket frame is a LAZY barrier, unlike the Hamming family's
     eager one (:func:`.text._hamming_band_keys`): traced, the corpus
     is derived once for the join and once for the final anti-join,
-    with no recompute race. Call-time cost: with ``cluster=True`` the
-    closure's eager edge barrier (:func:`.graph.connected_components`)
-    runs the candidate and verify jobs when the operator is called."""
+    with no recompute race. Call-time cost (see ``session.barrier``):
+    with ``cluster=True`` the closure's eager edge barrier
+    (:func:`.graph.connected_components`) runs the candidate and
+    verify jobs when the operator is called."""
     # Lazy barrier on the pre-explode bucket frame (corpus + n_tables
     # longs per row): the a/b self-join below otherwise re-executes the
     # n_tables × n_planes × dim hyperplane dot products once per side.
-    cb = hyperplane_buckets(
+    cb = barrier(hyperplane_buckets(
         _widen_for_fanout(corpus), dim, n_planes, n_tables, seed,
         id_col, vec_col, planes=planes, impl=impl,
-    ).localCheckpoint(eager=False)
+    ), lazy=True)
     a, b = _band_sides(
         cb, id_col, F.array(*[F.col(f"bucket_{t}") for t in range(n_tables)]),
         {"__v": "__v"},
     )
     verified = _rowwise_cosine(
         _band_pairs(a, b), "__va", "__vb", ["__ida", "__idb"],
-        impl=_resolve_impl(impl, pinned=planes is not None),
+        impl=_resolve_impl(impl),
     ).filter(F.col("cosine") >= threshold)
     return drop_duplicates_of(corpus, verified, id_col, "__ida", "__idb", cluster)
 
@@ -1326,7 +1326,7 @@ def semantic_dedup(
             lambda x: F.isnan(x) | x.isin(float("inf"), float("-inf")),
         )
     )
-    path = _resolve_impl(impl, pinned=centroids is not None)
+    path = _resolve_impl(impl)
     # arrow path: the Catalyst `exists` validity gate is itself an
     # interpreted O(dim)-per-row HOF over the whole corpus — the gemm
     # performs the same gate in numpy (require_finite) and invalid
@@ -1461,7 +1461,7 @@ def quantize_embeddings(
     ANSI mode an unguarded ``NaN/scale`` would throw CAST_OVERFLOW on
     the tinyint cast and kill the job (pinned in
     tests/test_robustness.py). Null vectors pass through as null."""
-    if _resolve_impl(impl, pinned=False) == "arrow":
+    if _resolve_impl(impl) == "arrow":
         return _quantize_gemm(df, vec_col, qvec_col, scale_col, keep_vec)
     v = _as_double(F.col(vec_col))
     finite = lambda x: ~(F.isnan(x) | x.isin(float("inf"), float("-inf")))  # noqa: E731
@@ -1591,7 +1591,7 @@ def knn_quantized(
     cross product never materializes) and the bounded rescore through
     :func:`_rowwise_cosine`; ``impl="sql"`` keeps the crossJoin+fold
     shape the graded ``x_knn_cosine`` part='int8' twin replays."""
-    path = _resolve_impl(impl, pinned=False)
+    path = _resolve_impl(impl)
     q = queries.select(F.col(query_id_col), _as_double(F.col(vec_col)).alias("__qv"))
     if path == "arrow":
         q_rows = _collect_query_batch(queries, query_id_col, vec_col)
@@ -1811,7 +1811,7 @@ def knn_pq(
     ``k·rescore_factor`` rows per query via an id equi-join. Unlike
     int8-SQ (exact ranking, 4-8×), PQ trades recall for compression;
     ``rescore_factor`` is the recall knob (pinned in tests)."""
-    path = _resolve_impl(impl, pinned=codebooks is not None)
+    path = _resolve_impl(impl)
     if codebooks is None:
         codebooks = train_pq_codebooks(
             corpus, dim, m=m, n_centroids=n_centroids, n_train=n_train, seed=seed,
@@ -2236,7 +2236,7 @@ def cluster_embeddings(
         )
         return out, []
 
-    if _resolve_impl(impl, pinned=centroids is not None) == "arrow":
+    if _resolve_impl(impl) == "arrow":
         return _cluster_assign_gemm(corpus, cents, dim, vec_col), cents
 
     cd = _centroid_dists(F.col("__v"), cents)
@@ -2438,7 +2438,7 @@ def ivfpq_knn(
     batch (gemm + fancy-index gathers); ``impl="sql"`` keeps the whole
     chain as Catalyst folds over pinned literals for DuckDB-replayable
     grading (requires ``centroids`` AND ``codebooks``)."""
-    path = _resolve_impl(impl, pinned=centroids is not None)
+    path = _resolve_impl(impl)
     if centroids is None or codebooks is None:
         if path == "sql":
             raise ValueError(
@@ -2851,7 +2851,7 @@ def knn_join(
         cands = cands.filter(F.col(out_left) != F.col(out_right))
     scored = _rowwise_cosine(
         cands, "__lv", "__rv", [out_left, out_right],
-        impl=_resolve_impl(impl, pinned=planes is not None),
+        impl=_resolve_impl(impl),
     )
     return _topk_per_query(scored, out_left, out_right, k)
 

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import barrier
+
 
 def _mg_summarize(values, capacity: int) -> dict:
     """Misra-Gries over an iterable: at most ``capacity`` counters;
@@ -88,7 +90,7 @@ def frequent_items(
             )
 
     summaries = df.select(col).mapInPandas(summarize, schema=schema)
-    summaries = summaries.localCheckpoint(eager=False)  # two consumers
+    summaries = barrier(summaries, lazy=True)  # two consumers
     per_item = (
         summaries.filter(F.col("item").isNotNull())
         .groupBy("item")

@@ -17,10 +17,10 @@ linearly with the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import barrier, local_frame
 from .graph import _band_pairs, _band_sides, drop_duplicates_of
 from .partitioning import ensure_min_parallelism, id_ddl_type
 
@@ -604,9 +604,9 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     the digest pass runs ONCE (stores 40 B/row), both consumers read
     the stored rows (executed-plan scan count pinned in
     tests/test_scan_discipline.py)."""
-    slim = docs.select(
-        F.md5(F.col(text_col)).alias("__h"), F.col(id_col)
-    ).localCheckpoint(eager=False)
+    slim = barrier(
+        docs.select(F.md5(F.col(text_col)).alias("__h"), F.col(id_col)), lazy=True
+    )
     mins = slim.groupBy("__h").agg(F.min(id_col).alias("__keep"))
     drops = (
         slim.join(mins, "__h")
@@ -648,7 +648,7 @@ def jaccard_pairs(
     # sizes + both join sides reference ``shingled`` — barrier it so
     # the shingling computes once (see near_dedup_minhash for the
     # measured pathology).
-    shingled = shingled.localCheckpoint(eager=False)
+    shingled = barrier(shingled, lazy=True)
     sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = shingled.select(F.col(id_col).alias("doc_a"), "shingle")
     b = shingled.select(F.col(id_col).alias("doc_b"), "shingle")
@@ -773,10 +773,10 @@ def minhash_signatures(
     cannot be near-duplicates, and an all-null signature would collide
     every short doc into every LSH bucket (candidate-pair explosion).
 
-    Call-time cost: the lazy hash-array barrier runs the shuffle-map
-    stages of ``docs``'s plan (if any) when this function is called."""
+    Call-time cost: that of the lazy hash-array barrier (see
+    ``session.barrier``) over ``docs``'s plan."""
     hashes = _shingle_hashes(docs, text_col, k, mode, id_col, None)
-    return _minhash_sign(hashes.localCheckpoint(eager=False), id_col, n_hashes, None)
+    return _minhash_sign(barrier(hashes, lazy=True), id_col, n_hashes, None)
 
 
 def minhash_band_keys(
@@ -808,8 +808,7 @@ def minhash_band_keys(
 
 
 def minhash_lsh_candidates(
-    signatures: DataFrame, bands: int = 32, id_col: str = "doc_id",
-    materialize: bool = False,
+    signatures: DataFrame, bands: int = 32, id_col: str = "doc_id"
 ) -> DataFrame:
     """Banded LSH: split each signature into ``bands`` bands of
     ``r = n_hashes/bands`` rows, hash each band, and emit every pair
@@ -817,18 +816,15 @@ def minhash_lsh_candidates(
     produced by an equi-join on the bucket key, NEVER an all-pairs
     product. Returns distinct ``(doc_a, doc_b)`` with doc_a<doc_b.
 
-    ``materialize`` (round-16): EAGERLY checkpoint the band-key frame
-    before the self-join. Both join sides derive from it, and the
-    executed sf0.1 plan showed the full upstream signature fold
+    The band-key frame sits behind an EAGER barrier (round-16) before
+    the self-join. Both join sides derive from it, and the executed
+    sf0.1 plan without it showed the full upstream signature fold
     running ONCE PER SIDE — broadcast-side planning defeats
-    ReuseExchange, and a lazy barrier's cache semantics let
-    concurrent cold readers race into recompute. The
-    eager barrier stores ~20 B × bands per doc and pins exactly one
-    fold execution; it runs a job at call time, so it is opt-in for
-    this otherwise-lazy builder (near_dedup_minhash opts in)."""
-    buckets = minhash_band_keys(signatures, bands, id_col)
-    if materialize:
-        buckets = buckets.localCheckpoint(eager=True)
+    ReuseExchange, and a lazy barrier's cold readers race into
+    recompute. The barrier stores ~20 B × bands per doc and pins
+    exactly one fold execution, at the cost of one job at call time
+    (see ``session.barrier``)."""
+    buckets = barrier(minhash_band_keys(signatures, bands, id_col))
     a = buckets.select(F.col(id_col).alias("doc_a"), "band", "bucket")
     b = buckets.select(F.col(id_col).alias("doc_b"), "band", "bucket")
     return (
@@ -880,10 +876,9 @@ def near_dedup_minhash(
     Everything downstream (banding, candidate join, Jaccard verify,
     closure) is byte-identical code.
 
-    Call-time cost: the shingle-hash table is an eager barrier, so a
-    call runs a corpus-scale Spark job before any action on the
-    result, and its checkpoint blocks stay in the block store until
-    driver GC lets Spark's ContextCleaner release them."""
+    Call-time cost: the shingle-hash table and the band keys are eager
+    barriers (see ``session.barrier``), so a call runs a corpus-scale
+    shingling job before any action on the result."""
     # ONE shingling pass feeds everything: the signatures and BOTH
     # verify sides read the per-doc distinct shingle hashes, stored as
     # ``(doc_id, array<bigint>)`` — one row per document, 8 bytes per
@@ -899,11 +894,9 @@ def near_dedup_minhash(
     # each concurrent reader recomputes the scan (sf10 swung 41.7→186 s
     # across identical runs). The eager checkpoint runs the scan
     # exactly once.
-    hashes = _shingle_hashes(
-        docs, text_col, k, mode, id_col, lane_params
-    ).localCheckpoint(eager=True)
+    hashes = barrier(_shingle_hashes(docs, text_col, k, mode, id_col, lane_params))
     sigs = _minhash_sign(hashes, id_col, n_hashes, lane_params)
-    cands = minhash_lsh_candidates(sigs, bands, id_col, materialize=True)
+    cands = minhash_lsh_candidates(sigs, bands, id_col)
     a = hashes.select(F.col(id_col).alias("doc_a"), F.col("__hs").alias("__ha"))
     b = hashes.select(F.col(id_col).alias("doc_b"), F.col("__hs").alias("__hb"))
     n_common = F.size(F.array_intersect("__ha", "__hb"))
@@ -993,12 +986,12 @@ def _hamming_band_keys(
     within ``max_hamming`` is missed) only for ``max_hamming ≤ 3``,
     which is checked here, before any job runs.
 
-    Barrier discipline (round-16): the barrier is an EAGER
-    ``localCheckpoint`` for every ``two_level``. Both sides of the band
-    self-join read it, and a lazy barrier lets them race its cold
-    blocks into deriving the signatures twice (a second shingling,
-    image decode or PCM decode). Callers pass the raw frame and add
-    no barrier of their own.
+    Barrier discipline (round-16): the barrier is EAGER for every
+    ``two_level``. Both sides of the band self-join read it, and a
+    lazy barrier lets them race its cold blocks into deriving the
+    signatures twice (a second shingling, image decode or PCM
+    decode). Callers pass the raw frame and add no barrier of their
+    own.
 
     ``two_level="auto"`` engages the nested keys at
     ``TWO_LEVEL_AUTO_THRESHOLD`` items, sized by an ``Observation`` of
@@ -1009,22 +1002,19 @@ def _hamming_band_keys(
     count. It is exact at small counts; near 10⁶ its ~5 % error can
     only change which of two output-identical regimes runs.
 
-    Call-time cost: the barrier job is a corpus-scale signature pass
-    (shingle + vote, image decode, audio decode) that runs when the
-    operator is called, before any action on its result, and its
-    checkpoint blocks stay in the block store until driver GC lets
-    Spark's ContextCleaner release them. ``"auto"`` runs the same jobs
-    as an explicit bool."""
+    Call-time cost: the barrier is eager (see ``session.barrier``), and
+    its job is a corpus-scale signature pass (shingle + vote, image
+    decode, audio decode) that runs when the operator is called.
+    ``"auto"`` runs the same jobs as an explicit bool."""
     if not 0 <= max_hamming <= 3:
         raise ValueError("4-band banding is complete only for max_hamming <= 3")
     if two_level != "auto" and not isinstance(two_level, bool):
         raise ValueError(f"two_level must be a bool or 'auto', got {two_level!r}")
     if two_level == "auto":
-        obs = Observation()
-        sig = sig.observe(obs, F.approx_count_distinct(id_col).alias("n"))
-    sig = sig.localCheckpoint(eager=True)
-    if two_level == "auto":
-        two_level = obs.get["n"] >= TWO_LEVEL_AUTO_THRESHOLD
+        sig, seen = barrier(sig, F.approx_count_distinct(id_col).alias("n"))
+        two_level = seen["n"] >= TWO_LEVEL_AUTO_THRESHOLD
+    else:
+        sig = barrier(sig)
 
     def band(t: int) -> Column:
         return F.shiftrightunsigned(F.col(sig_col), band_bits * t).bitwiseAND(
@@ -1305,15 +1295,15 @@ def fuzzy_decontaminate(
     is integer-derived, the flagged set and best-match scores are
     integer-exact cross-engine.
 
-    Call-time cost: each side's lazy hash-array barrier runs the
-    shuffle-map stages of its input's plan (if any) when this function
-    is called."""
+    Call-time cost: that of each side's lazy hash-array barrier (see
+    ``session.barrier``) over its input's plan."""
     # lazy barriers: each side's signature projection is its only reader
     sig_d, sig_b = (
         _minhash_sign(
-            _shingle_hashes(
-                frame, text_col, k, mode, id_col, lane_params
-            ).localCheckpoint(eager=False),
+            barrier(
+                _shingle_hashes(frame, text_col, k, mode, id_col, lane_params),
+                lazy=True,
+            ),
             id_col, n_hashes, lane_params,
         )
         for frame in (docs, benchmark)
@@ -1480,8 +1470,8 @@ def term_frequencies(
 ) -> DataFrame:
     """The shared ``(id, term, tf)`` frame of the retrieval family —
     one explode + one map-side-combined count. :func:`tf_idf` and
-    :func:`bm25_retrieve` both consume it; compute it ONCE (with a
-    lazy ``localCheckpoint``) when a caller feeds several consumers so
+    :func:`bm25_retrieve` both consume it; compute it ONCE (behind a
+    lazy ``session.barrier``) when a caller feeds several consumers so
     the corpus scans once (the x_language_id registry entry does
     exactly this via their ``tf=`` parameters)."""
     return (
@@ -1527,9 +1517,7 @@ def tf_idf(
         # both consumers (df counts + N) derive from tf, which is
         # itself the product of the corpus scan — barrier it so the
         # scan and the explode run once
-        tf = term_frequencies(docs, text_col, id_col).localCheckpoint(
-            eager=False
-        )
+        tf = barrier(term_frequencies(docs, text_col, id_col), lazy=True)
     n_docs = tf.select(id_col).distinct().count()
     df_counts = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1)) + 1.0
@@ -1607,9 +1595,8 @@ def bm25_retrieve(
     if (queries is None) == (query_filter is None):
         raise ValueError("pass exactly one of queries / query_filter")
     if tf is None:
-        tf = term_frequencies(docs, text_col, id_col).localCheckpoint(
-            eager=False
-        )  # df / dl / N / scoring all reuse it
+        # df / dl / N / scoring all reuse it
+        tf = barrier(term_frequencies(docs, text_col, id_col), lazy=True)
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -1710,9 +1697,7 @@ def build_bm25_index(
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     if tf is None:
-        tf = term_frequencies(docs, text_col, id_col).localCheckpoint(
-            eager=False
-        )
+        tf = barrier(term_frequencies(docs, text_col, id_col), lazy=True)
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     st = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -1820,7 +1805,7 @@ def bm25_search(
     # broadcasts; without the barrier each consumer re-ran the query
     # scan + explode + distinct (3.8 s each at 500k docs). The frame
     # is driver-sized by contract, so the checkpoint is bytes.
-    qterms = qterms.localCheckpoint(eager=False)
+    qterms = barrier(qterms, lazy=True)
     bkts = sorted(
         r["__b"]
         for r in qterms.select(
@@ -1932,9 +1917,7 @@ def bm25_index_delta(
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     if tf is None:
-        tf = term_frequencies(docs, text_col, id_col).localCheckpoint(
-            eager=False
-        )
+        tf = barrier(term_frequencies(docs, text_col, id_col), lazy=True)
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     st = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -2127,17 +2110,13 @@ def delete_bm25_docs(
             .filter(F.col("__batch") < int(cur.get("n_batches", 0)))
             .select(id_col)
         )
-        docs = docs.join(prior, id_col, "left_anti").localCheckpoint(
-            eager=False
-        )
+        docs = barrier(docs.join(prior, id_col, "left_anti"), lazy=True)
         if tf is not None:
             tf = tf.join(docs.select(id_col), id_col, "left_semi")
         if not docs.take(1):
             return dict(cur)  # everything already deleted — no-op
     if tf is None:
-        tf = term_frequencies(docs, text_col, id_col).localCheckpoint(
-            eager=False
-        )
+        tf = barrier(term_frequencies(docs, text_col, id_col), lazy=True)
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     st = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -2194,7 +2173,7 @@ def open_bm25_index(
     ``materialize``, the committed df deltas are folded once to one
     row per (term, bucket) — integer sums, exactly
     :func:`compact_bm25_index_df`'s arithmetic, scores bit-identical
-    (pytest-pinned) — and stored via an eager ``localCheckpoint``
+    (pytest-pinned) — and stored behind an eager ``session.barrier``
     (session-lifetime blocks, not a cross-run cache); tombstones
     likewise. The POSTINGS stay a parquet scan on purpose: they are
     corpus-sized and their per-search bucket pruning IS the win of
@@ -2219,13 +2198,11 @@ def open_bm25_index(
         # fold per-batch deltas to one row per (term, bucket): exact
         # integer sums (zero-sum rows KEPT so the frame is row-for-row
         # equivalent in search arithmetic to the unfolded deltas)
-        df_frame = (
-            df_frame.groupBy("term", "__bucket")
-            .agg(F.sum("df").alias("df"))
-            .localCheckpoint(eager=True)
+        df_frame = barrier(
+            df_frame.groupBy("term", "__bucket").agg(F.sum("df").alias("df"))
         )
         if tombstones is not None:
-            tombstones = tombstones.localCheckpoint(eager=True)
+            tombstones = barrier(tombstones)
     return postings, df_frame, stats, tombstones
 
 
@@ -2500,14 +2477,14 @@ def ngram_lm_score(
 
     tr_pairs = _bigram_pairs(train, text_col, id_col, bos)
     if max_vocab is not None:
-        vocab = (
+        vocab = barrier(
             tr_pairs.groupBy("w")
             .agg(F.count(F.lit(1)).alias("__c"))
             .orderBy(F.col("__c").desc(), F.col("w").asc())
             .limit(int(max_vocab))
             .select("w")
-            .withColumn("__in_v", F.lit(True))
-            .localCheckpoint(eager=False)
+            .withColumn("__in_v", F.lit(True)),
+            lazy=True,
         )
 
         def fold_unk(p: DataFrame) -> DataFrame:
@@ -2543,10 +2520,8 @@ def ngram_lm_score(
     # Both LM tables and V derive from the pair frame — barrier the
     # count table so the training scan runs once, then derive the
     # context totals and vocabulary size from the stored counts.
-    bigrams = (
-        tr_pairs.groupBy("prev", "w")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=False)
+    bigrams = barrier(
+        tr_pairs.groupBy("prev", "w").agg(F.count(F.lit(1)).alias("__c")), lazy=True
     )
     contexts = bigrams.groupBy("prev").agg(F.sum("__c").alias("__cc"))
     # V rides the plan as a one-row aggregate crossJoined in — NO eager
@@ -2732,7 +2707,7 @@ def _excise_by_first_occurrence(
     dup_keys = counts.filter(F.col("__c") >= min_count).select("__key")
     # two consumers (first-occurrence agg + removal filter) — barrier
     # so the restriction join runs once
-    dup_occ = ex.join(dup_keys, "__key").localCheckpoint(eager=False)
+    dup_occ = barrier(ex.join(dup_keys, "__key"), lazy=True)
     firsts = dup_occ.groupBy("__key").agg(F.min("__ord").alias("__keep"))
     removed = (
         expand_positions(
@@ -2789,15 +2764,14 @@ def span_keys(
     default (the only thing that ever crosses the wire), barriered so
     downstream count/join consumers tokenize the corpus once."""
     key = F.xxhash64(F.col("__span")) if hash_spans else F.col("__span")
-    return (
-        framed.select(id_col, F.posexplode("__spans").alias("__sid", "__span"))
-        .select(
+    return barrier(
+        framed.select(id_col, F.posexplode("__spans").alias("__sid", "__span")).select(
             id_col,
             F.col("__sid"),
             key.alias("__key"),
             _ord_struct(id_col, "__sid").alias("__ord"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        lazy=True,
     )
 
 
@@ -2829,7 +2803,7 @@ def dedup_spans(
     100 TB shape: the only corpus-sized exchanges carry
     ``(id, span_idx, key)`` rows — with ``hash_spans`` (the default)
     the key is 8 bytes of xxhash64, never span text — and that slim
-    frame is BARRIERED (lazy localCheckpoint) so the corpus is
+    frame is BARRIERED (lazy ``session.barrier``) so the corpus is
     tokenized once, not once per reference (count + removal join).
     The duplicated-span table (``key → first occurrence``) holds one
     row per distinct ≥min_count span — boilerplate-shaped, orders
@@ -3011,11 +2985,11 @@ def dedup_substrings(
         ),
     ).otherwise(F.array().cast("array<bigint>"))
 
-    ex = (
+    # count + excision both consume this frame — tokenize once
+    ex = barrier(
         framed.select(id_col, F.posexplode(gram_keys).alias("__pos", "__key"))
-        .withColumn("__ord", _ord_struct(id_col, "__pos"))
-        # count + excision both consume this frame — tokenize once
-        .localCheckpoint(eager=False)
+        .withColumn("__ord", _ord_struct(id_col, "__pos")),
+        lazy=True,
     )
     # every non-first occurrence covers tokens [pos, pos+L)
     kept, n_rm, joined = _excise_by_first_occurrence(

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdata_quality_assessment_spark.operators.select import (
@@ -43,7 +43,7 @@ from bigdata_quality_assessment_spark.operators.text import (
     normalize_text,
     quality_score,
 )
-from bigdata_quality_assessment_spark.session import local_frame
+from bigdata_quality_assessment_spark.session import barrier, local_frame
 
 
 @dataclass
@@ -120,10 +120,9 @@ def _stage_barrier(
     ``Observation``, appended as ``(name, rows)`` — the report costs no
     query of its own. Without one it is lazy and runs no count."""
     if ledger is None:
-        return df.localCheckpoint(eager=False)
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
-    ledger.append((name, obs.get["rows"]))
+        return barrier(df, lazy=True)
+    df, seen = barrier(df, F.count(F.lit(1)).alias("rows"))
+    ledger.append((name, seen["rows"]))
     return df
 
 
@@ -145,10 +144,9 @@ def curate(
     stages run at call time. ``with_report=False`` keeps the barriers
     lazy and count-free; the returned report is then None and no stage
     output materializes until the caller's first action. (Construction
-    is not job-FREE: under AQE each lazy stage barrier compiles its
-    plan and runs its shuffle-map stages at localCheckpoint call time —
-    bounded work per stage, but not zero; what is guaranteed is that
-    no stage's rows are stored and no count runs.)"""
+    is not job-free: each lazy stage barrier runs its plan's
+    shuffle-map stages at call time, see ``session.barrier``; what is
+    guaranteed is that no stage's rows are stored and no count runs.)"""
     cfg = config or CurationConfig()
     ledger: list[tuple[str, int]] | None = [] if with_report else None
 

@@ -115,7 +115,7 @@ from bigdata_quality_assessment_spark.sources.generators import (
     stub_predictions,
     uniform_samples,
 )
-from bigdata_quality_assessment_spark.session import local_frame
+from bigdata_quality_assessment_spark.session import barrier, local_frame
 
 # --------------------------------------------------------------------
 # shared constants / helpers
@@ -838,12 +838,13 @@ def q_a10a12(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplies the global min/max, the detail rows the per-flag counts —
     single scan, single shuffle, long format ``(stat, value)``."""
     li = _t(spark, sf_dir, "lineitem")
-    rolled = li.rollup("l_returnflag").agg(
+    # ≤5 rows; referenced twice below
+    rolled = barrier(li.rollup("l_returnflag").agg(
         F.min("l_extendedprice").alias("lo"),
         F.max("l_extendedprice").alias("hi"),
         F.count(F.lit(1)).alias("n"),
         F.grouping("l_returnflag").alias("__total"),
-    ).localCheckpoint(eager=False)  # ≤5 rows; referenced twice below
+    ), lazy=True)
     mm = rolled.filter(F.col("__total") == 1).select(
         F.explode(
             F.create_map(F.lit("lo"), F.col("lo"), F.lit("hi"), F.col("hi"))
@@ -2078,7 +2079,7 @@ def q_xlang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one barriered (doc, term, tf) frame feeds BOTH retrieval-family
     # consumers (tf_idf + bm25) — the corpus scans once for the pair,
     # keeping the entry inside its 4-FileScan budget
-    tf_frame = term_frequencies(docs).localCheckpoint(eager=False)
+    tf_frame = barrier(term_frequencies(docs), lazy=True)
     ti = tf_idf(docs, top_k=3, tf=tf_frame).select(
         F.lit("tfidf").alias("part"),
         "doc_id",
@@ -2431,7 +2432,7 @@ def q_xqual(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # ONE quality pass feeds both the 'q' rows and the 'filter' rows —
     # the barrier stores (doc_id, source, quality), ~20 B/row
-    qs = quality_score(docs, keep=["source"]).localCheckpoint(eager=False)
+    qs = barrier(quality_score(docs, keep=["source"]), lazy=True)
     q = qs.select(
         F.lit("q").alias("part"),
         "doc_id",
@@ -2672,7 +2673,7 @@ def q_xdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("prev_id").isNotNull()
         & (F.abs(F.col("n_chars") - F.col("prev_len")) <= 5)
     ).select(F.col("prev_id").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    edges = edges.localCheckpoint(eager=False)  # one derivation, both tiers
+    edges = barrier(edges, lazy=True)  # one derivation, both tiers
 
     def _closure_part(tag: str, strategy: str) -> DataFrame:
         return connected_components(edges, strategy=strategy).select(
@@ -2983,7 +2984,7 @@ def _minhash_recall_metrics(spark: SparkSession) -> DataFrame:
     # barrier the tiny committed fixture (2k docs): the dedup pipeline,
     # the per-role totals and both survivor joins all consume it — one
     # parquet read instead of six rescans
-    fx = spark.read.parquet(_RECALL_FIXTURE).localCheckpoint(eager=False)
+    fx = barrier(spark.read.parquet(_RECALL_FIXTURE), lazy=True)
     surv = near_dedup_minhash(
         fx.select("doc_id", "text", "lang", "source"),
         k=3, bands=_MINHASH_BANDS, min_jaccard=0.8,
@@ -3123,9 +3124,7 @@ def q_xsimdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE signature pass: the barriered frame feeds both the dedup's
     # band self-join and the survivor join-back (was: a second full
     # shingling + 48-vote scan just to re-attach signatures).
-    sig = simhash(docs, k=3, mode="word", hash_fn="md5_48").localCheckpoint(
-        eager=False
-    )
+    sig = barrier(simhash(docs, k=3, mode="word", hash_fn="md5_48"), lazy=True)
     survivors = simhash_near_dedup(
         docs, k=3, max_hamming=3, signatures=sig, hash_fn="md5_48"
     ).select("doc_id", "source")
@@ -4222,7 +4221,7 @@ def _eddr_recall_metrics(spark: SparkSession) -> DataFrame:
     ground-truth role/src_id columns — a planted pair counts as
     COLLAPSED when the dedup kept at most one of (vector, source).
     Mirrors _minhash_recall_metrics (the round-11 text recall gate)."""
-    fx = spark.read.parquet(_EDDR_FIXTURE).localCheckpoint(eager=False)
+    fx = barrier(spark.read.parquet(_EDDR_FIXTURE), lazy=True)
     surv = embedding_near_dedup(
         fx.select("vec_id", "embedding", "label"),
         threshold=_EDDR_THRESHOLD, dim=_ANN_DIM,
@@ -4636,11 +4635,11 @@ def q_xapprox(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frames costs nothing and leaves exactly one scan per GENUINE
     # pass: sketch (ap), exact aggs (ex), rank check, Misra-Gries, true
     # counts — see tools/scan_sweep.py budget.
-    ap = approx_profile(li, cols).localCheckpoint(eager=False)
-    ex = li.agg(
+    ap = barrier(approx_profile(li, cols), lazy=True)
+    ex = barrier(li.agg(
         *[F.countDistinct(c).alias(f"d_{c}") for c in cols],
         *[F.count(c).alias(f"c_{c}") for c in cols],
-    ).localCheckpoint(eager=False)
+    ), lazy=True)
 
     def _case(prefix):
         c0, c1, c2 = cols
@@ -5384,7 +5383,7 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = local_frame(
         spark, _phash_fixture_blobs(), "media_id long, content binary"
     )
-    ph = image_phash(imgs).localCheckpoint(eager=False)
+    ph = barrier(image_phash(imgs), lazy=True)
     surv = near_dedup_images(imgs, max_hamming=3, hashes=ph).select(
         "media_id", F.lit(1).alias("__s")
     )
@@ -5398,7 +5397,7 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
     auds = local_frame(
         spark, _audio_fixture_blobs(), "media_id long, content binary"
     )
-    aq = audio_quality(auds).localCheckpoint(eager=False)
+    aq = barrier(audio_quality(auds), lazy=True)
     stack_expr = "stack({}, {}) as (metric, value)".format(
         len(_AUDIO_METRICS) + 1,
         ", ".join(
@@ -5424,7 +5423,7 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
     clips = local_frame(
         spark, _afp_fixture_blobs(), "media_id long, content binary"
     )
-    fp = audio_fingerprint(clips).localCheckpoint(eager=False)
+    fp = barrier(audio_fingerprint(clips), lazy=True)
     asurv = near_dedup_audio(clips, max_hamming=3, fingerprints=fp).select(
         "media_id", F.lit(1).alias("__s")
     )
@@ -5449,7 +5448,7 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
     vids = local_frame(
         spark, _vhash_fixture_blobs(), "media_id long, content binary"
     )
-    vfh = frame_phash(vids, n_frames=4).localCheckpoint(eager=False)
+    vfh = barrier(frame_phash(vids, n_frames=4), lazy=True)
     vsurv = near_dedup_videos(
         vids, n_frames=4, frame_hashes=vfh
     ).select("media_id", F.lit(1).alias("__s"))
@@ -5479,7 +5478,7 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
     vids2 = local_frame(
         spark, _vtrim_fixture_blobs(), "media_id long, content binary"
     )
-    vfh2 = frame_phash(vids2, n_frames=4).localCheckpoint(eager=False)
+    vfh2 = barrier(frame_phash(vids2, n_frames=4), lazy=True)
     vsurv2 = near_dedup_videos(
         vids2, n_frames=4, frame_hashes=vfh2,
         max_offset=1, min_frame_frac=0.75,
@@ -5516,9 +5515,7 @@ def q_xblob(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, [(cid, bytearray(bl)) for cid, bl in _atrim_fixture_blobs()],
         "media_id long, content binary",
     )
-    asfp = audio_segment_fingerprints(aclips, seg_frames=2080).localCheckpoint(
-        eager=False
-    )
+    asfp = barrier(audio_segment_fingerprints(aclips, seg_frames=2080), lazy=True)
     asurv = near_dedup_audio(
         aclips, seg_frames=2080, max_offset=1, fingerprints=asfp
     ).select("media_id", F.lit(1).alias("__s"))

@@ -13,7 +13,7 @@ from collections.abc import Iterable, Sequence
 from typing import Any
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -156,3 +156,44 @@ def local_frame(
         [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
+
+
+def barrier(
+    df: DataFrame, *metrics: Column, lazy: bool = False
+) -> DataFrame | tuple[DataFrame, dict[str, Any]]:
+    """Store ``df``'s rows in the executors' block stores and return a
+    frame that reads them (``localCheckpoint``), so every later reader
+    starts from the stored rows instead of re-running ``df``'s plan.
+
+    ``barrier(df)`` is eager; ``barrier(df, lazy=True)`` stores the
+    rows when the first job reads the returned frame.
+    ``barrier(df, *metrics)`` is eager and puts the aggregate
+    ``metrics`` Columns on the storing job as one ``Observation``; it
+    returns ``(frame, values)``, ``values`` mapping each metric's alias
+    to its value, so the counts cost no query of their own. Observed
+    metrics cannot take DISTINCT aggregates. A lazy barrier runs no
+    job for metrics to ride, so ``lazy=True`` with metrics raises
+    ``ValueError``.
+
+    Call-time cost, stated once for every barrier in the package:
+
+    - an eager barrier runs one job at call time, over the whole of
+      ``df``;
+    - its blocks stay until driver GC lets the ContextCleaner free
+      them;
+    - a lazy barrier over an adaptive plan with a shuffle runs that
+      plan's map stages at call time (AQE plans the frame when the
+      checkpoint RDD is built), so it is not job-free;
+    - a lazy frame read by two or more subtrees of one job can be
+      computed twice: the subtrees may reach its partitions before
+      either has stored them.
+
+    This is the library's only ``localCheckpoint`` call site (pinned
+    by ``tests/test_session.py``)."""
+    if metrics and lazy:
+        raise ValueError("observed metrics need an eager barrier")
+    if not metrics:
+        return df.localCheckpoint(eager=not lazy)
+    obs = Observation()
+    df = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    return df, obs.get

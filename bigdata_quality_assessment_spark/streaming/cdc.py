@@ -38,6 +38,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_quality_assessment_spark.session import barrier
+
 LATEST = "LATEST"
 
 
@@ -162,7 +164,7 @@ def streaming_apply_cdc(
         # the new version is derived FROM the old one; materialize
         # before the directory swap so the write never reads its own
         # output path
-        _commit(merged.localCheckpoint(eager=True), root, f"v{batch_id}")
+        _commit(barrier(merged), root, f"v{batch_id}")
 
     w = changes.writeStream.foreachBatch(fold).trigger(availableNow=True)
     if checkpoint:

@@ -65,7 +65,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata_quality_assessment_spark.session import local_frame
+from bigdata_quality_assessment_spark.session import barrier, local_frame
 from bigdata_quality_assessment_spark.sources.io import swap_dir
 from bigdata_quality_assessment_spark.streaming.sink import (
     compact_stores,
@@ -202,15 +202,15 @@ def streaming_embedding_ingest(
         # marker), so its ids in that state get their band keys
         # recomputed FROM THE BATCH'S OWN VECTORS and re-appended —
         # completing the interrupted commit before anything else runs
-        heal = (
-            valid.join(corpus_ids, id_col, "left_semi")
-            .join(bucket_ids, id_col, "left_anti")
-            .localCheckpoint(eager=True)
+        heal = barrier(
+            valid.join(corpus_ids, id_col, "left_semi").join(
+                bucket_ids, id_col, "left_anti"
+            )
         )
         if heal.take(1):
-            heal_keys = _band_keys(heal, meta, id_col, vec_col).select(
-                "__t", "__b", id_col
-            ).localCheckpoint(eager=True)
+            heal_keys = barrier(
+                _band_keys(heal, meta, id_col, vec_col).select("__t", "__b", id_col)
+            )
             heal_keys.write.mode("append").parquet(
                 os.path.join(root, "buckets")
             )
@@ -222,14 +222,13 @@ def streaming_embedding_ingest(
         # committed but whose bucket append crashed, duplicating the
         # corpus row on replay (the heal above makes the two id sets
         # converge, but the union keeps the invariant even mid-heal)
-        cur = valid.join(
-            bucket_ids.unionByName(corpus_ids).distinct(),
-            id_col,
-            "left_anti",
-        ).localCheckpoint(eager=False)
-        bb = _band_keys(cur, meta, id_col, vec_col).localCheckpoint(
-            eager=False
+        cur = barrier(
+            valid.join(
+                bucket_ids.unionByName(corpus_ids).distinct(), id_col, "left_anti"
+            ),
+            lazy=True,
         )
+        bb = barrier(_band_keys(cur, meta, id_col, vec_col), lazy=True)
         if verify_threshold is None:
             drops = first_arrival_drops(bb, stored, id_col, key_cols)
         else:
@@ -284,9 +283,7 @@ def streaming_embedding_ingest(
         # path compares against the earlier row's actual vector, the
         # same answer a one-row-per-batch replay would give whenever
         # near-duplication is transitive at the threshold.
-        survivors = cur.join(
-            F.broadcast(drops), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
+        survivors = barrier(cur.join(F.broadcast(drops), id_col, "left_anti"))
         survivors.select(id_col, vec_col).write.mode("append").parquet(
             os.path.join(root, "corpus")
         )

@@ -56,7 +56,7 @@ from bigdata_quality_assessment_spark.operators.text import (
     minhash_signatures,
     normalize_text,
 )
-from bigdata_quality_assessment_spark.session import local_frame
+from bigdata_quality_assessment_spark.session import barrier, local_frame
 from bigdata_quality_assessment_spark.sources.io import swap_dir
 from bigdata_quality_assessment_spark.streaming.sink import (
     compact_stores,
@@ -221,16 +221,14 @@ def streaming_ingest_curated(
                 .join(digests, "digest", "left_anti")
             )
 
-        slim = cur.select(F.col(id_col), w_digest).localCheckpoint(eager=False)
+        slim = barrier(cur.select(F.col(id_col), w_digest), lazy=True)
         cur = exact_screen(cur, slim)
         # near-dup check vs accepted band buckets + earlier-in-batch
         sigs = minhash_signatures(cur, text_col, k=k, id_col=id_col)
-        bb = minhash_band_keys(sigs, bands, id_col).localCheckpoint(eager=False)
+        bb = barrier(minhash_band_keys(sigs, bands, id_col), lazy=True)
         stored = spark.read.parquet(os.path.join(root, "buckets"))
         drops = first_arrival_drops(bb, stored, id_col, ["band", "bucket"])
-        survivors = cur.join(F.broadcast(drops), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
+        survivors = barrier(cur.join(F.broadcast(drops), id_col, "left_anti"))
         new_spans = None
         if span_dedup:
             from bigdata_quality_assessment_spark.operators.text import (
@@ -254,9 +252,9 @@ def streaming_ingest_curated(
             )
             # two consumers (rm_sets + the kept-span anti-join) — one
             # barrier so the store/self joins run once
-            removed_spans = hit_span_stored.unionByName(
-                hit_span_earlier
-            ).localCheckpoint(eager=False)
+            removed_spans = barrier(
+                hit_span_stored.unionByName(hit_span_earlier), lazy=True
+            )
             rm_sets = removed_spans.groupBy(id_col).agg(
                 F.collect_set("__sid").alias("__rm")
             )
@@ -276,7 +274,7 @@ def streaming_ingest_curated(
                     ).alias("__newtext"),
                 )
             )
-            survivors = (
+            survivors = barrier(
                 survivors.drop("digest")
                 .join(rewritten, id_col)
                 .filter(
@@ -286,24 +284,21 @@ def streaming_ingest_curated(
                     text_col, F.coalesce(F.col("__newtext"), F.col(text_col))
                 )
                 .drop("__newtext")
-                .localCheckpoint(eager=True)
             )
             # post-rewrite exact re-screen: span excision can collapse
             # two batch docs onto the same text, or collapse a doc
             # onto text already stored — the pre-rewrite digest screen
             # cannot see either. Digests now describe the STORED
             # (rewritten) text.
-            survivors = exact_screen(
-                survivors, survivors.select(F.col(id_col), w_digest)
-            ).localCheckpoint(eager=True)
+            survivors = barrier(
+                exact_screen(survivors, survivors.select(F.col(id_col), w_digest))
+            )
             # state symmetry with forget()'s rebuild: the persisted
             # band buckets must describe the STORED (rewritten) text,
             # so recompute signatures post-rewrite — the pre-rewrite
             # ``bb`` screened arrivals but is stale as state.
             sigs2 = minhash_signatures(survivors, text_col, k=k, id_col=id_col)
-            bb = minhash_band_keys(sigs2, bands, id_col).localCheckpoint(
-                eager=False
-            )
+            bb = barrier(minhash_band_keys(sigs2, bands, id_col), lazy=True)
             # state: the KEPT spans of docs that made it to the corpus
             # (excised spans are already present from their keeper)
             new_spans = (

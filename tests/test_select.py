@@ -238,19 +238,26 @@ def test_apply_cdc_last_change_wins(spark):
     assert out == {1: ("a", 10.0), 3: ("C2", 33.0), 4: ("d2", 44.0)}
 
 
-def test_apply_cdc_aggregation_is_map_side(spark):
+def test_apply_cdc_aggregation_is_map_side(spark, monkeypatch):
     """The last-change reduction must be max_by (partial-aggregable),
-    not a ranking window over all change rows."""
-    from bigdata_quality_assessment_spark.operators.select import apply_cdc
+    not a ranking window over all change rows. Read from the plan of
+    the frame ``apply_cdc`` hands to its barrier."""
+    from bigdata_quality_assessment_spark.operators import select
+    from bigdata_quality_assessment_spark.session import barrier
 
+    plans = []
+
+    def recording(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return barrier(df, *args, **kwargs)
+
+    monkeypatch.setattr(select, "barrier", recording)
     target = spark.createDataFrame([(1, 1.0)], "k long, x double")
     changes = spark.createDataFrame(
         [(1, 2.0, 10, "U")], "k long, x double, seq long, op string"
     )
-    plan = (
-        apply_cdc(target, changes, "k", barrier=False)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
+    select.apply_cdc(target, changes, "k")
+    (plan,) = plans
     assert "max_by" in plan
     assert "row_number" not in plan
 

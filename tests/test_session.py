@@ -1,7 +1,10 @@
 """``local_frame``: the one home for DataFrames built from driver-side
 rows. It must read back exactly what ``createDataFrame(<python list>)``
 reads back, while planning as a ``LocalTableScan`` that runs no Python
-worker (no ``PythonRDD`` in the lineage)."""
+worker (no ``PythonRDD`` in the lineage).
+
+``barrier``: the one home for checkpoints. Its call-time job counts
+are pinned here at ``local[4]``."""
 
 from __future__ import annotations
 
@@ -9,8 +12,10 @@ import ast
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
+from test_loop import _jobs
 
-from bigdata_quality_assessment_spark.session import local_frame
+from bigdata_quality_assessment_spark.session import barrier, local_frame
 
 PKG = Path(__file__).resolve().parent.parent / "bigdata_quality_assessment_spark"
 
@@ -19,29 +24,81 @@ def _lineage(df) -> str:
     return df._jdf.queryExecution().toRdd().toDebugString()
 
 
-def test_no_create_dataframe_outside_local_frame():
-    """Every ``createDataFrame(`` call in the package sits inside
-    ``session.local_frame``: a pickled-rows frame runs a ``PythonRunner``
-    job per read and forks a second Python worker pool."""
+@pytest.mark.parametrize(
+    "call, home",
+    [
+        # a pickled-rows frame runs a ``PythonRunner`` job per read and
+        # forks a second Python worker pool
+        ("createDataFrame", "local_frame"),
+        # one place states and enforces the call-time cost of a barrier
+        ("localCheckpoint", "barrier"),
+    ],
+    ids=["createDataFrame", "localCheckpoint"],
+)
+def test_one_home(call, home):
+    """Every ``.<call>(`` in the package sits inside ``session.<home>``."""
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         tree = ast.parse(path.read_text(), filename=str(path))
         allowed: set[int] = set()
         if path.name == "session.py":
             for node in ast.walk(tree):
-                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                if isinstance(node, ast.FunctionDef) and node.name == home:
                     allowed |= {id(n) for n in ast.walk(node)}
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "createDataFrame"
+                and node.func.attr == call
                 and id(node) not in allowed
             ):
                 offenders.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
-    assert not offenders, "route these through session.local_frame: " + ", ".join(
+    assert not offenders, f"route these through session.{home}: " + ", ".join(
         offenders
     )
+
+
+def _narrow(spark):
+    return spark.range(200).select("id", (F.col("id") % 7).alias("k"))
+
+
+def test_barrier_eager_runs_one_job(spark):
+    out = {}
+    assert _jobs(spark, lambda: out.update(df=barrier(_narrow(spark)))) == 1
+    assert "LogicalRDD" in out["df"]._jdf.queryExecution().analyzed().toString()
+    assert out["df"].count() == 200
+
+
+def test_barrier_lazy_over_narrow_plan_runs_no_job(spark):
+    out = {}
+    assert _jobs(spark, lambda: out.update(df=barrier(_narrow(spark), lazy=True))) == 0
+    assert out["df"].count() == 200
+
+
+def test_barrier_lazy_over_shuffle_runs_map_stage_at_call_time(spark):
+    """Documented, not wanted: AQE plans the frame when the checkpoint
+    RDD is built, and that runs the ``groupBy``'s map stage."""
+    grouped = _narrow(spark).groupBy("k").count()
+    out = {}
+    assert _jobs(spark, lambda: out.update(df=barrier(grouped, lazy=True))) == 1
+    assert sorted(r["count"] for r in out["df"].collect()) == [28] * 3 + [29] * 4
+
+
+def test_barrier_observed_metrics_ride_the_barrier_job(spark):
+    df = _narrow(spark)
+    metrics = (
+        F.count(F.lit(1)).alias("n"), F.sum("k").alias("s"), F.max("id").alias("m")
+    )
+    out = {}
+    assert _jobs(spark, lambda: out.update(r=barrier(df, *metrics))) == 1
+    frame, values = out["r"]
+    assert values == df.agg(*metrics).first().asDict()
+    assert frame.count() == 200
+
+
+def test_barrier_lazy_with_metrics_raises(spark):
+    with pytest.raises(ValueError):
+        barrier(_narrow(spark), F.count(F.lit(1)).alias("n"), lazy=True)
 
 
 _ROWS = {
