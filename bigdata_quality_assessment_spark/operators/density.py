@@ -150,17 +150,21 @@ def grid_nint(df: DataFrame, f_col: str, axis_cols: list[str]) -> DataFrame:
     return cur
 
 
+def _scott(n: Column, sd: Column) -> Column:
+    """Scott's rule ``n^(-1/5)·σ`` over a row count and a sample std,
+    with ``custom_KDE``'s floor: any ``bw < 1e-8`` (including NULL/NaN
+    fallout) becomes 1.0 (core/utils.py:108-119)."""
+    raw = F.pow(n.cast("double"), F.lit(-0.2)) * sd
+    return F.when(F.coalesce(raw, F.lit(0.0)) >= 1e-8, raw).otherwise(F.lit(1.0))
+
+
 def scott_bandwidth(df: DataFrame, col: str) -> DataFrame:
-    """A11 helper: Scott's-rule bandwidth ``n^(-1/5)·σ`` with the
-    reference's floor/fallback to 1.0 when the data is degenerate
-    (core/utils.py:108-119). ``scipy.stats.gaussian_kde`` computes the
-    data covariance with ``bias=False`` (ddof=1) ⇒ SAMPLE std here,
-    and ``custom_KDE`` replaces any ``bw < 1e-8`` (including NaN/None
-    fallout) with 1.0. One-row frame ``(bw DOUBLE)``."""
-    raw = F.pow(F.count(F.lit(1)).cast("double"), F.lit(-0.2)) * F.stddev_samp(col)
-    return df.agg(
-        F.when(F.coalesce(raw, F.lit(0.0)) >= 1e-8, raw).otherwise(F.lit(1.0)).alias("bw")
-    )
+    """A11 helper: Scott's-rule bandwidth with the reference's
+    floor/fallback to 1.0 when the data is degenerate (``_scott``).
+    ``scipy.stats.gaussian_kde`` computes the data covariance with
+    ``bias=False`` (ddof=1) ⇒ SAMPLE std here, over count(*) rows.
+    One-row frame ``(bw DOUBLE)``."""
+    return df.agg(_scott(F.count(F.lit(1)), F.stddev_samp(col)).alias("bw"))
 
 
 def kde_1d(
@@ -174,158 +178,34 @@ def kde_1d(
     weight_col: str | None = None,
     bounds: DataFrame | None = None,
 ) -> DataFrame:
-    """A11: Gaussian-kernel KDE on a uniform grid via exact linear
-    binning + grid-space convolution — the relational re-expression of
-    KDEpy's FFTKDE (linear binning + FFT convolution,
-    core/utils.py:105-120).
-
-    Phase 1 (O(data), distributed): each point at fractional grid
-    position ``p`` contributes weight ``(1−frac)`` to node ``⌊p⌋`` and
-    ``frac`` to node ``⌊p⌋+1``; a groupBy over ≤ngrid keys sums them.
-    Phase 2 (O(ngrid²), broadcast): convolve the binned weights with
-    the Gaussian kernel evaluated at node distances. ngrid ≤ 4096 by
-    contract, so phase 2 is a tiny-frame self-join regardless of the
-    input size.
-
-    Grid bounds default to the data range padded by ``pad`` (1%, as
-    the reference's evaluation grid), derived LAZILY via a broadcast
-    one-row aggregate — no driver collect, no eager job; the whole
-    composite (e.g. A13's two KDEs + interp + trapz) stays one Spark
-    job. Returns ``density(node INT, grid_x DOUBLE, pdf DOUBLE)`` with
+    """A11: Gaussian-kernel KDE of one column on a uniform ``ngrid``
+    grid — ``kde_1d_multi`` with a single spec (linear binning + grid
+    convolution, the relational FFTKDE of core/utils.py:105-120).
+    Returns ``density(node INT, grid_x DOUBLE, pdf DOUBLE)`` with
     ∫pdf dx ≈ 1.
 
-    ``bw`` may be a one-row DataFrame with column ``bw`` (e.g. from
-    ``scott_bandwidth``) — it rides the broadcast bounds frame, so
-    auto-bandwidth stays lazy (the reference's default path,
-    core/utils.py:108-119) — or the string ``"scott"`` as shorthand
-    for ``scott_bandwidth(df, col)``. ``bounds`` may be a one-row frame with
-    columns ``lo``/``hi`` to share an externally-derived evaluation
-    range (A13 rebuilds it per iteration from the joint pred+truth
-    data range, BigDataQualityAssessment_ActiveSampling.py:201-205).
+    ``bw``: float, ``"scott"`` (``scott_bandwidth``'s rule, the
+    reference's default) or a one-row ``bw`` frame. Grid bounds: a
+    one-row ``lo``/``hi`` ``bounds`` frame (A13 shares the joint
+    pred+truth range this way,
+    BigDataQualityAssessment_ActiveSampling.py:201-205) wins over
+    ``lo``/``hi`` floats, which fold in as literals; with neither, the
+    data range padded ``pad`` per side. ``weight_col`` weights each
+    row; rows with a NULL value or weight bin nothing, so an all-NULL
+    value or weight column yields 0 rows, like an empty input (an
+    all-NULL ``weight_col`` gave ``ngrid`` rows of NULL ``pdf`` before
+    ``kde_1d`` went through ``kde_1d_multi``).
+
+    What runs at call time and when the grid is computed: see
+    ``kde_1d_multi`` (one lazy barrier on the binned grid) and
+    ``session.barrier``.
     """
-    spark = df.sparkSession
-
-    if isinstance(bw, str):
-        if bw != "scott":
-            raise ValueError(f"bw must be a float, DataFrame, or 'scott'; got {bw!r}")
-        bw = scott_bandwidth(df, col)
-
-    # per-name column sources: resolved off the broadcast bounds frame
-    # by default; when lo/hi AND bw are plain floats they fold in as
-    # literals and the one-row frame + its broadcast cross-join drop
-    # out of the plan entirely (round-15 — same rule as kde_1d_multi's
-    # tuple bounds; the arithmetic is the identical IEEE double op
-    # sequence, so grids are bit-identical)
-    ref: dict[str, Column] = {}
-
-    def _ref(name: str) -> Column:
-        return ref.get(name, F.col(name))
-
+    spec = {"tag": "kde", "col": col, "bw": bw, "weight_col": weight_col}
     if bounds is not None:
-        bounds = bounds.select(
-            F.col("lo").cast("double").alias("__lo"),
-            F.col("hi").cast("double").alias("__hi"),
-        )
-    elif lo is None or hi is None:
-        raw = df.agg(F.min(col).cast("double").alias("__mn"), F.max(col).cast("double").alias("__mx"))
-        span = F.when(F.col("__mx") - F.col("__mn") > 0, F.col("__mx") - F.col("__mn")).otherwise(
-            F.lit(1.0)
-        )
-        bounds = raw.select(
-            (F.col("__mn") - pad * span).alias("__lo"),
-            (F.col("__mx") + pad * span).alias("__hi"),
-        )
-    else:
-        bounds = None
-        ref["__lo"] = F.lit(float(lo))
-        ref["__hi"] = F.lit(float(hi))
-        ref["__dx"] = F.lit((float(hi) - float(lo)) / (ngrid - 1))
-    if bounds is not None:
-        bounds = bounds.withColumn(
-            "__dx", (F.col("__hi") - F.col("__lo")) / (ngrid - 1)
-        )
-    if isinstance(bw, DataFrame):
-        ebw = F.broadcast(bw.select(F.col("bw").cast("double").alias("__bw")))
-        bounds = ebw if bounds is None else bounds.crossJoin(ebw)
-    else:
-        ref["__bw"] = F.lit(float(bw))
-
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    pos = (F.col(col) - _ref("__lo")) / _ref("__dx")
-    node0 = F.floor(pos).cast("int")
-    frac = pos - F.floor(pos)
-    base = df.filter(F.col(col).isNotNull())
-    if bounds is not None:
-        base = base.crossJoin(F.broadcast(bounds))
-    # Two (node, weight) contributions per row; clamp to the grid so
-    # boundary points (pos == ngrid-1) land entirely on the last node.
-    contrib = (
-        base
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(node0.alias("node"), (w * (1.0 - frac)).alias("bw_")),
-                    F.struct((node0 + 1).alias("node"), (w * frac).alias("bw_")),
-                )
-            ).alias("c"),
-            _ref("__lo").alias("__lo"),
-            _ref("__dx").alias("__dx"),
-            _ref("__bw").alias("__bw"),
-        )
-        .select(
-            F.least(F.greatest(F.col("c.node"), F.lit(0)), F.lit(ngrid - 1)).alias("node"),
-            F.col("c.bw_").alias("w"),
-            "__lo",
-            "__dx",
-            "__bw",
-        )
-    )
-    # __lo/__dx/__bw are constant across rows; F.first rides them
-    # through the groupBy so the grid phase needs no second bounds scan.
-    binned = contrib.groupBy("node").agg(
-        F.sum("w").alias("w"),
-        F.first("__lo").alias("__lo"),
-        F.first("__dx").alias("__dx"),
-        F.first("__bw").alias("__bw"),
-    )
-
-    grid = spark.range(ngrid).select(F.col("id").cast("int").alias("eval_node"))
-    norm_const = 1.0 / (F.col("__bw") * math.sqrt(2.0 * math.pi))
-    kernel = F.exp(
-        -0.5
-        * F.pow((F.col("eval_node") - F.col("node")) * F.col("__dx") / F.col("__bw"), 2)
-    ) * norm_const
-    # Every eval node pairs with every binned node (tiny broadcast
-    # cross join), so sum(w) per eval node IS the global weight total —
-    # normalization rides along without an extra pass.
-    pdf = (
-        grid.join(F.broadcast(binned), F.lit(True))
-        .groupBy("eval_node")
-        .agg(
-            F.sum(kernel * F.col("w")).alias("kw_sum"),
-            F.sum("w").alias("w_tot"),
-            F.first("__lo").alias("__lo"),
-            F.first("__dx").alias("__dx"),
-        )
-        .select(
-            F.col("eval_node").alias("node"),
-            (F.col("__lo") + F.col("eval_node") * F.col("__dx")).alias("grid_x"),
-            (F.col("kw_sum") / F.col("w_tot")).alias("pdf"),
-        )
-    )
-    # LAZY plan barrier on the ≤ngrid-row result. Without it every
-    # downstream reference re-executes the WHOLE subtree including the
-    # O(data) binning scan — ``interp_uniform_grid`` alone references
-    # its grid three times (two bracket joins + the bounds agg), and
-    # measured plans showed 3× the binning shuffle and 7× the source
-    # scan in one job with ReuseExchange finding nothing (the broadcast
-    # subtrees differ above the shared exchange). The checkpoint makes
-    # single-execution physical: the first action stores the ≤ngrid
-    # rows and all consumers share them. It is not job-free: the
-    # binning and convolution shuffles' map stages run at call time
-    # (see ``session.barrier``). At 100 TB this is the difference
-    # between one pool scan per KDE and one per KDE *reference*.
-    return barrier(pdf, lazy=True)
+        spec["bounds"] = bounds
+    elif lo is not None and hi is not None:
+        spec["bounds"] = (lo, hi)
+    return kde_1d_multi(df, [spec], ngrid=ngrid, pad=pad)["kde"]
 
 
 def kde_1d_pair(
@@ -431,10 +311,12 @@ def kde_1d_multi(
     ``{tag: density(node INT, grid_x DOUBLE, pdf DOUBLE)}``.
     """
     spark = df.sparkSession
-    # The ONE lazy barrier (see kde_1d_pair's): keeps the per-tag
-    # filters from pushing below the aggregate into N source scans,
-    # and is the only physical-plan compilation the whole N-density
-    # family pays.
+    # The KDE family's one barrier, lazy (call-time cost: see
+    # session.barrier). It keeps the per-tag filters from pushing below
+    # the aggregate into N source scans, and it is the only
+    # physical-plan compilation the N densities pay. Every grid reads
+    # the stored ≤ngrid rows per tag, so a reference to a grid re-runs
+    # only its ≤ngrid² convolution, never the O(data) binning pass.
     binned = barrier(_kde_binned(df, specs, ngrid, pad), lazy=True)
 
     grid = spark.range(ngrid).select(F.col("id").cast("int").alias("eval_node"))
@@ -486,8 +368,6 @@ def _kde_binned(
         w = s.get("where")
         return F.when(w, F.col(c)) if w is not None else F.col(c)
 
-    internal = [s for s in specs if s.get("bounds") is None]
-    scott = [s for s in specs if isinstance(s.get("bw"), str)]
     # per-tag column sources: names resolved off the broadcast frame
     # ``b`` by default; literal-bounds tags (and float bandwidths)
     # resolve to F.lit instead, so a fully-literal spec list never
@@ -497,79 +377,52 @@ def _kde_binned(
 
     def _ref(name: str) -> Column:
         return ref.get(name, F.col(name))
-    for s in scott:
-        if s["bw"] != "scott":
-            raise ValueError(
-                f"bw must be a float, DataFrame, or 'scott'; got {s['bw']!r}"
-            )
-    b: DataFrame | None = None
-    if internal or scott:
-        agg_exprs = []
-        for s in internal:
-            t = s["tag"]
+
+    # every derived range and Scott bandwidth is one column of ONE
+    # one-row aggregate over ``df``; external frames cross-join onto it
+    aggs: list[Column] = []
+    frames: list[DataFrame] = []
+    for s in specs:
+        t, bounds, bw = s["tag"], s.get("bounds"), s["bw"]
+        if bounds is None:
             rng = s.get("range_cols", [s["col"]])
             mins = [F.min(_masked(s, c)).cast("double") for c in rng]
             maxs = [F.max(_masked(s, c)).cast("double") for c in rng]
-            agg_exprs.append(
-                (mins[0] if len(mins) == 1 else F.least(*mins)).alias(f"__mn_{t}")
-            )
-            agg_exprs.append(
-                (maxs[0] if len(maxs) == 1 else F.greatest(*maxs)).alias(f"__mx_{t}")
-            )
-        for s in scott:
-            t = s["tag"]
-            # count(*) semantics over the predicate-passing rows (NOT
-            # non-null count) — scott_bandwidth and the SQL oracle both
-            # use total row count, and the two differ on null-bearing
-            # columns
-            w = s.get("where")
-            n_expr = F.count(F.when(w, 1)) if w is not None else F.count(F.lit(1))
-            agg_exprs.append(n_expr.alias(f"__n_{t}"))
-            agg_exprs.append(F.stddev_samp(_masked(s, s["col"])).alias(f"__sd_{t}"))
-        sel = []
-        for s in internal:
-            t = s["tag"]
-            span = F.when(
-                F.col(f"__mx_{t}") - F.col(f"__mn_{t}") > 0,
-                F.col(f"__mx_{t}") - F.col(f"__mn_{t}"),
-            ).otherwise(F.lit(1.0))
-            sel.append((F.col(f"__mn_{t}") - pad * span).alias(f"__lo_{t}"))
-            sel.append((F.col(f"__mx_{t}") + pad * span).alias(f"__hi_{t}"))
-        for s in scott:
-            t = s["tag"]
-            raw = F.pow(F.col(f"__n_{t}").cast("double"), F.lit(-0.2)) * F.col(
-                f"__sd_{t}"
-            )
-            sel.append(
-                F.when(F.coalesce(raw, F.lit(0.0)) >= 1e-8, raw)
-                .otherwise(F.lit(1.0))
-                .alias(f"__bw_{t}")
-            )
-        b = df.agg(*agg_exprs).select(*sel)
-    for s in specs:
-        if s.get("bounds") is None:
-            continue
-        t = s["tag"]
-        if isinstance(s["bounds"], DataFrame):
-            eb = s["bounds"].select(
+            mn = mins[0] if len(mins) == 1 else F.least(*mins)
+            mx = maxs[0] if len(maxs) == 1 else F.greatest(*maxs)
+            span = F.when(mx - mn > 0, mx - mn).otherwise(F.lit(1.0))
+            aggs.append((mn - pad * span).alias(f"__lo_{t}"))
+            aggs.append((mx + pad * span).alias(f"__hi_{t}"))
+        elif isinstance(bounds, DataFrame):
+            frames.append(bounds.select(
                 F.col("lo").cast("double").alias(f"__lo_{t}"),
                 F.col("hi").cast("double").alias(f"__hi_{t}"),
-            )
-            b = eb if b is None else b.crossJoin(F.broadcast(eb))
+            ))
         else:
-            lo, hi = s["bounds"]
+            lo, hi = bounds
             ref[f"__lo_{t}"] = F.lit(float(lo))
             ref[f"__hi_{t}"] = F.lit(float(hi))
             # same IEEE double arithmetic the Catalyst dx expression
             # performs — bit-identical grid spacing
             ref[f"__dx_{t}"] = F.lit((float(hi) - float(lo)) / (ngrid - 1))
-    for s in specs:
-        t = s["tag"]
-        if isinstance(s["bw"], DataFrame):
-            ebw = s["bw"].select(F.col("bw").cast("double").alias(f"__bw_{t}"))
-            b = ebw if b is None else b.crossJoin(F.broadcast(ebw))
-        elif not isinstance(s["bw"], str):
-            ref[f"__bw_{t}"] = F.lit(float(s["bw"]))
+        if isinstance(bw, DataFrame):
+            frames.append(bw.select(F.col("bw").cast("double").alias(f"__bw_{t}")))
+        elif isinstance(bw, str):
+            if bw != "scott":
+                raise ValueError(f"bw must be a float, DataFrame, or 'scott'; got {bw!r}")
+            # count(*) semantics over the predicate-passing rows (NOT
+            # non-null count) — scott_bandwidth and the SQL oracle both
+            # use total row count, and the two differ on null-bearing
+            # columns
+            w = s.get("where")
+            n = F.count(F.when(w, 1)) if w is not None else F.count(F.lit(1))
+            sd = F.stddev_samp(_masked(s, s["col"]))
+            aggs.append(_scott(n, sd).alias(f"__bw_{t}"))
+        else:
+            ref[f"__bw_{t}"] = F.lit(float(bw))
+    b: DataFrame | None = df.agg(*aggs) if aggs else None
+    for f in frames:
+        b = f if b is None else b.crossJoin(F.broadcast(f))
     for t in tags:
         if f"__dx_{t}" not in ref:
             b = b.withColumn(

@@ -113,9 +113,26 @@ def _numpy_linear_binned_kde(values, bw, ngrid, lo, hi, weights=None):
     return grid, pdf
 
 
-def test_kde_matches_linear_binned_reference(vdf, values):
-    rows = kde_1d(vdf, "y", bw=0.4, ngrid=64, lo=-3.0, hi=6.0).orderBy("node").collect()
-    grid, pdf = _numpy_linear_binned_kde(values, 0.4, 64, -3.0, 6.0)
+@pytest.mark.parametrize("form", ["lohi", "bounds_frame", "padded", "bw_frame"])
+def test_kde_matches_linear_binned_reference(spark, vdf, values, form):
+    """One case per way of giving the grid bounds (lo/hi floats, a
+    one-row frame, the data range padded 1% per side) and the
+    bandwidth (a float, a one-row frame)."""
+    lo, hi, bw = -3.0, 6.0, 0.4
+    kw: dict = {"bw": bw, "lo": lo, "hi": hi}
+    if form == "bounds_frame":
+        kw = {"bw": bw, "bounds": spark.range(1).select(
+            F.lit(lo).alias("lo"), F.lit(hi).alias("hi")
+        )}
+    elif form == "padded":
+        span = values.max() - values.min()
+        lo, hi = values.min() - 0.01 * span, values.max() + 0.01 * span
+        kw = {"bw": bw}
+    elif form == "bw_frame":
+        bw = len(values) ** (-1 / 5) * values.std(ddof=1)
+        kw["bw"] = scott_bandwidth(vdf, "y")
+    rows = kde_1d(vdf, "y", ngrid=64, **kw).orderBy("node").collect()
+    grid, pdf = _numpy_linear_binned_kde(values, bw, 64, lo, hi)
     assert np.allclose([r["grid_x"] for r in rows], grid, atol=1e-12)
     assert np.allclose([r["pdf"] for r in rows], pdf, atol=1e-9)
 
@@ -238,9 +255,9 @@ def test_kde_pair_single_binning_pass(spark, vdf):
 
 
 def test_kde_interp_composite_single_scan(spark, vdf):
-    """kde_1d's output barrier: interp references its grid three times
-    (two bracket joins + bounds agg); the composite plan must not
-    re-execute the pool binning per reference."""
+    """kde_1d's binned barrier: interp references its grid once (one
+    packed aggregate); the composite plan must not re-execute the pool
+    binning."""
     out = interp_uniform_grid(
         vdf, kde_1d(vdf, "y", bw=0.4, ngrid=64, lo=-3.0, hi=6.0), q_col="y", out_col="p"
     )

@@ -91,6 +91,12 @@ def test_operators_survive_empty_frames(spark):
     assert W.minmax_scale(empty_ev, "value").count() == 0
     assert A.time_rollup(empty_ev, "ts", "value").count() == 0
     assert kde_1d(empty_ev, "value", bw=0.5, ngrid=8).count() == 0
+    # all-NULL weights or values bin nothing: 0 rows, as for no input
+    null_ev = spark.range(5).select(
+        F.col("id").cast("double").alias("value"), F.lit(None).cast("double").alias("w")
+    )
+    assert kde_1d(null_ev, "value", bw=0.5, ngrid=8, weight_col="w").count() == 0
+    assert kde_1d(null_ev, "w", bw=0.5, ngrid=8).count() == 0
     assert trapz(
         empty_ev.select(F.col("value").alias("x"), F.col("value").alias("f")), "x", "f"
     ).count() == 1  # one NULL-integral row, not an error
